@@ -330,8 +330,8 @@ object Main {
         driftCols = args.driftCols)
       driftReport(spark, args)
       val hconf = spark.sparkContext.hadoopConfiguration
-      val commits = CommitLog.completed(args.out, hconf)
-      val failedDocs = CommitLog.failedDocsTotal(args.out, hconf)
+      val commits = CommitLog.read(args.out, hconf)
+      val failedDocs = commits.values.map(_.failedDocs).sum
       if (args.json && failedDocs > 0) {
         // emit_validation_errors_json shape (ys.rs:54-68): one object per
         // violation row, parquet coordinates instead of YAML markers
@@ -389,10 +389,11 @@ object Main {
       // failure rates in the commit log — "which partitions are not like
       // the others" from commit bytes only (no corpus rescan)
       if (args.anomalyParts) {
-        val pm = CommitLog.partMetrics(args.out, hconf).toSeq.sortBy(_._1)
+        val pm = commits.values.toSeq.sortBy(_.part)
         import spark.implicits._
-        val series = pm.map { case (p, (d, f)) =>
-          (p, d, f, if (d == 0) 0.0 else f.toDouble / d) }
+        val series = pm.map { c =>
+          (c.part, c.docs, c.failedDocs,
+            if (c.docs == 0) 0.0 else c.failedDocs.toDouble / c.docs) }
           .toDF("part", "docs", "failed_docs", "rate")
           .withColumn("_g", lit("parts"))
         val flagged = operators.Anomaly.robustZ(series, Seq("_g"), "rate")

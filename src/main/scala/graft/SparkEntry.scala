@@ -872,7 +872,7 @@ object SparkEntry {
           !new java.io.File(idx + "/sigs/_SUCCESS").exists())
         Dedup.minHashWriteIndex(base, "doc_id", "text", idx,
           k = 3, numHashes = 32, bands = 32)
-      Dedup.incrementalNearDups(fresh, base, idx, "doc_id", "text",
+      Dedup.incrementalNearDups(fresh, idx, "doc_id", "text",
           k = 3, numHashes = 32, bands = 32, threshold = 0.5)
         .select(col("id_a"), col("id_b"), round(col("jaccard"), 4).as("jaccard"))
         .orderBy("id_a", "id_b")

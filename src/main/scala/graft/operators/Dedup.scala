@@ -485,18 +485,17 @@ object Dedup {
       .filter(col("containment") >= minContainment)
   }
 
-  /** Persist the LSH band-bucket index of a corpus for INCREMENTAL dedup:
-    * (id, band_idx, band_hash) rows, band-partitioned on disk. A daily
-    * increment is then deduplicated against the full history by hashing
-    * only the NEW docs and joining their bands against this index — the
-    * historical corpus is never re-read, never re-shingled. Oversized
+  /** Persist the incremental-dedup index of a corpus under `dir`, as two
+    * plain-parquet halves written from one corpus scan:
+    *  - `bands/`: (id, band_idx, band_hash) LSH band rows, the probe side;
+    *  - `sigs/`: (id, sh) distinct shingle-hash arrays, the verify side.
+    * A daily increment is then deduplicated against the full history by
+    * hashing only the NEW docs and joining their bands against `bands/`;
+    * the historical corpus is never re-read, never re-shingled. Oversized
     * buckets (> maxBucket members — boilerplate) are dropped at BUILD
     * time, same policy as the batch path, so every later probe pays zero
-    * bucket-size accounting.
-    *
-    * One corpus scan; `repartition(band_idx)` gives one writer per band
-    * directory (no small-file explosion — the same fix the ANN index
-    * needed, Similarity.lshWriteIndex).
+    * bucket-size accounting. Indexes written in the older band-partitioned
+    * layout (no `sigs/`) cannot be probed; rebuild them.
     */
   def minHashWriteIndex(df: DataFrame, idCol: String, textCol: String,
       dir: String, k: Int = 3, numHashes: Int = 32, bands: Int = 32,
@@ -526,15 +525,18 @@ object Dedup {
     * (id_a = new id, id_b = base id, jaccard), exact-verified at >=
     * threshold. Candidates come from joining the new batch's bands against
     * the persisted index (shuffle is band-row-sized on the new side — the
-    * small side — and candidate-mass-bounded); verification shingles only
-    * the docs that appear in a candidate pair (`ngramJaccard` over the
-    * union of both text sources). New-batch ids must be disjoint from base
-    * ids. With bands == numHashes the output equals the brute-force
-    * new-x-base answer at the usual (1-j)^numHashes miss bound, which is
-    * what makes the incremental path oracle-checkable.
+    * small side — and candidate-mass-bounded); verification intersects the
+    * new docs' shingle hashes with the index's persisted `sigs/`. The index
+    * is authoritative for the base side: the base corpus is never read
+    * here, so an index built from an older corpus yields that corpus's
+    * pairs — rebuild it with [[minHashWriteIndex]] when the base changes.
+    * New-batch ids must be disjoint from base ids. With bands == numHashes
+    * the output equals the brute-force new-x-base answer at the usual
+    * (1-j)^numHashes miss bound, which is what makes the incremental path
+    * oracle-checkable.
     */
-  def incrementalNearDups(newDocs: DataFrame, baseDocs: DataFrame,
-      indexDir: String, idCol: String, textCol: String, k: Int = 3,
+  def incrementalNearDups(newDocs: DataFrame, indexDir: String,
+      idCol: String, textCol: String, k: Int = 3,
       numHashes: Int = 32, bands: Int = 32, threshold: Double = 0.5,
       maxBucket: Int = 1000): DataFrame = {
     val idx = newDocs.sparkSession.read.parquet(s"$indexDir/bands")
@@ -554,8 +556,7 @@ object Dedup {
     // base-side verify reads the PERSISTED sigs — historical text is never
     // re-read or re-shingled on the probe path (pre-r6, ngramJaccard
     // re-scanned and re-shingled the base corpus' candidate docs, twice —
-    // once per broadcast-build side). `baseDocs` stays in the signature as
-    // the documented source the index was built from.
+    // once per broadcast-build side)
     val shBase = newDocs.sparkSession.read.parquet(s"$indexDir/sigs")
     cands
       .join(shNew.select(col("id").as("id_a"), col("sh").as("sh_a")), Seq("id_a"))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
@@ -101,11 +101,5 @@ object Diff {
         case _ => Nil
       }
     walk(a, b, "").sortBy(_._1)
-  }
-
-  /** [[schemaDiff]] as a 1-job-free DataFrame (for report sinks). */
-  def schemaDiffDf(spark: SparkSession, a: StructType, b: StructType): DataFrame = {
-    import spark.implicits._
-    schemaDiff(a, b).toDF("path", "change")
   }
 }

@@ -311,15 +311,6 @@ object Drift {
     Seq(ksStat).toDF("ks")
   }
 
-  /** Per-`part` quantile summaries of `c` — the checkpointable per-partition
-    * sketch form (probs × parts in one pass).
-    */
-  def partitionQuantiles(df: DataFrame, c: String, probs: Seq[Double],
-      partCol: String = "part", accuracy: Int = 10000): DataFrame =
-    df.groupBy(col(partCol))
-      .agg(percentile_approx(col(c).cast("double"), typedLit(probs), lit(accuracy))
-        .as("quantiles"), count(lit(1)).as("rows"))
-
   /** The SCALE form of the fixed-grid KS: instead of `gridSize`
     * conditional sums evaluated per row (O(grid) per row — the two-sided
     * form's per-row cost), each row is assigned its grid CELL in O(1)

@@ -277,45 +277,6 @@ object Layout {
         max(col("snapshot_seq")).cast("long").as("snapshot_seq"))
   }
 
-  /** FS-level vacuum report for a [[ResumableValidate]] output dir: every
-    * `violations_batch_X/part=N` data dir, flagged `keep` iff the commit
-    * log's CURRENT commit for part N names batch X (re-running a part
-    * lands it in a NEW batch dir and re-points its commit, leaving the old
-    * dir as dead bytes readers already skip — this report is the cleanup
-    * planner for them). Commit JSONs themselves are always `keep`: one
-    * latest-wins commit per part IS the retention policy of the log.
-    * Executing the plan (deleting `delete` rows) never changes what
-    * [[ResumableValidate.violations]] reads or how a run resumes — the
-    * spec asserts both. Driver-side listing is batches × parts metadata.
-    */
-  def vacuumReport(spark: org.apache.spark.sql.SparkSession,
-      outDir: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val conf = spark.sparkContext.hadoopConfiguration
-    val base = new Path(outDir)
-    val fs = base.getFileSystem(conf)
-    val live: Map[Int, String] =
-      graft.sources.CommitLog.committedBatches(outDir, conf)
-    val rows = if (!fs.exists(base)) Seq.empty else
-      fs.listStatus(base).toSeq
-        .filter(st => st.isDirectory &&
-          st.getPath.getName.startsWith("violations_batch_"))
-        .flatMap { b =>
-          fs.listStatus(b.getPath).toSeq
-            .filter(st => st.isDirectory && st.getPath.getName.startsWith("part="))
-            .map { pd =>
-              val part = pd.getPath.getName.stripPrefix("part=").toInt
-              val bytes = fs.getContentSummary(pd.getPath).getLength
-              val referenced = live.get(part).contains(b.getPath.getName)
-              (b.getPath.getName, part, bytes,
-                if (referenced) "keep" else "delete")
-            }
-        }
-    import spark.implicits._
-    rows.toDF("batch", "part", "bytes", "action")
-      .orderBy("batch", "part")
-  }
-
   /** REAL-file parquet footer audit — the metadata leg of table
     * maintenance run against actual parquet bytes, not a synthetic
     * manifest ([[partitionHealth]]'s input): per file, the row-group

@@ -1,7 +1,7 @@
 package graft.operators
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.rules.Rule
 import graft.sources.CommitLog
@@ -35,9 +35,6 @@ import graft.sources.CommitLog
   * the checkpoint protocol, not a parallelism limit — each per-part job
   * still fans out across all executors, and `partsPerBatch` groups many
   * table partitions into one job (one commit per part is still written).
-  * The single-file-per-part write is for byte-reproducibility of goldens;
-  * at 100 TB you'd raise files-per-part and trade away byte-identity for
-  * write parallelism while keeping row-level identity.
   */
 object ResumableValidate {
 
@@ -78,12 +75,18 @@ object ResumableValidate {
     * invariant, checkpointing per part. `failAfterParts` kills the run after
     * N parts (test hook simulating a mid-run crash).
     *
-    * `filesPerPart` (default 1 = byte-identical golden output: one sorted
-    * file per part) is the scale knob: at 100 TB raise it so each part
-    * writes with real parallelism — rows are assigned to files by a
-    * deterministic doc_id hash and each file stays internally sorted, so
-    * output remains row-identical and file-set-deterministic, just not
-    * single-file.
+    * Each batch of up to `partsPerBatch` parts is ONE Spark action: the
+    * violation write. The per-part commit metrics (docs, failed docs,
+    * violation count) are a `Dataset.observe` on that write, so the slice
+    * is neither cached nor scanned a second time.
+    *
+    * `filesPerPart` sets the write's layout: a batch's rows are
+    * hash-partitioned on (`part`, `pmod(xxhash64(doc_id), filesPerPart)`),
+    * so each part is written as `filesPerPart` files, each sorted. With
+    * the default 1 a part's rows all land in one task and one file, so
+    * golden output is byte-identical; at 100 TB raise it for write
+    * parallelism: output stays row-identical and file-set-deterministic,
+    * just not single-file.
     *
     * `expectedParts`, when given, is the authoritative partition list (at
     * scale: the table manifest): expected parts with ZERO rows still get a
@@ -91,12 +94,12 @@ object ResumableValidate {
     * an empty document too, engine.rs:51-57) instead of silently vanishing
     * from the commit log.
     *
-    * `withSketches = true` additionally aggregates, per part and in the SAME
-    * pass as the verdict metrics, an HLL sketch of `doc_id` and a KLL sketch
-    * of `size(spans)`, persisting the bytes in the commit JSON — so
-    * cardinality and drift state resume incrementally with validation
-    * (merge with [[mergedDocIdSketch]] / [[mergedNSpansSketch]], no re-scan
-    * of committed parts).
+    * `withSketches = true` additionally observes, per part and on the same
+    * write as the metrics, an HLL sketch of `doc_id` and a KLL sketch of
+    * `size(spans)` (and `driftCols` add one KLL sketch each), persisting
+    * the bytes in the commit JSON — so cardinality and drift state resume
+    * incrementally with validation (merge with [[mergedDocIdEstimate]] /
+    * [[mergedNSpansSketch]], no re-scan of committed parts).
     */
   def run(spark: SparkSession, docs: DataFrame, rule: Rule, outDir: String,
       manifest: Seq[String] = Nil, failAfterParts: Int = Int.MaxValue,
@@ -143,6 +146,12 @@ object ResumableValidate {
     }
 
     val withV = compositeViolations(docs, rule, defs)
+    // commit sketch key -> the value it summarizes (HLL for the doc_id key,
+    // KLL for the rest)
+    val sketchIns: Seq[(String, Column)] =
+      (if (withSketches) Seq(HllDocIdKey -> col("doc_id").cast("string"),
+        KllNSpansKey -> size(col("spans")).cast("double")) else Nil) ++
+        driftCols.map(c => kllColKey(c) -> col(c).cast("double"))
 
     var executed = List.empty[Int]
     pending.grouped(partsPerBatch).foreach { batch =>
@@ -150,57 +159,55 @@ object ResumableValidate {
         val take = batch.take(failAfterParts - executed.size)
         val t0 = System.nanoTime()
         val batchName = s"violations_batch_${take.head}"
-        val slice = withV.filter(col("part").isin(take: _*)).persist()
-        val flat = slice
+        // one row per doc through the shuffle, so the commit metrics are
+        // observed after it, in the write's result tasks: Spark merges a
+        // result task's metrics once per partition, while a map task that
+        // is re-run (lost executor, speculation) would be counted again
+        val shuffled = withV.filter(col("part").isin(take: _*))
+          .select(Seq(col("part"), col("doc_id"), col("violations"), col("pass")) ++
+            sketchIns.zipWithIndex.map { case ((_, v), i) => v.as(s"_sk$i") }: _*)
+          .repartition(take.size * filesPerPart, col("part"),
+            pmod(xxhash64(col("doc_id")), lit(filesPerPart.toLong)))
+        val obs = new Observation()
+        val aggs = take.flatMap { p =>
+          val inPart = col("part") === p
+          Seq(count_if(inPart).as(s"docs_$p"),
+            count_if(inPart && !col("pass")).as(s"failed_$p"),
+            sum(when(inPart, size(col("violations")))).as(s"nv_$p")) ++
+            sketchIns.zipWithIndex.map { case ((key, _), i) =>
+              val v = when(inPart, col(s"_sk$i"))
+              (if (key == HllDocIdKey) hll_sketch_agg(v)
+              else graft.plans.Kll.sketchAgg(v)).as(s"sk${i}_$p")
+            }
+        }
+        shuffled.observe(obs, aggs.head, aggs.tail: _*)
           .select(col("part"), col("doc_id"), explode(col("violations")).as("v"))
           .select(col("part"), col("doc_id"), col("v.path").as("path"),
             col("v.rule").as("rule"), col("v.message").as("message"))
-        // filesPerPart=1: single sorted file per part (byte-identical
-        // goldens); >1: deterministic hash split for write parallelism
-        val viols = (if (filesPerPart <= 1) flat.coalesce(1)
-          else flat.repartition(take.size * filesPerPart, col("part"),
-            pmod(xxhash64(col("doc_id")), lit(filesPerPart.toLong))))
           .sortWithinPartitions("part", "doc_id", "path", "rule", "message")
-        viols.write.mode("overwrite").partitionBy("part")
+          .write.mode("overwrite").partitionBy("part")
           .parquet(s"$outDir/$batchName")
-        // per-part metrics (+ optional sketches) for the commit rows —
-        // one aggregation pass over the persisted slice
-        val baseAggs = Seq(
-          count(lit(1)).as("docs"),
-          sum(when(!col("pass"), 1L).otherwise(0L)).as("failed"),
-          sum(size(col("violations")).cast("long")).as("nv"))
-        val sketchAggs = (if (withSketches) Seq(
-          hll_sketch_agg(col("doc_id").cast("string")).as("hll"),
-          graft.plans.Kll.sketchAgg(size(col("spans")).cast("double")).as("kll"))
-        else Nil) ++ driftCols.map(c =>
-          graft.plans.Kll.sketchAgg(col(c).cast("double")).as(kllColKey(c)))
-        val aggs = baseAggs ++ sketchAggs
-        val metricRows = slice.groupBy(col("part"))
-          .agg(aggs.head, aggs.tail: _*).collect()
-        val metrics = metricRows.map { r =>
-          val sk = (if (withSketches) Map(
-            HllDocIdKey -> r.getAs[Array[Byte]]("hll"),
-            KllNSpansKey -> r.getAs[Array[Byte]]("kll"))
-          else Map.empty[String, Array[Byte]]) ++
-            driftCols.map(c => kllColKey(c) -> r.getAs[Array[Byte]](kllColKey(c)))
-          r.getInt(0) -> ((r.getAs[Long]("docs"), r.getAs[Long]("failed"),
-            r.getAs[Long]("nv"), sk))
-        }.toMap
+        val m = obs.get
         val wallMs = (System.nanoTime() - t0) / 1000000
-        take.foreach { p =>
-          val (d, f, v, sk) =
-            metrics.getOrElse(p, (0L, 0L, 0L, Map.empty[String, Array[Byte]]))
-          CommitLog.write(outDir, CommitLog.Commit(p, d, f, v, rh, snapshotId,
-            manifest, wallMs, batch = batchName, sketches = sk), conf)
+        // an expected part with no rows commits docs = 0 and no sketches
+        val commits = take.map { p =>
+          val docsP = m(s"docs_$p").asInstanceOf[Long]
+          if (docsP == 0L) CommitLog.Commit(p, 0L, 0L, 0L, rh, snapshotId,
+            manifest, wallMs, batch = batchName)
+          else CommitLog.Commit(p, docsP, m(s"failed_$p").asInstanceOf[Long],
+            m(s"nv_$p").asInstanceOf[Long], rh, snapshotId, manifest, wallMs,
+            batch = batchName,
+            sketches = sketchIns.zipWithIndex.map { case ((key, _), i) =>
+              key -> m(s"sk${i}_$p").asInstanceOf[Array[Byte]] }.toMap)
         }
-        slice.unpersist()
+        commits.foreach(CommitLog.write(outDir, _, conf))
         executed = executed ++ take
         if (executed.size >= failAfterParts) {
           throw new RuntimeException(s"Injected failure after ${executed.size} parts")
         }
         // --fail-fast: stop at the first failing batch; commits for the
         // batch are already written (checkpoint preserved, SURVEY.md §2.8)
-        if (failFast && metrics.values.exists(_._2 > 0)) {
+        if (failFast && commits.exists(_.failedDocs > 0)) {
           return RunReport(executed, donePartsList)
         }
       }
@@ -215,7 +222,7 @@ object ResumableValidate {
     */
   def violations(spark: SparkSession, outDir: String): DataFrame = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val allCommits = CommitLog.committedBatches(outDir, conf)
+    val allCommits = CommitLog.read(outDir, conf).map { case (p, c) => p -> c.batch }
     val byBatch = allCommits
       .filter(_._2.nonEmpty)
       .groupBy(_._2).view.mapValues(_.keys.toSeq).toMap
@@ -263,14 +270,13 @@ object ResumableValidate {
   private def sketchBytesAllParts(spark: SparkSession, outDir: String,
       key: String): Seq[Array[Byte]] = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val perPart = CommitLog.sketches(outDir, conf).toSeq.sortBy(_._1)
+    val perPart = CommitLog.read(outDir, conf).values.toSeq.sortBy(_.part)
     require(perPart.nonEmpty, s"no commits under $outDir")
     // a legitimately EMPTY part (docs = 0) commits no sketch rows and
     // contributes nothing to any merge — only non-empty parts must carry
     // the key
-    val docs = CommitLog.docCounts(outDir, conf)
     val missing = perPart.collect {
-      case (p, m) if !m.contains(key) && docs.getOrElse(p, 0L) > 0L => p
+      case c if !c.sketches.contains(key) && c.docs > 0L => c.part
     }
     require(missing.isEmpty,
       s"sketch $key missing from committed part(s) ${missing.take(8).mkString(",")}" +
@@ -278,7 +284,7 @@ object ResumableValidate {
         "validated without sketches; re-run them (delete their commits) with " +
         "--sketches/--drift-col before asking for a merged report")
     // flatMap, not apply: empty parts legitimately carry no bytes
-    val bytes = perPart.flatMap(_._2.get(key))
+    val bytes = perPart.flatMap(_.sketches.get(key))
     require(bytes.nonEmpty, s"no $key sketches committed under $outDir")
     bytes
   }

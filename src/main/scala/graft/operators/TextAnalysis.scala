@@ -35,10 +35,6 @@ object TextAnalysis {
     aggregate(tks, lit(0), (acc, t) =>
       acc + when(t.isin(markers(lang): _*), 1).otherwise(0))
 
-  /** Marker-hit count for one language. */
-  def markerHits(text: Column, lang: String): Column =
-    markerHitsTk(toks(text), lang)
-
   /** [[langId]] over a pre-tokenized array (see [[toks]]): the 4 per-language
     * folds share the one materialized array instead of re-tokenizing.
     */

@@ -135,69 +135,48 @@ object CommitLog {
     */
   private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
 
-  private def parsedCommits(dir: String,
-      conf: Configuration): Seq[(Int, com.fasterxml.jackson.databind.JsonNode)] =
-    readCommitFiles(dir, conf).map { case (p, txt) => p -> mapper.readTree(txt) }
+  /** Every commit under `dir`, keyed by part and parsed into the
+    * [[Commit]] that [[write]] took. A field a legacy commit lacks (e.g.
+    * `batch`, written only since batch dirs exist) reads as its default.
+    */
+  def read(dir: String,
+      conf: Configuration = new Configuration()): Map[Int, Commit] =
+    readCommitFiles(dir, conf).map { case (p, txt) =>
+      import scala.jdk.CollectionConverters._
+      val n = mapper.readTree(txt)
+      def field[T](name: String, default: T)(
+          get: com.fasterxml.jackson.databind.JsonNode => T): T =
+        Option(n.get(name)).map(get).getOrElse(default)
+      p -> Commit(p,
+        docs = field("docs", 0L)(_.asLong),
+        failedDocs = field("failed_docs", 0L)(_.asLong),
+        violations = field("violations", 0L)(_.asLong),
+        ruleHash = field("rule_hash", "")(_.asText),
+        snapshotId = field("snapshot_id", "")(_.asText),
+        manifest = field("manifest", Seq.empty[String])(
+          _.elements().asScala.map(_.asText).toSeq),
+        wallMs = field("wall_ms", 0L)(_.asLong),
+        batch = field("batch", "")(_.asText),
+        sketches = field("sketches", Map.empty[String, Array[Byte]])(
+          _.properties().asScala.map { e =>
+            e.getKey -> java.util.Base64.getDecoder.decode(e.getValue.asText)
+          }.toMap))
+    }.toMap
 
   /** Completed partitions (+ their recorded rule hash for mismatch checks). */
   def completed(dir: String,
       conf: Configuration = new Configuration()): Map[Int, String] =
-    parsedCommits(dir, conf)
-      .map { case (p, n) => p -> Option(n.get("rule_hash")).map(_.asText).getOrElse("") }
-      .toMap
-
-  /** part -> batch dir name it was committed under ("" for pre-batch logs). */
-  def committedBatches(dir: String,
-      conf: Configuration = new Configuration()): Map[Int, String] =
-    parsedCommits(dir, conf)
-      .map { case (p, n) => p -> Option(n.get("batch")).map(_.asText).getOrElse("") }
-      .toMap
-
-  /** part -> named sketch bytes persisted with the commit (may be empty). */
-  def sketches(dir: String,
-      conf: Configuration = new Configuration()): Map[Int, Map[String, Array[Byte]]] =
-    parsedCommits(dir, conf).map { case (p, n) =>
-      val entries = Option(n.get("sketches")).map { sk =>
-        import scala.jdk.CollectionConverters._
-        sk.properties().asScala.map { e =>
-          e.getKey -> java.util.Base64.getDecoder.decode(e.getValue.asText)
-        }.toMap
-      }.getOrElse(Map.empty[String, Array[Byte]])
-      p -> entries
-    }.toMap
-
-  /** The recorded input-file manifest per part (lineage read-back). */
-  def manifests(dir: String,
-      conf: Configuration = new Configuration()): Map[Int, Seq[String]] =
-    parsedCommits(dir, conf).map { case (p, n) =>
-      import scala.jdk.CollectionConverters._
-      p -> Option(n.get("manifest"))
-        .map(_.elements().asScala.map(_.asText).toSeq).getOrElse(Nil)
-    }.toMap
+    read(dir, conf).map { case (p, c) => p -> c.ruleHash }
 
   /** part -> committed doc count (0 = a legitimately empty partition). */
   def docCounts(dir: String,
       conf: Configuration = new Configuration()): Map[Int, Long] =
-    parsedCommits(dir, conf).map { case (p, n) =>
-      p -> Option(n.get("docs")).map(_.asLong).getOrElse(0L)
-    }.toMap
-
-  /** part -> (docs, failed_docs) — the per-partition metric series the
-    * CLI's part-anomaly watchdog feeds to [[graft.operators.Anomaly]].
-    */
-  def partMetrics(dir: String,
-      conf: Configuration = new Configuration()): Map[Int, (Long, Long)] =
-    parsedCommits(dir, conf).map { case (p, n) =>
-      p -> (Option(n.get("docs")).map(_.asLong).getOrElse(0L),
-        Option(n.get("failed_docs")).map(_.asLong).getOrElse(0L))
-    }.toMap
+    read(dir, conf).map { case (p, c) => p -> c.docs }
 
   /** Sum of failed_docs over all committed partitions (the job verdict). */
   def failedDocsTotal(dir: String,
       conf: Configuration = new Configuration()): Long =
-    parsedCommits(dir, conf).map { case (_, n) =>
-      Option(n.get("failed_docs")).map(_.asLong).getOrElse(0L)
-    }.sum
+    read(dir, conf).values.map(_.failedDocs).sum
 
   def clear(dir: String, conf: Configuration = new Configuration()): Unit = {
     val (fs, base) = fsFor(dir, conf)

@@ -127,7 +127,7 @@ class IntegritySpec extends SparkSpec {
     val idx = Files.createTempDirectory("graft_mh_idx").toString
     Dedup.minHashWriteIndex(baseDocs, "doc_id", "text", idx,
       k = 3, numHashes = 32, bands = 32)
-    val incr = Dedup.incrementalNearDups(fresh, baseDocs, idx, "doc_id", "text",
+    val incr = Dedup.incrementalNearDups(fresh, idx, "doc_id", "text",
       k = 3, numHashes = 32, bands = 32, threshold = 0.5)
       .orderBy("id_a", "id_b").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
@@ -151,7 +151,7 @@ class IntegritySpec extends SparkSpec {
     // the index side is a bare parquet read of precomputed
     // (band_idx, band_hash, id) rows. Re-banding the base corpus would put
     // the kernel back into this plan and drop the parquet relation.
-    val plan = Dedup.incrementalNearDups(fresh, baseDocs, idx, "doc_id", "text")
+    val plan = Dedup.incrementalNearDups(fresh, idx, "doc_id", "text")
       .queryExecution.analyzed.toString
     val kernels = "minhashbands|MinHashBands".r.findAllIn(plan).length
     assert(kernels == 0, s"expected no banding kernels in the probe plan " +

@@ -76,6 +76,54 @@ class ResumableValidateSpec extends SparkSpec {
       .filter(f => f.isDirectory && f.getName.startsWith("part="))
       .map(_.listFiles().count(_.getName.endsWith(".parquet"))).max
     assert(maxFiles > 1, s"expected >1 parquet file in some part, got max $maxFiles")
+    // filesPerPart = 1: exactly one (sorted) file in every part dir
+    val perPart1 = new java.io.File(d1).listFiles()
+      .filter(f => f.isDirectory && f.getName.startsWith("violations_batch_"))
+      .flatMap(_.listFiles()).filter(f => f.isDirectory && f.getName.startsWith("part="))
+      .map(pd => pd.getName -> pd.listFiles().count(_.getName.endsWith(".parquet")))
+    assert(perPart1.length == 6 && perPart1.forall(_._2 == 1),
+      s"filesPerPart = 1 must write one file per part: ${perPart1.mkString(",")}")
+  }
+
+  test("each batch is one Spark action: commit metrics ride the violation write") {
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    // listener events arrive asynchronously but in order: count the
+    // successful executions between two sentinel queries
+    val sentinel = "graft_listener_sentinel"
+    val seen = new java.util.concurrent.LinkedBlockingQueue[Boolean]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        seen.put(qe.analyzed.output.map(_.name) == Seq(sentinel))
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    def runSentinel(): Unit = spark.range(1).select(
+      org.apache.spark.sql.functions.lit(1).as(sentinel)).collect(): Unit
+    def awaitSentinel(): Int = {
+      var n = 0
+      var isSentinel = false
+      while (!isSentinel) {
+        isSentinel = Option(seen.poll(60, java.util.concurrent.TimeUnit.SECONDS))
+          .getOrElse(fail("listener event did not arrive"))
+        if (!isSentinel) n += 1
+      }
+      n
+    }
+    val docs = freshDocs
+    val dir = Files.createTempDirectory("graft_one_pass").toString
+    spark.listenerManager.register(listener)
+    try {
+      runSentinel()
+      awaitSentinel()
+      val r = ResumableValidate.run(spark, docs, rule, dir, partsPerBatch = 2,
+        withSketches = true)
+      runSentinel()
+      val executions = awaitSentinel()
+      assert(r.partsDone.size == 6)
+      // part discovery (one collect) + one write per batch of 2 parts
+      assert(executions == 1 + 3, s"expected 4 executions, got $executions")
+    } finally spark.listenerManager.unregister(listener)
+    assert(CommitLog.docCounts(dir).values.sum == docs.count())
   }
 
   test("expected part with zero rows still gets a pass-verdict commit") {
@@ -279,17 +327,18 @@ class ResumableValidateSpec extends SparkSpec {
     val nastyManifest = Seq("s3a://b/weird\"key.parquet", "line1\nline2", "tab\tpath")
     val nastyHash = "h\"ash\\with\nnasties"
     val sk = Map("k\"1" -> Array[Byte](1, 2, 3))
-    CommitLog.write(dir, CommitLog.Commit(7, 10, 2, 3, nastyHash, "snap",
-      nastyManifest, 5, batch = "violations_batch_\"7", sketches = sk))
+    val written = CommitLog.Commit(7, 10, 2, 3, nastyHash, "snap",
+      nastyManifest, 5, batch = "violations_batch_\"7", sketches = sk)
+    CommitLog.write(dir, written)
     assert(CommitLog.completed(dir) == Map(7 -> nastyHash))
-    assert(CommitLog.committedBatches(dir) == Map(7 -> "violations_batch_\"7"))
-    assert(CommitLog.manifests(dir) == Map(7 -> nastyManifest))
     assert(CommitLog.failedDocsTotal(dir) == 2L)
-    val got = CommitLog.sketches(dir)(7)
+    val c = CommitLog.read(dir)
+    assert(c.keySet == Set(7))
+    // every field round-trips (sketch bytes compared below: arrays have
+    // reference equality)
+    assert(c(7).copy(sketches = Map.empty) == written.copy(sketches = Map.empty))
+    val got = c(7).sketches
     assert(got.keySet == Set("k\"1") && got("k\"1").toSeq == Seq[Byte](1, 2, 3))
-    // the (docs, failed_docs) series the CLI part-anomaly watchdog feeds
-    // to Anomaly.robustZ — from commit bytes only
-    assert(CommitLog.partMetrics(dir) == Map(7 -> ((10L, 2L))))
   }
 
   test("violations() reads logs whose commits predate the batch field") {

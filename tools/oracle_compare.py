@@ -1,7 +1,9 @@
 #!/usr/bin/env python3
 """Local emulation of the driver's correctness gate: run each oracle SQL in
 DuckDB over the sf tables, load the Spark parquet result, sort columns by
-name + rows by value, and compare row counts and value hashes."""
+name + rows by value, and compare row counts, int/float column kinds and
+value hashes. The kind check matters because the value normalisation below
+prints 0 and 0.0 alike, while a hash of the raw values tells them apart."""
 import duckdb, json, glob, sys, math
 import pandas as pd
 from decimal import Decimal
@@ -25,6 +27,10 @@ def norm_cell(v):
     if isinstance(v, (int,)): return str(v)
     if isinstance(v, bool): return str(v).lower()
     return str(v)
+
+def num_kind(dtype):
+    """'int' or 'float' for a numeric pandas dtype, else None (not compared)."""
+    return {'i': 'int', 'u': 'int', 'f': 'float'}.get(dtype.kind)
 
 def canon(df):
     df = df[sorted(df.columns)]
@@ -50,6 +56,12 @@ for name in sorted(glob.glob(f'{OUT}/*/')):
         continue
     if sorted(ora.columns) != sorted(spark.columns):
         fails.append((q, f'schema {sorted(spark.columns)} vs {sorted(ora.columns)}'))
+        continue
+    kinds = [(c, num_kind(spark[c].dtype), num_kind(ora[c].dtype))
+             for c in sorted(spark.columns)]
+    bad = [(c, ks, ko) for c, ks, ko in kinds if ks and ko and ks != ko]
+    if bad:
+        fails.append((q, f'DTYPE MISMATCH (column, spark, oracle) {bad}'))
         continue
     cs, co = canon(spark), canon(ora)
     if cs != co:
