@@ -103,7 +103,7 @@ object Dedup {
   }
 
   /** Normalized whitespace tokens — the shared tokenization of [[shingles]]
-    * and the native [[graft.plans.MinHashBands]] kernel.
+    * and the native [[graft.plans.MinHashOps.bandHashes]] kernel.
     */
   private[graft] def normTokens(text: Column): Column =
     split(lower(regexp_replace(trim(text), "\\s+", " ")), " ")
@@ -116,7 +116,7 @@ object Dedup {
     */
   private[operators] def shingleHashesCol(text: Column, k: Int): Column = {
     import org.apache.spark.sql.GraftShims
-    GraftShims.column(graft.plans.NoInline(graft.plans.ShingleHashes(
+    GraftShims.column(graft.plans.NoInline(graft.plans.MinHashOps.shingleHashesExpr(
       GraftShims.expression(normTokens(text)), k)))
   }
 
@@ -176,7 +176,7 @@ object Dedup {
   }
 
   /** LSH banding: (id, band_idx, band_hash) — one row per band. The band
-    * hashes come from the native [[graft.plans.MinHashBands]] kernel (one
+    * hashes come from the native [[graft.plans.MinHashOps.bandHashes]] kernel (one
     * string hash per shingle + cheap integer mixes per slot — bit-identical
     * to the HOF [[bandHashes]]∘[[shingles]] pipeline, which re-hashed the
     * full shingle string once per signature slot and dominated the dedup
@@ -191,7 +191,7 @@ object Dedup {
     // projection with the kernel INLINED, evaluating the whole banding
     // kernel 2-3× per row in one scan (r6 plan audit); fenced, the kernel
     // runs once and the filters test the materialized column
-    val bh = GraftShims.column(graft.plans.NoInline(graft.plans.MinHashBands(
+    val bh = GraftShims.column(graft.plans.NoInline(graft.plans.MinHashOps.bandHashesExpr(
       GraftShims.expression(normTokens(col(textCol))), k, numHashes, bands)))
     df.filter(col(textCol).isNotNull && length(col(textCol)) > 0)
       .select(col(idCol).as("id"), bh.as("bh"))
@@ -202,7 +202,7 @@ object Dedup {
   }
 
   /** One-scan (id, sh) proxy frame: `sh` = the DISTINCT 64-bit shingle
-    * hashes of the doc (native [[graft.plans.ShingleHashes]] kernel —
+    * hashes of the doc (native [[graft.plans.MinHashOps.shingleHashes]] kernel —
     * bit-identical to `array_distinct(transform(shingles(text, k),
     * xxhash64))`). This is the §8-shaped decision proxy of the whole
     * near-dup subsystem: the text is read and shingled EXACTLY ONCE, and
@@ -219,7 +219,7 @@ object Dedup {
       .filter(col("sh").isNotNull)
 
   /** Banded rows (id, band_idx, band_hash) derived from a [[shingleHashFrame]]
-    * via the integer-only [[graft.plans.MinHashBandsFromHashes]] kernel —
+    * via the integer-only [[graft.plans.MinHashOps.bandHashesFromHashes]] kernel —
     * bit-identical to [[lshBands]]' output for the same docs. Cheap to
     * recompute per consumer (a few integer mixes per shingle hash), so the
     * callers checkpoint the sh frame, never the banded explode.
@@ -227,7 +227,7 @@ object Dedup {
   private[operators] def bandedFromSh(sh: DataFrame, numHashes: Int,
       bands: Int): DataFrame = {
     import org.apache.spark.sql.GraftShims
-    val bh = GraftShims.column(graft.plans.MinHashBandsFromHashes(
+    val bh = GraftShims.column(graft.plans.MinHashOps.bandHashesFromHashesExpr(
       GraftShims.expression(col("sh")), numHashes, bands))
     sh.select(col("id"), posexplode(bh))
       .withColumnRenamed("pos", "band_idx")
@@ -311,13 +311,13 @@ object Dedup {
   }
 
   /** 64-bit SimHash over whitespace tokens via the native codegen
-    * expression (`graft.plans.SimHash64`): one tight loop per row instead
+    * kernel ([[graft.plans.SimHashOps.simhash]]): one tight loop per row instead
     * of an interpreted 64-wide `zip_with` per token.
     */
   def simHash(text: Column): Column = {
     import org.apache.spark.sql.GraftShims
     val toks = split(lower(regexp_replace(trim(text), "\\s+", " ")), " ")
-    GraftShims.column(graft.plans.SimHash64(GraftShims.expression(toks)))
+    GraftShims.column(graft.plans.SimHashOps.simhashExpr(GraftShims.expression(toks)))
   }
 
   /** The HOF formulation of [[simHash]] — kept as the bit-identical
@@ -699,7 +699,7 @@ object Dedup {
     // Candidate mass is bands·corpus-bounded (r=1 banding keeps EVERY
     // single-slot match), so per-pair set cost dominates the stage: long
     // equality beats string hashing ~4×, and |A∪B| = |A|+|B|−|A∩B| saves
-    // the second hash-set build per pair. The native ShingleHashes kernel
+    // the second hash-set build per pair. The native shingleHashes kernel
     // replaces the interpreted HOF chain, with its null (< k tokens)
     // mapped back to the HOF's empty array and a null TEXT kept null —
     // bit-identical contract (PipelineOpsSpec). localCheckpoint: the two
@@ -734,13 +734,13 @@ object Dedup {
   def minHashPortableSig(text: Column, k: Int = 3,
       numHashes: Int = 16): Column = {
     import org.apache.spark.sql.GraftShims
-    // native kernel (graft.plans.PortableMinHashSig): one digest per
+    // native kernel (graft.plans.PortableMinHashOps.portableSig): one digest per
     // DISTINCT shingle slot, minima kept as raw digest bytes — bit-identical
     // to [[minHashPortableSigHof]] (PipelineOpsSpec cross-checks), which
     // allocated a 16-slot string array + 16 interpreted md5 trees per
     // shingle. NoInline fences it from filter-pushdown duplication (the
     // lshBands precedent).
-    GraftShims.column(graft.plans.NoInline(graft.plans.PortableMinHashSig(
+    GraftShims.column(graft.plans.NoInline(graft.plans.PortableMinHashOps.portableSigExpr(
       GraftShims.expression(normTokens(text)), k, numHashes)))
   }
 

@@ -60,9 +60,9 @@ object ResumableValidate {
   def kllColKey(c: String): String = s"kll_col_$c"
 
   /** The ONE composition of user rule + built-in span invariant the engine
-    * validates with — [[run]] and the CLI scorecard both lower through
-    * this, so a report can never cover a different rule set than the
-    * verdicts did.
+    * validates with — [[run]], the CLI scorecard and the streaming path
+    * (`StreamValidate`) all lower through this, so a report can never
+    * cover a different rule set than the verdicts did.
     */
   def compositeViolations(docs: org.apache.spark.sql.DataFrame, rule: Rule,
       defs: Map[String, Rule] = Map.empty): org.apache.spark.sql.DataFrame =
@@ -256,11 +256,6 @@ object ResumableValidate {
     dfs.reduce(_ unionByName _)
   }
 
-  /** Merged doc_id HLL sketch over all committed parts (requires the run to
-    * have used `withSketches = true`) — returns the distinct estimate.
-    * Union happens in Spark (`hll_union_agg`) over the persisted bytes:
-    * no re-scan of any committed data.
-    */
   /** Every committed part must carry `key` — a commit log where only SOME
     * parts have the sketch (e.g. a crash under plain validation resumed
     * later with `--sketches`) would otherwise merge into corpus-wide
@@ -289,6 +284,11 @@ object ResumableValidate {
     bytes
   }
 
+  /** Merged doc_id HLL sketch over all committed parts (requires the run to
+    * have used `withSketches = true`) — returns the distinct estimate.
+    * Union happens in Spark (`hll_union_agg`) over the persisted bytes:
+    * no re-scan of any committed data.
+    */
   def mergedDocIdEstimate(spark: SparkSession, outDir: String): Long = {
     val bytes = sketchBytesAllParts(spark, outDir, HllDocIdKey)
     import spark.implicits._

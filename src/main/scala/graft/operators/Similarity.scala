@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, FloatType}
 
 /** Similarity search over an embedding column (`array<float>`): brute-force
   * cosine top-k as the exact baseline, plus LSH-bucketed and IVF-style
@@ -27,15 +28,15 @@ object Similarity {
   def norm(a: Column): Column =
     sqrt(aggregate(transform(a, x => x * x), lit(0.0d), (acc, z) => acc + z))
 
-  /** Cosine similarity — the native codegen kernel
-    * ([[graft.plans.CosineSim]]): one fused loop per evaluation instead of
+  /** Cosine similarity — the native kernel
+    * ([[graft.plans.CosineOps.cosine]]): one fused loop per evaluation instead of
     * four interpreted HOF passes. Runs per candidate PAIR in near-dup
     * verification and per (row, centroid) in IVF assignment, so it is the
     * similarity subsystem's hottest expression.
     */
   def cosine(a: Column, b: Column): Column = {
     import org.apache.spark.sql.GraftShims
-    GraftShims.column(graft.plans.CosineSim(
+    GraftShims.column(graft.plans.CosineOps.cosineExpr(
       GraftShims.expression(a), GraftShims.expression(b)))
   }
 
@@ -80,7 +81,7 @@ object Similarity {
     * buckets stay bit-identical to [[lshBucketScala]].
     */
   /** All `nTables` bucket ids in ONE native kernel pass
-    * ([[graft.plans.LshBuckets]] — element t = [[lshBucket]] for table t,
+    * ([[graft.plans.LshBucketsOps.buckets]] — element t = [[lshBucket]] for table t,
     * bit-identical; PipelineOpsSpec cross-checks). The HOF per-table form
     * evaluated nTables interpreted aggregate/zip_with trees per row, each
     * allocating a boxed dims-array per plane — it dominated the LSH index
@@ -90,7 +91,7 @@ object Similarity {
   private[operators] def allTableBuckets(vec: Column, dims: Int, nPlanes: Int,
       nTables: Int): Column = {
     import org.apache.spark.sql.GraftShims
-    GraftShims.column(graft.plans.NoInline(graft.plans.LshBuckets(
+    GraftShims.column(graft.plans.NoInline(graft.plans.LshBucketsOps.bucketsExpr(
       GraftShims.expression(vec), dims, nPlanes, nTables)))
   }
 
@@ -324,13 +325,19 @@ object Similarity {
 
   def quantizeInt8(df: DataFrame, idCol: String, vecCol: String): DataFrame = {
     import org.apache.spark.sql.GraftShims
-    // native kernel (graft.plans.QuantizeInt8): one pass computes the
+    // native kernel (graft.plans.QuantizeInt8Ops.quantize): one pass computes the
     // max-abs scale and the rounded int8 values, IEEE-identical to
     // [[quantizeInt8Hof]] (PipelineOpsSpec cross-checks), which ran an
     // interpreted aggregate + a branchy transform per row. NoInline fences
-    // it from projection duplication (the lshBands precedent).
-    val qz = GraftShims.column(graft.plans.NoInline(graft.plans.QuantizeInt8(
-      GraftShims.expression(col(vecCol)))))
+    // it from projection duplication (the lshBands precedent). The kernel
+    // reads float or double elements natively — no cast pass.
+    val isFloat = df.select(col(vecCol)).schema.head.dataType match {
+      case ArrayType(FloatType, _) => true
+      case _ => false
+    }
+    val qz = GraftShims.column(graft.plans.NoInline(
+      graft.plans.QuantizeInt8Ops.quantizeExpr(
+        GraftShims.expression(col(vecCol)), isFloat)))
     df.filter(col(vecCol).isNotNull)
       .select(col(idCol).as("id"), qz.as("_q"))
       .select(col("id"), col("_q.scale").as("scale"), col("_q.qvec").as("qvec"))

@@ -93,14 +93,14 @@ object SpanInvariant {
   }
 
   /** Boolean predicate form (no violation construction) — the cheap path
-    * for verdict-only runs: a native codegen'd Catalyst expression
-    * ([[graft.plans.SpanInvariantPred]], one tight loop, zero intermediate
-    * arrays). The HOF form below ([[predColHof]]) is semantically identical
+    * for verdict-only runs: the native kernel ([[graft.plans.SpanOps.holds]],
+    * one tight loop, zero intermediate arrays, inside whole-stage codegen).
+    * The HOF form below ([[predColHof]]) is semantically identical
     * and kept for cross-checking.
     */
   def predCol(spans: Column): Column = {
     import org.apache.spark.sql.GraftShims
-    GraftShims.column(graft.plans.SpanInvariantPred(GraftShims.expression(spans)))
+    GraftShims.column(graft.plans.SpanInvariantHolds(GraftShims.expression(spans)))
   }
 
   /** HOF formulation of the predicate (interpreted eval; reference

@@ -1,8 +1,8 @@
 package graft.plans
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, XXH64}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -111,44 +111,27 @@ object DocsGenOps {
     val part = (chan(base, 16, 0) % nParts.toLong).toInt
     InternalRow(docId, new GenericArrayData(spans), part)
   }
-}
 
-/** Native row builder for [[graft.sources.DocsGen.docs]]: one struct
-  * (doc_id, spans, part) per input id — bit-identical to the HOF channel
-  * math (DocsGenKernelSpec).
-  */
-case class DocsGenRow(child: Expression, seed: Long, nParts: Int, dup: Int,
-    badKind: Int, badRef: Int, badOrder: Int, negOff: Int, nullId: Int,
-    dangling: Int, skew: Int) extends UnaryExpression {
-
-  require(nParts > 0, "nParts must be positive")
-
-  override def dataType: DataType = DocsGenRow.schema
-  override def nullable: Boolean = false
-
-  override protected def nullSafeEval(input: Any): Any =
-    DocsGenOps.row(input.asInstanceOf[Long], seed, nParts, dup, badKind,
-      badRef, badOrder, negOff, nullId, dangling, skew)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.plans.DocsGenOps.row($c, ${seed}L, $nParts, $dup,
-        $badKind, $badRef, $badOrder, $negOff, $nullId, $dangling, $skew);
-    """)
-
-  override protected def withNewChildInternal(newChild: Expression): DocsGenRow =
-    copy(child = newChild)
-}
-
-object DocsGenRow {
-  val spanType: StructType = StructType(Seq(
+  private val spanType: StructType = StructType(Seq(
     StructField("kind", StringType, nullable = false),
     StructField("text", StringType, nullable = false),
     StructField("media_ref", StringType, nullable = false),
     StructField("offset", IntegerType, nullable = false)))
-  val schema: StructType = StructType(Seq(
+  private val schema: StructType = StructType(Seq(
     StructField("doc_id", StringType, nullable = true),
     StructField("spans", ArrayType(spanType, containsNull = false),
       nullable = false),
     StructField("part", IntegerType, nullable = false)))
+
+  /** [[row]] of a bigint id expression: one `(doc_id, spans, part)` struct
+    * per id, bit-identical to the HOF channel math (DocsGenKernelSpec).
+    */
+  def rowExpr(id: Expression, seed: Long, nParts: Int, dup: Int,
+      badKind: Int, badRef: Int, badOrder: Int, negOff: Int, nullId: Int,
+      dangling: Int, skew: Int): Expression = {
+    require(nParts > 0, "nParts must be positive")
+    StaticInvoke(getClass, schema, "row", id +: Literal(seed) +: Seq(nParts,
+      dup, badKind, badRef, badOrder, negOff, nullId, dangling, skew)
+      .map(Literal(_)), returnNullable = false)
+  }
 }

@@ -5,16 +5,16 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo}
 import org.apache.spark.sql.types.{ArrayType, DoubleType}
 
-/** `SparkSessionExtensions` injector exposing the engine's native codegen
-  * expressions as SQL functions, so `spark-submit
+/** `SparkSessionExtensions` injector exposing the engine's native kernels
+  * as SQL functions, so `spark-submit
   * --conf spark.sql.extensions=graft.plans.GraftExtensions` (or
   * `builder.withExtensions(new GraftExtensions)`) makes them callable
   * from plain SQL next to the Column API:
   *
-  *   - `span_invariant(spans)`                — [[SpanInvariantPred]]
-  *   - `simhash64(tokens)`                    — [[SimHash64]]
-  *   - `minhash_bands(tokens, k, n, bands)`   — [[MinHashBands]]
-  *   - `cosine_sim(a, b)`                     — [[CosineSim]]
+  *   - `span_invariant(spans)`                — [[SpanOps.holds]]
+  *   - `simhash64(tokens)`                    — [[SimHashOps.simhash]]
+  *   - `minhash_bands(tokens, k, n, bands)`   — [[MinHashOps.bandHashes]]
+  *   - `cosine_sim(a, b)`                     — [[CosineOps.cosine]]
   *   - `kll_sketch(value[, k])`               — [[KllSketchAgg]] (agg)
   *
   * The analyzer wraps the returned `AggregateFunction` in an
@@ -59,22 +59,25 @@ object GraftExtensions {
       Seq[Expression] => Expression)] = Seq(
     (FunctionIdentifier("span_invariant"),
       info("span_invariant",
-        "span_invariant(spans) - true iff the span array satisfies the " +
-          "north-rule invariant (non-null kind/text, media_ref iff kind " +
-          "= 'image', offsets strictly increasing)"),
+        "span_invariant(spans) - true iff every span is non-null and " +
+          "passes five checks (kind is 'text' or 'media'; media_ref is " +
+          "non-empty iff kind = 'media'; a non-empty media_ref matches " +
+          "^m-[0-9a-f]{8}$; a text span has non-empty text; offset is " +
+          "non-null and >= 0) and the offsets are strictly increasing; " +
+          "false for null spans"),
       args => { arity("span_invariant", args, 1)
-        SpanInvariantPred(args.head) }),
+        SpanInvariantHolds(args.head) }),
     (FunctionIdentifier("simhash64"),
       info("simhash64",
         "simhash64(tokens) - 64-bit SimHash of an array<string>"),
       args => { arity("simhash64", args, 1)
-        SimHash64(args.head) }),
+        SimHashOps.simhashExpr(args.head) }),
     (FunctionIdentifier("minhash_bands"),
       info("minhash_bands",
         "minhash_bands(tokens, k, numHashes, bands) - banded MinHash " +
           "bucket hashes over k-shingles of an array<string>"),
       args => { arity("minhash_bands", args, 4)
-        MinHashBands(args.head,
+        MinHashOps.bandHashesExpr(args.head,
           intArg("minhash_bands", 1, args(1)),
           intArg("minhash_bands", 2, args(2)),
           intArg("minhash_bands", 3, args(3))) }),
@@ -83,7 +86,7 @@ object GraftExtensions {
         "cosine_sim(a, b) - cosine similarity of two numeric arrays " +
           "(elements cast to double; the kernel runs on array<double>)"),
       args => { arity("cosine_sim", args, 2)
-        CosineSim(Cast(args.head, ArrayType(DoubleType)),
+        CosineOps.cosineExpr(Cast(args.head, ArrayType(DoubleType)),
           Cast(args(1), ArrayType(DoubleType))) }),
     (FunctionIdentifier("kll_sketch"),
       info("kll_sketch",

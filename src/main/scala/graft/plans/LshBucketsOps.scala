@@ -1,11 +1,11 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, XXH64}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.{ArrayType, LongType}
 
-/** Static kernel invoked from generated code (the [[MinHashOps]] pattern). */
+/** Static kernel, called through `StaticInvoke` (the [[MinHashOps]] pattern). */
 object LshBucketsOps {
 
   /** Plane matrices are data-independent constants (xxhash64 of
@@ -44,7 +44,13 @@ object LshBucketsOps {
     * tight loop — bit-identical to `Similarity.lshBucket` per table (same
     * plane constants, same left-to-right FP accumulation over dims), which
     * evaluated nTables interpreted `aggregate`/`zip_with` trees per row,
-    * each allocating a boxed dims-array per plane.
+    * each allocating a boxed dims-array per plane. Null on a dims mismatch.
+    *
+    * Exists because that HOF formulation (one interpreted
+    * `aggregate(zip_with(...))` per (table, plane)) allocated
+    * nTables×nPlanes boxed arrays per row and dominated the LSH index build
+    * (s_ann_lsh). Cross-checked per table against `Similarity.lshBucket` /
+    * `lshBucketScala` in PipelineOpsSpec.
     */
   def buckets(vec: ArrayData, dims: Int, nPlanes: Int, nTables: Int): ArrayData = {
     if (vec.numElements() != dims) return null
@@ -70,34 +76,13 @@ object LshBucketsOps {
     }
     new GenericArrayData(out)
   }
-}
 
-/** Native Catalyst expression for all-tables LSH bucket ids of a double
-  * vector. Exists because the HOF formulation (one interpreted
-  * `aggregate(zip_with(...))` per (table, plane)) allocated
-  * nTables×nPlanes boxed arrays per row and dominated the LSH index build
-  * (s_ann_lsh). Semantics are bit-identical per table to
-  * `Similarity.lshBucket` / `lshBucketScala` (cross-checked in
-  * PipelineOpsSpec).
-  */
-case class LshBuckets(child: Expression, dims: Int, nPlanes: Int, nTables: Int)
-  extends UnaryExpression {
-
-  require(dims >= 1 && nPlanes >= 1 && nPlanes <= 63 && nTables >= 1,
-    "bad LSH geometry")
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
-
-  override protected def nullSafeEval(input: Any): Any =
-    LshBucketsOps.buckets(input.asInstanceOf[ArrayData], dims, nPlanes, nTables)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.plans.LshBucketsOps.buckets($c, $dims, $nPlanes, $nTables);
-      ${ev.isNull} = (${ev.value} == null);
-    """)
-
-  override protected def withNewChildInternal(newChild: Expression): LshBuckets =
-    copy(child = newChild)
+  /** [[buckets]] of an `array<double>` expression. */
+  def bucketsExpr(vec: Expression, dims: Int, nPlanes: Int,
+      nTables: Int): Expression = {
+    require(dims >= 1 && nPlanes >= 1 && nPlanes <= 63 && nTables >= 1,
+      "bad LSH geometry")
+    StaticInvoke(getClass, ArrayType(LongType, containsNull = false), "buckets",
+      Seq(vec, Literal(dims), Literal(nPlanes), Literal(nTables)))
+  }
 }

@@ -1,13 +1,13 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, XXH64}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.{ArrayType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Static kernel invoked from generated code (Janino calls the static
-  * forwarder on `graft.plans.MinHashOps`).
+/** Static kernels, called through `StaticInvoke` from generated code and
+  * interpreted eval alike (the static forwarders on `graft.plans.MinHashOps`).
   */
 object MinHashOps {
 
@@ -29,6 +29,12 @@ object MinHashOps {
     *
     * Returns null when the token array yields no shingles (< k tokens),
     * like the HOF's empty-signature guard.
+    *
+    * Exists because the HOF formulation (shingle strings via zip_with chains,
+    * then an `aggregate` whose accumulator zip_with re-hashes the FULL shingle
+    * string once per signature slot) is interpreted and does numHashes× the
+    * necessary byte hashing — it dominated d_dedup_minhash's wall (BENCH r3:
+    * 8.5 s, the most expensive query). Cross-checked in PipelineOpsSpec.
     */
   def bandHashes(arr: ArrayData, k: Int, numHashes: Int, bands: Int): ArrayData = {
     val n = arr.numElements()
@@ -78,6 +84,10 @@ object MinHashOps {
     *
     * Returns null when the token array yields no shingles (< k tokens) —
     * such docs can never be banding candidates.
+    *
+    * Exists because the HOF `array_distinct(transform(shingles(text, k),
+    * xxhash64))` chain it replaced on the near-dup path is interpreted, and
+    * was re-run per consumer.
     */
   def shingleHashes(arr: ArrayData, k: Int): ArrayData = {
     val n = arr.numElements()
@@ -105,7 +115,8 @@ object MinHashOps {
     * already paid by [[shingleHashes]]. Distinctness cannot change the
     * result (each slot is a min over the base-hash SET), so
     * `bandHashesFromHashes(shingleHashes(toks, k), n, b)` is bit-identical
-    * to `bandHashes(toks, k, n, b)` (cross-checked in PipelineOpsSpec).
+    * to `bandHashes(toks, k, n, b)` (cross-checked in PipelineOpsSpec):
+    * integer mixes only — zero string hashing, zero text access.
     */
   def bandHashesFromHashes(arr: ArrayData, numHashes: Int, bands: Int): ArrayData = {
     val n = arr.numElements()
@@ -139,87 +150,29 @@ object MinHashOps {
     }
     new GenericArrayData(out)
   }
-}
+  private val LongArray = ArrayType(LongType, containsNull = false)
 
-/** Native expression for [[MinHashOps.shingleHashes]]: the distinct 64-bit
-  * shingle-hash set of a token array — the materialize-once proxy that
-  * replaced the HOF `array_distinct(transform(shingles(text, k), xxhash64))`
-  * chain (interpreted, and re-run per consumer) on the near-dup path.
-  */
-case class ShingleHashes(child: Expression, k: Int) extends UnaryExpression {
+  /** [[bandHashes]] of a token-array expression; null below k tokens. */
+  def bandHashesExpr(tokens: Expression, k: Int, numHashes: Int,
+      bands: Int): Expression = {
+    require(k >= 1 && numHashes >= 1 && bands >= 1 && numHashes % bands == 0,
+      "numHashes must divide into bands")
+    StaticInvoke(getClass, LongArray, "bandHashes",
+      Seq(tokens, Literal(k), Literal(numHashes), Literal(bands)))
+  }
 
-  require(k >= 1, "k must be >= 1")
+  /** [[shingleHashes]] of a token-array expression; null below k tokens. */
+  def shingleHashesExpr(tokens: Expression, k: Int): Expression = {
+    require(k >= 1, "k must be >= 1")
+    StaticInvoke(getClass, LongArray, "shingleHashes", Seq(tokens, Literal(k)))
+  }
 
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
-
-  override protected def nullSafeEval(input: Any): Any =
-    MinHashOps.shingleHashes(input.asInstanceOf[ArrayData], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.plans.MinHashOps.shingleHashes($c, $k);
-      ${ev.isNull} = (${ev.value} == null);
-    """)
-
-  override protected def withNewChildInternal(newChild: Expression): ShingleHashes =
-    copy(child = newChild)
-}
-
-/** Native expression for [[MinHashOps.bandHashesFromHashes]]: LSH band
-  * hashes derived from an already-materialized shingle-hash array (integer
-  * mixes only — zero string hashing, zero text access).
-  */
-case class MinHashBandsFromHashes(child: Expression, numHashes: Int,
-    bands: Int) extends UnaryExpression {
-
-  require(numHashes >= 1 && bands >= 1 && numHashes % bands == 0,
-    "numHashes must divide into bands")
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
-
-  override protected def nullSafeEval(input: Any): Any =
-    MinHashOps.bandHashesFromHashes(input.asInstanceOf[ArrayData], numHashes, bands)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.plans.MinHashOps.bandHashesFromHashes($c, $numHashes, $bands);
-      ${ev.isNull} = (${ev.value} == null);
-    """)
-
-  override protected def withNewChildInternal(newChild: Expression): MinHashBandsFromHashes =
-    copy(child = newChild)
-}
-
-/** Native Catalyst expression for MinHash LSH band hashes of a token array.
-  *
-  * Exists because the HOF formulation (shingle strings via zip_with chains,
-  * then an `aggregate` whose accumulator zip_with re-hashes the FULL shingle
-  * string once per signature slot) is interpreted and does numHashes× the
-  * necessary byte hashing — it dominated d_dedup_minhash's wall (BENCH r3:
-  * 8.5 s, the most expensive query). Semantics are bit-identical to
-  * `Dedup.bandHashes(Dedup.shingles(text, k), numHashes, bands)`,
-  * cross-checked in PipelineOpsSpec.
-  */
-case class MinHashBands(child: Expression, k: Int, numHashes: Int, bands: Int)
-  extends UnaryExpression {
-
-  require(k >= 1 && numHashes >= 1 && bands >= 1 && numHashes % bands == 0,
-    "numHashes must divide into bands")
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullable: Boolean = true
-
-  override protected def nullSafeEval(input: Any): Any =
-    MinHashOps.bandHashes(input.asInstanceOf[ArrayData], k, numHashes, bands)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.plans.MinHashOps.bandHashes($c, $k, $numHashes, $bands);
-      ${ev.isNull} = (${ev.value} == null);
-    """)
-
-  override protected def withNewChildInternal(newChild: Expression): MinHashBands =
-    copy(child = newChild)
+  /** [[bandHashesFromHashes]] of a shingle-hash-array expression. */
+  def bandHashesFromHashesExpr(hashes: Expression, numHashes: Int,
+      bands: Int): Expression = {
+    require(numHashes >= 1 && bands >= 1 && numHashes % bands == 0,
+      "numHashes must divide into bands")
+    StaticInvoke(getClass, LongArray, "bandHashesFromHashes",
+      Seq(hashes, Literal(numHashes), Literal(bands)))
+  }
 }

@@ -13,7 +13,7 @@ import org.apache.spark.sql.types.DataType
   * Why it exists: a filter over a projected column (`isnotnull(bh)`, or the
   * `size(e) > 0` InferFiltersFromGenerate adds under an explode) is pushed
   * below the projection with the column's DEFINITION inlined, so an
-  * expensive kernel such as [[MinHashBands]] ends up evaluated 2-3× per row
+  * expensive kernel such as [[MinHashOps.bandHashes]] ends up evaluated 2-3× per row
   * in the same scan stage (once per inlined filter conjunct + once in the
   * projection; codegen does no cross-operator CSE). Marking the wrapper
   * non-deterministic stops predicate pushdown and project collapsing at

@@ -1,12 +1,12 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.{ArrayType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Static kernel invoked from generated code (the [[MinHashOps]] pattern). */
+/** Static kernel, called through `StaticInvoke` (the [[MinHashOps]] pattern). */
 object PortableMinHashOps {
 
   private val md5 = new ThreadLocal[java.security.MessageDigest] {
@@ -33,6 +33,12 @@ object PortableMinHashOps {
     *
     * Returns null when the token array yields no shingles (< k tokens),
     * like the HOF's `"g"`-sentinel guard.
+    *
+    * Exists because the HOF formulation (an `aggregate` whose accumulator
+    * `zip_with` allocates a fresh 16-slot string array AND evaluates 16
+    * interpreted md5/concat/least trees per shingle) dominated
+    * d_minhash_quality's wall. Cross-checked against
+    * `Dedup.minHashPortableSigHof` in PipelineOpsSpec.
     */
   def portableSig(arr: ArrayData, k: Int, numHashes: Int): ArrayData = {
     val n = arr.numElements()
@@ -81,6 +87,13 @@ object PortableMinHashOps {
     new GenericArrayData(out)
   }
 
+  /** [[portableSig]] of a token-array expression; null below k tokens. */
+  def portableSigExpr(tokens: Expression, k: Int, numHashes: Int): Expression = {
+    require(k >= 1 && numHashes >= 1, "k and numHashes must be positive")
+    StaticInvoke(getClass, ArrayType(StringType, containsNull = false),
+      "portableSig", Seq(tokens, Literal(k), Literal(numHashes)))
+  }
+
   private def unsignedLess(a: Array[Byte], b: Array[Byte]): Boolean = {
     var i = 0
     while (i < a.length) {
@@ -102,33 +115,4 @@ object PortableMinHashOps {
     }
     new String(c)
   }
-}
-
-/** Native Catalyst expression for the PORTABLE md5 MinHash signature.
-  *
-  * Exists because the HOF formulation (an `aggregate` whose accumulator
-  * `zip_with` allocates a fresh 16-slot string array AND evaluates 16
-  * interpreted md5/concat/least trees per shingle) dominated
-  * d_minhash_quality's wall. Semantics are bit-identical to
-  * `Dedup.minHashPortableSig` (cross-checked in PipelineOpsSpec).
-  */
-case class PortableMinHashSig(child: Expression, k: Int, numHashes: Int)
-  extends UnaryExpression {
-
-  require(k >= 1 && numHashes >= 1, "k and numHashes must be positive")
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = true
-
-  override protected def nullSafeEval(input: Any): Any =
-    PortableMinHashOps.portableSig(input.asInstanceOf[ArrayData], k, numHashes)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => s"""
-      ${ev.value} = graft.plans.PortableMinHashOps.portableSig($c, $k, $numHashes);
-      ${ev.isNull} = (${ev.value} == null);
-    """)
-
-  override protected def withNewChildInternal(newChild: Expression): PortableMinHashSig =
-    copy(child = newChild)
 }

@@ -43,7 +43,7 @@ object DocsGen {
     pmod(h(id, seed, c, i), lit(1000L))
 
   /** The generated docs table — native kernel path: one
-    * [[graft.plans.DocsGenRow]] struct per id (bit-identical to the HOF
+    * [[graft.plans.DocsGenOps.row]] struct per id (bit-identical to the HOF
     * twin [[docsHof]], pinned by DocsGenKernelSpec). The HOF's
     * interpreted `transform` lambda re-evaluated ~8 full xxhash64 channel
     * trees per span (~100 µs/row — it dominated i_validate/gen_validate
@@ -52,7 +52,7 @@ object DocsGen {
     */
   def docs(spark: SparkSession, k: Knobs): DataFrame = {
     import org.apache.spark.sql.GraftShims
-    val r = GraftShims.column(graft.plans.DocsGenRow(
+    val r = GraftShims.column(graft.plans.DocsGenOps.rowExpr(
       GraftShims.expression(col("id")), k.seed, k.nParts, k.dupPerMille,
       k.badKindPerMille, k.badMediaRefPerMille, k.badOrderPerMille,
       k.negOffsetPerMille, k.nullDocIdPerMille, k.danglingRefPerMille,

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.operators.{SpanInvariant, Validate}
+import graft.operators.{ResumableValidate, Validate}
 import graft.rules.Rule
 
 /** Structured Streaming form of the validation pipeline.
@@ -26,30 +26,21 @@ import graft.rules.Rule
   */
 object StreamValidate {
 
-  /** Per-row violations + pass flag on a streaming docs DataFrame (must
-    * carry the standard docs schema). Stateless — usable in append mode.
-    */
-  def withViolations(docs: DataFrame, rule: Rule,
-      defs: Map[String, Rule] = Map.empty): DataFrame = {
-    // same compiled expressions as the batch path
-    val base = Validate.withViolations(docs, rule, defs)
-    base.withColumn("violations",
-      concat(col("violations"), SpanInvariant.violationsCol(col("spans"))))
-      .withColumn("pass", size(col("violations")) === 0)
-  }
-
-  /** Flat violation rows (append-able) — same projection as the batch
-    * path ([[Validate.flatViolations]]), so the row shape cannot drift.
+  /** Flat violation rows (append-able) — same composition
+    * ([[ResumableValidate.compositeViolations]], stateless, so usable in
+    * append mode) and same projection ([[Validate.flatViolations]]) as the
+    * batch path, so neither the rule set nor the row shape can drift.
     */
   def violations(docs: DataFrame, rule: Rule,
       defs: Map[String, Rule] = Map.empty): DataFrame =
-    Validate.flatViolations(withViolations(docs, rule, defs))
+    Validate.flatViolations(
+      ResumableValidate.compositeViolations(docs, rule, defs))
 
   /** Windowed per-partition verdicts over an event-time column. */
   def verdictsByWindow(docs: DataFrame, rule: Rule, eventTime: String,
       windowLen: String = "1 minute", watermark: String = "2 minutes",
       defs: Map[String, Rule] = Map.empty): DataFrame =
-    withViolations(docs, rule, defs)
+    ResumableValidate.compositeViolations(docs, rule, defs)
       .withWatermark(eventTime, watermark)
       .groupBy(window(col(eventTime), windowLen), col("part"))
       .agg(Validate.verdictAggs(col("violations")).head,

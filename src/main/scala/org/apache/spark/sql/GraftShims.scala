@@ -4,7 +4,7 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 
 /** Minimal bridge to the `private[sql]` Column <-> Expression converters in
   * Spark 4 (`org.apache.spark.sql.classic.ExpressionUtils`) so the engine's
-  * native Catalyst expressions (e.g. `graft.plans.SpanInvariantPred`) can be
+  * native kernels (e.g. `graft.plans.SimHashOps.simhashExpr`) can be
   * exposed as user-facing `Column`s. Same mechanism Spark's own extensions
   * use; no Spark internals are modified.
   */

@@ -20,4 +20,20 @@ object SparkSpec {
 
 abstract class SparkSpec extends AnyFunSuite {
   lazy implicit val spark: SparkSession = SparkSpec.spark
+
+  /** Runs `body` as configured, then again on the interpreted path (no
+    * whole-stage codegen, no expression codegen), restoring both confs.
+    */
+  def onBothEvalPaths(body: => Unit): Unit = {
+    body
+    val interpreted = Seq("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
+    val saved = interpreted.map { case (k, _) => k -> spark.conf.getOption(k) }
+    interpreted.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 }

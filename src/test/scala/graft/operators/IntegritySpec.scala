@@ -151,9 +151,18 @@ class IntegritySpec extends SparkSpec {
     // the index side is a bare parquet read of precomputed
     // (band_idx, band_hash, id) rows. Re-banding the base corpus would put
     // the kernel back into this plan and drop the parquet relation.
+    // `bandHashes` also matches the `bandHashesFromHashes` kernel; the
+    // positive controls keep the zero count below from passing vacuously
+    val banding = "bandHashes".r
+    Seq(Dedup.lshBands(fresh, "doc_id", "text"),
+      Dedup.bandedFromSh(Dedup.shingleHashFrame(fresh, "doc_id", "text", 3), 32, 32))
+      .foreach { banded =>
+        val p = banded.queryExecution.analyzed.toString
+        assert(banding.findAllIn(p).nonEmpty, s"regex finds no banding kernel in:\n$p")
+      }
     val plan = Dedup.incrementalNearDups(fresh, idx, "doc_id", "text")
       .queryExecution.analyzed.toString
-    val kernels = "minhashbands|MinHashBands".r.findAllIn(plan).length
+    val kernels = banding.findAllIn(plan).length
     assert(kernels == 0, s"expected no banding kernels in the probe plan " +
       s"(new-batch bands are checkpointed, history never re-shingled), " +
       s"got $kernels:\n$plan")

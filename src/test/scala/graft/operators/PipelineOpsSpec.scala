@@ -78,7 +78,7 @@ class PipelineOpsSpec extends SparkSpec {
     assert(!pairs.exists(p => p._1 == 4L || p._2 == 4L))
   }
 
-  test("native SimHash64 expression is bit-identical to the HOF formulation") {
+  test("native SimHash64 expression is bit-identical to the HOF formulation") { onBothEvalPaths {
     val texts = (0 until 300).map(i =>
       (i.toLong, (0 until (i % 40)).map(w => s"w${(i * 7 + w) % 53}").mkString(" ")))
       .toDF("doc_id", "text")
@@ -87,7 +87,7 @@ class PipelineOpsSpec extends SparkSpec {
         Dedup.simHashHof(col("text")).as("hof"))
       .filter(col("native") =!= col("hof")).count()
     assert(mismatches == 0L)
-  }
+  }}
 
   test("simhash: identical texts distance 0; near-dup small; distinct large") {
     val sh = docs.select(col("doc_id"), Dedup.simHash(col("text")).as("sh"))
@@ -1122,7 +1122,7 @@ class PipelineOpsSpec extends SparkSpec {
     assert(sigs.values.forall(s => s >= 0 && s < (1L << 48)))
   }
 
-  test("native CosineSim is bit-identical to the HOF cosine") {
+  test("native CosineSim is bit-identical to the HOF cosine") { onBothEvalPaths {
     val pairs = Seq(
       (Seq(1.0, 2.0, 3.0), Seq(1.0, 2.0, 3.0)),   // identical
       (Seq(1.0, 0.0, 0.0), Seq(0.0, 1.0, 0.0)),   // orthogonal
@@ -1140,7 +1140,7 @@ class PipelineOpsSpec extends SparkSpec {
     }
     assert(out(4).isNullAt(0))
     assert(out(2).getDouble(0) == 0.0)
-  }
+  }}
 
   test("PSI trend: the shifted day drifts, a typical day does not") {
     val ev = spark.range(20000).select(
@@ -1243,12 +1243,12 @@ class PipelineOpsSpec extends SparkSpec {
     assert(rev == dis, s"asymmetric: $dis vs $rev")
   }
 
-  test("native MinHashBands expression is bit-identical to the HOF formulation") {
+  test("native MinHashBands expression is bit-identical to the HOF formulation") { onBothEvalPaths {
     import org.apache.spark.sql.GraftShims
     val corpus = docs.unionAll(Seq((6L, "one"), (7L, "two words"),
       (8L, "now three tokens")).toDF("doc_id", "text"))
     val native = corpus.select(col("doc_id"), GraftShims.column(
-      graft.plans.MinHashBands(GraftShims.expression(
+      graft.plans.MinHashOps.bandHashesExpr(GraftShims.expression(
         Dedup.normTokens(col("text"))), 3, 32, 16)).as("b"))
       .orderBy("doc_id").collect()
       .map(r => if (r.isNullAt(1)) null else r.getSeq[Long](1))
@@ -1260,9 +1260,9 @@ class PipelineOpsSpec extends SparkSpec {
     native.zip(hof).foreach { case (n, h) => assert(n == h, s"$n != $h") }
     // short docs (< k tokens) are null in BOTH formulations
     assert(native(5) == null && native(6) == null && native(7) != null)
-  }
+  }}
 
-  test("ShingleHashes + MinHashBandsFromHashes are bit-identical to the HOF/one-pass kernels") {
+  test("ShingleHashes + MinHashBandsFromHashes are bit-identical to the HOF/one-pass kernels") { onBothEvalPaths {
     import org.apache.spark.sql.GraftShims
     val corpus = docs.unionAll(Seq((6L, "one"), (7L, "two words"),
       (8L, "now three tokens"), (9L, "dup dup dup words dup"), (10L, ""))
@@ -1287,20 +1287,20 @@ class PipelineOpsSpec extends SparkSpec {
       }
       // (b) bands derived FROM the hash set = bands from the tokens
       val viaSh = corpus.select(col("doc_id"), GraftShims.column(
-        graft.plans.MinHashBandsFromHashes(GraftShims.expression(
+        graft.plans.MinHashOps.bandHashesFromHashesExpr(GraftShims.expression(
           Dedup.shingleHashesCol(col("text"), k)), 32, 16)).as("b"))
         .orderBy("doc_id").collect()
         .map(r => if (r.isNullAt(1)) null else r.getSeq[Long](1))
       val direct = corpus.select(col("doc_id"), GraftShims.column(
-        graft.plans.MinHashBands(GraftShims.expression(
+        graft.plans.MinHashOps.bandHashesExpr(GraftShims.expression(
           Dedup.normTokens(col("text"))), k, 32, 16)).as("b"))
         .orderBy("doc_id").collect()
         .map(r => if (r.isNullAt(1)) null else r.getSeq[Long](1))
       viaSh.zip(direct).foreach { case (a, b) => assert(a == b, s"k=$k: $a != $b") }
     }
-  }
+  }}
 
-  test("native QuantizeInt8 kernel is IEEE-identical to the HOF formulation") {
+  test("native QuantizeInt8 kernel is IEEE-identical to the HOF formulation") { onBothEvalPaths {
     val vecs = spark.range(40).select(col("id"),
       transform(sequence(lit(0), lit(7)),
         d => (sin(col("id") * 3 + d) * 2.5).cast("float")).as("vec"))
@@ -1314,14 +1314,14 @@ class PipelineOpsSpec extends SparkSpec {
       .map(r => (r.getDouble(1), r.getSeq[Int](2)))
     assert(native.length == hof.length)
     native.zip(hof).foreach { case (a, b) => assert(a == b, s"$a != $b") }
-  }
+  }}
 
-  test("native LshBuckets kernel matches lshBucket HOF and lshBucketScala per table") {
+  test("native LshBuckets kernel matches lshBucket HOF and lshBucketScala per table") { onBothEvalPaths {
     import org.apache.spark.sql.GraftShims
     val vecs = spark.range(50).select(col("id"),
       transform(sequence(lit(0), lit(15)),
         d => sin(col("id") * 7 + d).cast("double")).as("vec"))
-    val native = vecs.select(col("id"), GraftShims.column(graft.plans.LshBuckets(
+    val native = vecs.select(col("id"), GraftShims.column(graft.plans.LshBucketsOps.bucketsExpr(
         GraftShims.expression(col("vec")), 16, 6, 3)).as("b"))
       .orderBy("id").collect().map(_.getSeq[Long](1))
     val hof = vecs.select(col("id"), array((0 until 3).map(t =>
@@ -1334,9 +1334,9 @@ class PipelineOpsSpec extends SparkSpec {
       (0 until 3).foreach { t =>
         assert(bs(t) == Similarity.lshBucketScala(v, 6, t)) }
     }
-  }
+  }}
 
-  test("native PortableMinHashSig is bit-identical to the HOF formulation") {
+  test("native PortableMinHashSig is bit-identical to the HOF formulation") { onBothEvalPaths {
     val corpus = docs.unionAll(Seq((6L, "one"), (7L, "two words"),
       (8L, "now three tokens"), (9L, "dup dup dup words dup"))
       .toDF("doc_id", "text"))
@@ -1354,7 +1354,7 @@ class PipelineOpsSpec extends SparkSpec {
       // short docs (< k tokens) are null in BOTH formulations
       if (k == 3) assert(native(5) == null && native(6) == null && native(7) != null)
     }
-  }
+  }}
 
   test("contamination: probe shingle containment finds embedding docs only") {
     // probe = a 6-token benchmark item; doc 10 contains it verbatim,

@@ -29,6 +29,13 @@ class PlanSpec extends SparkSpec {
     val plan = planOf(Validate.withViolations(docs, rule)
       .withColumn("sv", SpanInvariant.predCol(col("spans"))))
     assert(!plan.contains("Exchange"), s"unexpected shuffle:\n$plan")
+    // the span kernel runs inside a whole-stage codegen stage (`*(n)`
+    // prefix), not as an interpreted UDF
+    val kernelLines = plan.linesIterator.filter(_.contains("SpanOps.holds")).toSeq
+    assert(kernelLines.nonEmpty &&
+      kernelLines.forall(_.matches("""^[\s:+\-]*\*\(\d+\) .*""")),
+      s"span kernel outside whole-stage codegen:\n$plan")
+    assert(!plan.contains("UDF"), s"unexpected UDF:\n$plan")
   }
 
   test("resume part-filter prunes partitions at the source") {

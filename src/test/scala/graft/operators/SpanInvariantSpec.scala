@@ -53,7 +53,7 @@ class SpanInvariantSpec extends SparkSpec {
     rows.foreach { case (id, p, v) => assert(p == v, s"doc $id: pred=$p violEmpty=$v") }
   }
 
-  test("native SpanInvariantPred expression agrees with the HOF predicate") {
+  test("native SpanInvariantPred expression agrees with the HOF predicate") { onBothEvalPaths {
     val dirty = DocsGen.docs(spark, DocsGen.Knobs(nDocs = 5000,
       badKindPerMille = 20, badMediaRefPerMille = 20, badOrderPerMille = 20,
       negOffsetPerMille = 10, nullDocIdPerMille = 5))
@@ -68,7 +68,7 @@ class SpanInvariantSpec extends SparkSpec {
     val m2 = edge.select(SpanInvariant.predCol($"spans").as("n"),
       SpanInvariant.predColHof($"spans").as("h")).filter($"n" =!= $"h").count()
     assert(m2 == 0)
-  }
+  }}
 
   test("generator: clean knobs yield zero violations; each knob injects its kind") {
     val clean = DocsGen.docs(spark, DocsGen.Knobs(nDocs = 500))

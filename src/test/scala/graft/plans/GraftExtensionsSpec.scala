@@ -4,7 +4,7 @@ import graft.SparkSpec
 import org.apache.spark.sql.{GraftShims, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** The SparkSessionExtensions injector: every native codegen expression is
+/** The SparkSessionExtensions injector: every native kernel is
   * callable from plain SQL in a session built with
   * `withExtensions(new GraftExtensions)` (the spark-submit
   * `--conf spark.sql.extensions=graft.plans.GraftExtensions` path), and
@@ -58,7 +58,7 @@ class GraftExtensionsSpec extends SparkSpec {
         "SELECT simhash64(array('alpha', 'beta', 'gamma'))").collect()(0)
         .getLong(0)
       val viaCol = s.range(1).select(
-        GraftShims.column(SimHash64(GraftShims.expression(toks))))
+        GraftShims.column(SimHashOps.simhashExpr(GraftShims.expression(toks))))
         .collect()(0).getLong(0)
       assert(viaSql == viaCol)
 

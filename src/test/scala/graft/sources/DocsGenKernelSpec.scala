@@ -3,7 +3,7 @@ package graft.sources
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-/** Bit-identity of the native [[graft.plans.DocsGenRow]] kernel against
+/** Bit-identity of the native [[graft.plans.DocsGenOps.row]] kernel against
   * the HOF generator it replaced: every knob channel active, several
   * knob mixes (including the exact i_validate / gen_validate / bench
   * configurations), compared row-by-row on rendered values.
@@ -20,7 +20,7 @@ class DocsGenKernelSpec extends SparkSpec {
       .collect()
       .map(r => (Option(r.get(0)), r.getInt(1), r.getString(2)))
 
-  test("native DocsGenRow is bit-identical to the HOF generator") {
+  test("native DocsGenRow is bit-identical to the HOF generator") { onBothEvalPaths {
     val knobSets = Seq(
       DocsGen.Knobs(nDocs = 4000), // all-clean
       // the bench corpus config (at reduced nDocs)
@@ -45,5 +45,5 @@ class DocsGenKernelSpec extends SparkSpec {
         assert(n == h, s"$k row $i: $n != $h")
       }
     }
-  }
+  }}
 }
