@@ -112,9 +112,10 @@ object QueryProfile {
       val (_, wall) = Bench.time {
         fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       }
+      // the listener bus is async: drain it before recording stops, so
+      // late job and stage events still count
+      org.apache.spark.sql.GraftShims.drainListenerBus(spark.sparkContext)
       recording = false
-      // listener bus is async — give it a moment to drain
-      Thread.sleep(300)
       println(f"== $n wall=$wall%.3f s, jobs=${jobs.size}")
       var prevEnd = 0L
       jobs.values.foreach { r =>

@@ -60,12 +60,6 @@ object SparkEntry {
     concat_ws("\u0001", col("doc_id"), col("text"),
       coalesce(col("lang"), lit("?")), col("n_chars"))
 
-  /** Unique memory-sink names for streaming queries (a query name can't be
-    * reused while its temp view exists; bench repeats run each query 3×).
-    * The PREVIOUS view of the same prefix is dropped on each new
-    * registration — a complete-mode memory sink holds its whole result on
-    * the driver, so letting repeats accumulate views leaks that memory.
-    */
   /** Total bytes under `path` (0 when absent) — the input-size signal the
     * streaming harnesses derive their state-partition count from.
     */
@@ -76,8 +70,8 @@ object SparkEntry {
   }
 
   /** Run a STREAMING query under a scale-adaptive shuffle/state-partition
-    * count: `ceil(inputBytes / graft.stream.statePartitionBytes)` (default
-    * 32 MiB per partition), clamped to [1, session shuffle partitions].
+    * count: `ceil(inputBytes / 32 MiB)`, clamped to [1, session shuffle
+    * partitions].
     *
     * Stateful streaming cannot use AQE partition coalescing, and the state
     * partition count is frozen into the checkpoint at query start — Spark's
@@ -94,8 +88,7 @@ object SparkEntry {
   private def withStreamPartitions[A](s: SparkSession, bytes: Long)(f: => A): A = {
     val key = "spark.sql.shuffle.partitions"
     val prev = s.conf.get(key)
-    val target = sys.props.getOrElse("graft.stream.statePartitionBytes",
-      (32L * 1024 * 1024).toString).toLong
+    val target = 32L * 1024 * 1024
     val p = math.max(1L, math.min(prev.toLong, (bytes + target - 1) / target))
     s.conf.set(key, p.toString)
     try f finally s.conf.set(key, prev)
@@ -104,6 +97,12 @@ object SparkEntry {
   private val streamSeq = new java.util.concurrent.atomic.AtomicLong(0)
   private val lastStreamView =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** Unique memory-sink names for streaming queries (a query name can't be
+    * reused while its temp view exists; bench repeats run each query 3×).
+    * The PREVIOUS view of the same prefix is dropped on each new
+    * registration — a complete-mode memory sink holds its whole result on
+    * the driver, so letting repeats accumulate views leaks that memory.
+    */
   private def streamViewName(s: SparkSession, prefix: String): String = {
     val name = s"${prefix}_${streamSeq.incrementAndGet()}"
     Option(lastStreamView.put(prefix, name))
@@ -759,7 +758,7 @@ object SparkEntry {
       // Drift.ksSketch stay as the adaptive/streaming forms, spec-tested).
       // BINNED form: O(1) cell assignment per row + one narrow groupBy,
       // instead of 2×101 conditional sums per row; statistic identical to
-      // the two-sided/two-filter forms (spec-asserted)
+      // the two-filter form Drift.ksFixedGrid (spec-asserted)
       Drift.ksFixedGridBinned(t(s, dir, "lineitem"), "l_extendedprice",
         col("l_returnflag") === "R", col("l_returnflag") === "N",
         0.0, 120000.0, 101)

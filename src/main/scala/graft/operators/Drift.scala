@@ -1,24 +1,76 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Distribution-drift checks (north rule: "KS/PSI over quantile sketches per
   * partition"). No reference analogue (single-document validator, SURVEY.md
   * §2.7) — this is table-level capability.
   *
-  * PSI: fixed equal-width bins over a closed range (via `width_bucket`),
-  * per-side `groupBy(bucket)` counts (map-side combined; bins ≤ a few
-  * hundred so the shuffle is negligible), epsilon-smoothed
-  * Σ (p−q)·ln(p/q). Deterministic and exactly reproducible at any scale.
+  * PSI: fixed equal-width bins over a closed range (clamped floor
+  * bucketing, `binOf`), per-side `groupBy(bucket)` counts (map-side
+  * combined; bins ≤ a few hundred so the shuffle is negligible),
+  * epsilon-smoothed Σ (p−q)·ln(p/q). Deterministic and exactly
+  * reproducible at any scale.
   *
   * KS: the two-sample statistic sup |F1(x) − F2(x)| evaluated on a quantile
   * grid obtained from `percentile_approx` (Greenwald-Khanna summaries —
   * mergeable across partitions, single pass per side). Grid evaluation of
   * the opposing CDF is one aggregation with #grid conditional-sum columns —
   * no sort, no collect of data rows.
+  *
+  * Each statistic is its own formula over shared cores: the two-sample
+  * counts (`twoSampleCounts`), the grid CDF (`ksOnGrid`) and the cell
+  * fold (`cumulativeCells`).
   */
 object Drift {
+
+  private def noRows(op: String, c: String, side: String): String =
+    s"$op: no non-null rows in column '$c' on side '$side'"
+
+  private def requireBins(op: String, lo: Double, hi: Double, bins: Int): Unit = {
+    require(hi > lo, s"$op: need hi > lo, got [$lo, $hi]")
+    require(bins >= 1, s"$op: need bins >= 1, got $bins")
+  }
+
+  /** Clamped floor bucketing (not width_bucket) so any engine reproduces
+    * the exact bucket ids — floor(((x-lo)/(hi-lo))*bins) clamped to
+    * [0, bins-1].
+    */
+  private def binOf(c: String, lo: Double, hi: Double, bins: Int): Column =
+    least(greatest(floor(((col(c).cast("double") - lit(lo)) / lit(hi - lo))
+      * lit(bins)), lit(0.0)), lit((bins - 1).toDouble)).cast("int")
+
+  /** The two-sample count core: one row per `key` value with both sides'
+    * counts (ca, cb) from the full-outer join of the two map-side-combined
+    * histograms over non-null `c`, and the side totals (na, nb) as windows
+    * over that key-sized join — no second scan of either input.
+    *
+    * An empty/all-null side must fail diagnosably: without the guard its
+    * ratios go null, greatest(null, eps) = eps, and identical
+    * distributions report the eps-saturated MAXIMUM drift instead of
+    * raising. The assert_true guard is woven into na and nb themselves, so
+    * every ratio built on them carries it and column pruning cannot drop
+    * it.
+    */
+  private def twoSampleCounts(a: DataFrame, b: DataFrame, c: String, key: Column,
+      op: String): DataFrame = {
+    def hist(df: DataFrame, side: String): DataFrame =
+      df.filter(col(c).isNotNull).groupBy(key.as("key"))
+        .agg(count(lit(1)).as(s"cnt_$side"))
+    val ta = sum(col("ca")).over()
+    val tb = sum(col("cb")).over()
+    val guard = coalesce(
+      assert_true(ta > 0, lit(noRows(op, c, "a"))),
+      assert_true(tb > 0, lit(noRows(op, c, "b"))))
+    hist(a, "a").join(hist(b, "b"), Seq("key"), "full_outer")
+      .select(col("key"),
+        coalesce(col("cnt_a"), lit(0L)).as("ca"),
+        coalesce(col("cnt_b"), lit(0L)).as("cb"))
+      .select(col("key"), col("ca"), col("cb"),
+        when(guard.isNull, ta).as("na"), when(guard.isNull, tb).as("nb"))
+  }
 
   /** Population Stability Index between `a` and `b` on numeric column `c`,
     * over `bins` equal-width bins spanning [lo, hi]. Returns a 1-row DF
@@ -26,38 +78,12 @@ object Drift {
     */
   def psi(a: DataFrame, b: DataFrame, c: String, lo: Double, hi: Double,
       bins: Int = 10): DataFrame = {
-    require(hi > lo, s"psi: need hi > lo, got [$lo, $hi]")
-    require(bins >= 1, s"psi: need bins >= 1, got $bins")
-    // clamped floor bucketing (not width_bucket) so any engine reproduces
-    // the exact bucket ids — floor(((x-lo)/(hi-lo))*bins) clamped to
-    // [0, bins-1]
-    def hist(df: DataFrame, side: String): DataFrame =
-      df.filter(col(c).isNotNull)
-        .select(least(greatest(floor(((col(c).cast("double") - lit(lo)) / lit(hi - lo))
-          * lit(bins)), lit(0.0)), lit((bins - 1).toDouble)).cast("int").as("bucket"))
-        .groupBy("bucket").agg(count(lit(1)).as(s"cnt_$side"))
-    val ha = hist(a, "a")
-    val hb = hist(b, "b")
+    requireBins("psi", lo, hi, bins)
     val eps = 1e-6
-    val joined = ha.join(hb, Seq("bucket"), "full_outer")
+    twoSampleCounts(a, b, c, binOf(c, lo, hi, bins), "psi")
       .select(
-        coalesce(col("cnt_a"), lit(0L)).as("ca"),
-        coalesce(col("cnt_b"), lit(0L)).as("cb"))
-    // an empty/all-null side must fail diagnosably — without the guard
-    // its ratios go null, greatest(null, eps) = eps, and identical
-    // distributions report the eps-saturated MAXIMUM drift instead of
-    // raising. assert_true is woven into p/q so column pruning cannot
-    // drop the check.
-    val guardA = assert_true(col("ta") > 0,
-      lit(s"psi: no non-null rows in column '$c' on side 'a'"))
-    val guardB = assert_true(col("tb") > 0,
-      lit(s"psi: no non-null rows in column '$c' on side 'b'"))
-    joined
-      .select(col("ca"), col("cb"),
-        sum(col("ca")).over().as("ta"), sum(col("cb")).over().as("tb"))
-      .select(
-        when(guardA.isNull, greatest(col("ca") / col("ta"), lit(eps))).as("p"),
-        when(guardB.isNull, greatest(col("cb") / col("tb"), lit(eps))).as("q"))
+        greatest(col("ca") / col("na"), lit(eps)).as("p"),
+        greatest(col("cb") / col("nb"), lit(eps)).as("q"))
       .agg(sum((col("p") - col("q")) * log(col("p") / col("q"))).as("psi"))
   }
 
@@ -72,29 +98,11 @@ object Drift {
     */
   def jsd(a: DataFrame, b: DataFrame, c: String, lo: Double, hi: Double,
       bins: Int = 10): DataFrame = {
-    require(hi > lo, s"jsd: need hi > lo, got [$lo, $hi]")
-    require(bins >= 1, s"jsd: need bins >= 1, got $bins")
-    def hist(df: DataFrame, side: String): DataFrame =
-      df.filter(col(c).isNotNull)
-        .select(least(greatest(floor(((col(c).cast("double") - lit(lo)) / lit(hi - lo))
-          * lit(bins)), lit(0.0)), lit((bins - 1).toDouble)).cast("int").as("bucket"))
-        .groupBy("bucket").agg(count(lit(1)).as(s"cnt_$side"))
-    val joined = hist(a, "a").join(hist(b, "b"), Seq("bucket"), "full_outer")
+    requireBins("jsd", lo, hi, bins)
+    twoSampleCounts(a, b, c, binOf(c, lo, hi, bins), "jsd")
       .select(
-        coalesce(col("cnt_a"), lit(0L)).as("ca"),
-        coalesce(col("cnt_b"), lit(0L)).as("cb"))
-    // same empty-side guard as [[psi]]: an all-null slice must raise, not
-    // report a silently-degenerate statistic
-    val guardA = assert_true(col("ta") > 0,
-      lit(s"jsd: no non-null rows in column '$c' on side 'a'"))
-    val guardB = assert_true(col("tb") > 0,
-      lit(s"jsd: no non-null rows in column '$c' on side 'b'"))
-    joined
-      .select(col("ca"), col("cb"),
-        sum(col("ca")).over().as("ta"), sum(col("cb")).over().as("tb"))
-      .select(
-        when(guardA.isNull, col("ca") / col("ta")).as("p"),
-        when(guardB.isNull, col("cb") / col("tb")).as("q"))
+        (col("ca") / col("na")).as("p"),
+        (col("cb") / col("nb")).as("q"))
       .select(
         (when(col("p") > 0,
           col("p") * log(lit(2.0) * col("p") / (col("p") + col("q"))))
@@ -103,6 +111,22 @@ object Drift {
             col("q") * log(lit(2.0) * col("q") / (col("p") + col("q"))))
             .otherwise(0.0)).as("t"))
       .agg((sum(col("t")) / lit(2.0)).as("jsd"))
+  }
+
+  /** The expected-count algebra both chi-square forms share: per key, the
+    * expected counts (ea, eb) under homogeneity and the key's χ² term.
+    * Expected counts are DOUBLE from the first multiply: a long
+    * (ca+cb)·na product overflows silently past ~3e9 rows per side.
+    */
+  private def chiSquareTerms(counts: DataFrame): DataFrame = {
+    def expected(n: String): Column =
+      (col("ca") + col("cb")).cast("double") * col(n) / (col("na") + col("nb"))
+    counts
+      .select(col("key"), col("ca"), col("cb"),
+        expected("na").as("ea"), expected("nb").as("eb"))
+      .withColumn("term",
+        (col("ca") - col("ea")) * (col("ca") - col("ea")) / col("ea") +
+          (col("cb") - col("eb")) * (col("cb") - col("eb")) / col("eb"))
   }
 
   /** Pearson chi-square two-sample HOMOGENEITY statistic between `a` and
@@ -120,33 +144,9 @@ object Drift {
     */
   def chiSquare(a: DataFrame, b: DataFrame, c: String, lo: Double, hi: Double,
       bins: Int = 10): DataFrame = {
-    require(hi > lo, s"chiSquare: need hi > lo, got [$lo, $hi]")
-    require(bins >= 1, s"chiSquare: need bins >= 1, got $bins")
-    def hist(df: DataFrame, side: String): DataFrame =
-      df.filter(col(c).isNotNull)
-        .select(least(greatest(floor(((col(c).cast("double") - lit(lo)) / lit(hi - lo))
-          * lit(bins)), lit(0.0)), lit((bins - 1).toDouble)).cast("int").as("bucket"))
-        .groupBy("bucket").agg(count(lit(1)).as(s"cnt_$side"))
-    val joined = hist(a, "a").join(hist(b, "b"), Seq("bucket"), "full_outer")
-      .select(
-        coalesce(col("cnt_a"), lit(0L)).as("ca"),
-        coalesce(col("cnt_b"), lit(0L)).as("cb"))
-    val guardA = assert_true(col("na") > 0,
-      lit(s"chiSquare: no non-null rows in column '$c' on side 'a'"))
-    val guardB = assert_true(col("nb") > 0,
-      lit(s"chiSquare: no non-null rows in column '$c' on side 'b'"))
-    joined
-      .select(col("ca"), col("cb"),
-        sum(col("ca")).over().as("na"), sum(col("cb")).over().as("nb"))
-      .select(col("ca"), col("cb"),
-        // expected counts in DOUBLE from the first multiply: a long
-        // (ca+cb)*na product overflows silently past ~3e9 rows per side
-        when(guardA.isNull,
-          (col("ca") + col("cb")).cast("double") * col("na") / (col("na") + col("nb"))).as("ea"),
-        when(guardB.isNull,
-          (col("ca") + col("cb")).cast("double") * col("nb") / (col("na") + col("nb"))).as("eb"))
-      .agg(sum((col("ca") - col("ea")) * (col("ca") - col("ea")) / col("ea") +
-        (col("cb") - col("eb")) * (col("cb") - col("eb")) / col("eb")).as("chi2"))
+    requireBins("chiSquare", lo, hi, bins)
+    chiSquareTerms(twoSampleCounts(a, b, c, binOf(c, lo, hi, bins), "chiSquare"))
+      .agg(sum(col("term")).as("chi2"))
   }
 
   /** Per-CATEGORY chi-square drill-down — WHICH value drifted: for every
@@ -155,52 +155,28 @@ object Drift {
     * total statistic, and its rank. [[chiSquare]] answers "did the
     * distribution move" with one number; a monitoring page needs the next
     * click — "the whole statistic is the `xx` bucket". Same expected-count
-    * algebra as the binned form (double from the first multiply — a long
-    * (ca+cb)·na product overflows past ~3e9 rows/side); per-category
-    * contributions rounded to 6 before ranking, rank ties broken by
-    * category name, so the report replays cross-engine.
+    * algebra as the binned form; per-category contributions rounded to 6
+    * before ranking, rank ties broken by category name, so the report
+    * replays cross-engine.
     *
     * Scale: two map-side-combined category histograms are the only corpus
     * scans; the join, totals windows and rank all run on the
     * category-count-sized summary.
     */
   def chiSquareByCategory(a: DataFrame, b: DataFrame, c: String): DataFrame = {
-    def hist(df: DataFrame, side: String): DataFrame =
-      df.filter(col(c).isNotNull)
-        .groupBy(col(c).as("category"))
-        .agg(count(lit(1)).as(s"cnt_$side"))
-    val joined = hist(a, "a").join(hist(b, "b"), Seq("category"), "full_outer")
-      .select(col("category"),
-        coalesce(col("cnt_a"), lit(0L)).as("ca"),
-        coalesce(col("cnt_b"), lit(0L)).as("cb"))
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(lit(1))
-    val guardA = assert_true(col("na") > 0,
-      lit(s"chiSquareByCategory: no non-null rows in '$c' on side 'a'"))
-    val guardB = assert_true(col("nb") > 0,
-      lit(s"chiSquareByCategory: no non-null rows in '$c' on side 'b'"))
-    val withTot = joined
-      .select(col("category"), col("ca"), col("cb"),
-        sum(col("ca")).over(w).as("na"), sum(col("cb")).over(w).as("nb"))
-      .select(col("category"), col("ca"), col("cb"),
-        when(guardA.isNull, (col("ca") + col("cb")).cast("double") *
-          col("na") / (col("na") + col("nb"))).as("ea"),
-        when(guardB.isNull, (col("ca") + col("cb")).cast("double") *
-          col("nb") / (col("na") + col("nb"))).as("eb"))
-      .select(col("category"), col("ca"), col("cb"),
+    val cells = chiSquareTerms(twoSampleCounts(a, b, c, col(c), "chiSquareByCategory"))
+      .select(col("key").as("category"), col("ca"), col("cb"),
         round(col("ea"), 4).as("expected_a"),
         round(col("eb"), 4).as("expected_b"),
-        round((col("ca") - col("ea")) * (col("ca") - col("ea")) / col("ea")
-          + (col("cb") - col("eb")) * (col("cb") - col("eb")) / col("eb"),
-          6).as("contribution"))
-    val wr = org.apache.spark.sql.expressions.Window
-      .orderBy(col("contribution").desc, col("category"))
-    val tot = sum(col("contribution")).over(w)
-    withTot.select(col("category"), col("ca"), col("cb"),
+        round(col("term"), 6).as("contribution"))
+    val tot = sum(col("contribution")).over()
+    cells.select(col("category"), col("ca"), col("cb"),
       col("expected_a"), col("expected_b"), col("contribution"),
       // identical distributions: total contribution 0 -> null shares
       // (ANSI division would throw), ranks still deterministic
       when(tot > 0, round(col("contribution") / tot, 6)).as("stat_share"),
-      row_number().over(wr).as("drift_rank"))
+      row_number().over(Window.orderBy(col("contribution").desc, col("category")))
+        .as("drift_rank"))
   }
 
   /** PSI OVER TIME: one row per event-time day with that day's PSI against
@@ -213,30 +189,55 @@ object Drift {
     */
   def psiTrend(df: DataFrame, c: String, tsCol: String,
       lo: Double, hi: Double, bins: Int = 10): DataFrame = {
-    require(hi > lo, s"psiTrend: need hi > lo, got [$lo, $hi]")
-    require(bins >= 1, s"psiTrend: need bins >= 1, got $bins")
+    requireBins("psiTrend", lo, hi, bins)
     val eps = 1e-6
-    val bucket = least(greatest(floor(((col(c).cast("double") - lit(lo)) /
-      lit(hi - lo)) * lit(bins)), lit(0.0)), lit((bins - 1).toDouble)).cast("int")
     val counts = df.filter(col(c).isNotNull && col(tsCol).isNotNull)
-      .groupBy(date_trunc("day", col(tsCol)).as("d"), bucket.as("bucket"))
+      .groupBy(date_trunc("day", col(tsCol)).as("d"), binOf(c, lo, hi, bins).as("bucket"))
       .agg(count(lit(1)).as("cnt"))
     val days = counts.select("d").distinct()
     val gb = counts.groupBy("bucket").agg(sum("cnt").as("g_cnt"))
     val filled = days.crossJoin(gb)
       .join(counts, Seq("d", "bucket"), "left")
       .withColumn("cnt", coalesce(col("cnt"), lit(0L)))
-    val w = org.apache.spark.sql.expressions.Window.partitionBy("d")
+    val w = Window.partitionBy("d")
     filled
       .withColumn("dt", sum("cnt").over(w))
-      .withColumn("gt", sum("g_cnt").over(
-        org.apache.spark.sql.expressions.Window.partitionBy("d")))
+      .withColumn("gt", sum("g_cnt").over(w))
       .select(col("d"),
         greatest(col("cnt") / col("dt"), lit(eps)).as("p"),
         greatest(col("g_cnt") / col("gt"), lit(eps)).as("q"))
       .groupBy("d")
       .agg(sum((col("p") - col("q")) * log(col("p") / col("q"))).as("psi"))
       .select(date_format(col("d"), "yyyy-MM-dd").as("day"), col("psi"))
+  }
+
+  private def statDf(spark: SparkSession, name: String, v: Double): DataFrame = {
+    import spark.implicits._
+    Seq(v).toDF(name)
+  }
+
+  /** The grid CDF shared by [[ks]] and [[ksFixedGrid]]: per side, one
+    * aggregation with a conditional count per grid point plus the
+    * non-null count; the CDF ratios and the sup gap are taken on the
+    * driver (the same long/long double division Spark would do, without
+    * an ANSI divide-by-zero on an all-null side).
+    */
+  private def ksOnGrid(a: DataFrame, b: DataFrame, c: String, grid: Seq[Double],
+      op: String): DataFrame = {
+    def cdfAt(df: DataFrame, side: String): Seq[Double] = {
+      val aggs = grid.map(g =>
+        sum(when(col(c).cast("double") <= lit(g), 1L).otherwise(0L))) :+
+        count(when(col(c).isNotNull, 1))
+      val r = df.agg(aggs.head, aggs.tail: _*).collect()(0)
+      val n = r.getLong(grid.length)
+      // a zero-row side has no CDF — fail diagnosably, not with an NPE
+      // from Row.getLong
+      require(n > 0, noRows(op, c, side))
+      grid.indices.map(i => r.getLong(i).toDouble / n)
+    }
+    val fa = cdfAt(a, "a")
+    val fb = cdfAt(b, "b")
+    statDf(a.sparkSession, "ks", grid.indices.map(i => math.abs(fa(i) - fb(i))).max)
   }
 
   /** Two-sample KS statistic on numeric column `c` between `a` and `b`,
@@ -255,27 +256,7 @@ object Drift {
       .collect()(0)
     require(!gridRow.isNullAt(0),
       s"ks: no non-null rows in column '$c' on either side")
-    val grid: Array[Double] = gridRow.getSeq[Double](0).toArray
-
-    def cdfAt(df: DataFrame, side: String): Array[Double] = {
-      val n = count(when(col(c).isNotNull, 1))
-      val sums: Seq[Column] = grid.zipWithIndex.map { case (g, i) =>
-        (sum(when(col(c).cast("double") <= lit(g), 1L).otherwise(0L)) / n).as(s"f$i")
-      }.toSeq
-      val r = df.agg((sums :+ n.as("_n")).head, (sums :+ n.as("_n")).tail: _*)
-        .collect()(0)
-      // a zero-row side makes every ratio null — fail diagnosably, not
-      // with an NPE from Row.getDouble (same guard as ksFixedGrid)
-      require(r.getLong(grid.length) > 0,
-        s"ks: no non-null rows in column '$c' on side '$side'")
-      grid.indices.map(i => r.getDouble(i)).toArray
-    }
-    val fa = cdfAt(a, "a")
-    val fb = cdfAt(b, "b")
-    val ksStat = grid.indices.map(i => math.abs(fa(i) - fb(i))).max
-    val spark = a.sparkSession
-    import spark.implicits._
-    Seq(ksStat).toDF("ks")
+    ksOnGrid(a, b, c, gridRow.getSeq[Double](0), "ks")
   }
 
   /** Two-sample KS on a FIXED equal-width grid spanning [lo, hi]: exactly
@@ -289,38 +270,23 @@ object Drift {
   def ksFixedGrid(a: DataFrame, b: DataFrame, c: String, lo: Double, hi: Double,
       gridSize: Int = 101): DataFrame = {
     require(gridSize >= 2, s"ksFixedGrid: gridSize must be >= 2, got $gridSize")
-    val grid = (0 until gridSize).map(i => lo + i * (hi - lo) / (gridSize - 1))
-    def cdfAt(df: DataFrame, side: String): Array[Double] = {
-      val n = count(when(col(c).isNotNull, 1))
-      val sums: Seq[Column] = grid.zipWithIndex.map { case (g, i) =>
-        (sum(when(col(c).cast("double") <= lit(g), 1L).otherwise(0L)) / n).as(s"f$i")
-      }
-      val r = df.agg((sums :+ n.as("_n")).head, (sums :+ n.as("_n")).tail: _*)
-        .collect()(0)
-      // zero non-null rows makes every ratio null — a misconfigured slice
-      // must fail diagnosably, not NPE inside Row.getDouble
-      require(r.getLong(gridSize) > 0,
-        s"ksFixedGrid: no non-null rows in column '$c' on side '$side'")
-      grid.indices.map(i => r.getDouble(i)).toArray
-    }
-    val fa = cdfAt(a, "a")
-    val fb = cdfAt(b, "b")
-    val ksStat = grid.indices.map(i => math.abs(fa(i) - fb(i))).max
-    val spark = a.sparkSession
-    import spark.implicits._
-    Seq(ksStat).toDF("ks")
+    ksOnGrid(a, b, c,
+      (0 until gridSize).map(i => lo + i * (hi - lo) / (gridSize - 1)), "ksFixedGrid")
   }
 
-  /** The SCALE form of the fixed-grid KS: instead of `gridSize`
-    * conditional sums evaluated per row (O(grid) per row — the two-sided
-    * form's per-row cost), each row is assigned its grid CELL in O(1)
-    * (`ceil((x-lo)/step)` clamped; null for x > hi — beyond every grid
-    * point, so it counts only in the denominator), the cells are counted
-    * with one map-side-combined groupBy (≤ gridSize+1 groups), and the
-    * two CDFs are cumulative sums over that tiny result on the driver.
+  /** The SCALE form of the fixed-grid KS when both samples are SLICES OF
+    * THE SAME SOURCE (predA/predB over one table — the common drift shape
+    * "this week vs last week of the same fact table"): instead of
+    * `gridSize` conditional sums evaluated per row (O(grid) per row —
+    * [[ksFixedGrid]]'s per-row cost), each row is assigned its grid CELL
+    * in O(1) (`ceil((x-lo)/step)` clamped; null for x > hi — beyond every
+    * grid point, so it counts only in the denominator), the cells are
+    * counted with one map-side-combined groupBy (≤ gridSize+1 groups), and
+    * the two CDFs are cumulative sums over that tiny result on the driver.
     * One scan, one narrow shuffle of ≤ (gridSize+1) rows per partition.
     *
-    * Statistic: identical to [[ksFixedGridTwoSided]] whenever
+    * Statistic: identical to
+    * `ksFixedGrid(df.filter(predA), df.filter(predB), ...)` whenever
     * `ceil((x-lo)/step)` agrees with the `x <= g_i` comparisons — i.e.
     * always, except for x within one double ulp of a grid point where the
     * division rounds across the integer (impossible for fixed-decimal
@@ -356,15 +322,33 @@ object Drift {
         sum(when(predB, 1L).otherwise(0L)).as("cb"))
   }
 
+  private def cellsOf(rows: Array[Row]): Seq[(Option[Int], Long, Long)] =
+    rows.toSeq.map(r =>
+      (if (r.isNullAt(0)) None else Some(r.getInt(0)), r.getLong(1), r.getLong(2)))
+
+  /** The cell fold shared by the binned KS and EMD: (cell, ca, cb) counts
+    * become each side's cumulative count at every grid point, plus the
+    * side totals (na, nb). cell = None is the x > hi mass, which counts in
+    * the totals only.
+    */
+  private def cumulativeCells(cells: Iterable[(Option[Int], Long, Long)],
+      gridSize: Int, op: String): (Array[Long], Array[Long], Long, Long) = {
+    val na = cells.iterator.map(_._2).sum
+    val nb = cells.iterator.map(_._3).sum
+    require(na > 0, s"$op: no rows on side 'a'")
+    require(nb > 0, s"$op: no rows on side 'b'")
+    val binA = new Array[Long](gridSize)
+    val binB = new Array[Long](gridSize)
+    cells.foreach { case (cell, ca, cb) =>
+      cell.foreach { i => binA(i) += ca; binB(i) += cb }
+    }
+    (binA.scanLeft(0L)(_ + _).tail, binB.scanLeft(0L)(_ + _).tail, na, nb)
+  }
+
   /** Fold collected (cell, ca, cb) rows into the grid-KS statistic. */
   def ksFromCellCounts(spark: SparkSession, rows: Array[Row],
-      gridSize: Int): DataFrame = {
-    val ks = ksValueFromCells(rows.toSeq.map(r =>
-      (if (r.isNullAt(0)) None else Some(r.getInt(0)),
-        r.getLong(1), r.getLong(2))), gridSize)
-    import spark.implicits._
-    Seq(ks).toDF("ks")
-  }
+      gridSize: Int): DataFrame =
+    statDf(spark, "ks", ksValueFromCells(cellsOf(rows), gridSize))
 
   /** Value-level twin of [[ksFromCellCounts]] for callers that hold the
     * grid state themselves (the incremental streaming monitor merges
@@ -374,22 +358,9 @@ object Drift {
     */
   def ksValueFromCells(cells: Iterable[(Option[Int], Long, Long)],
       gridSize: Int): Double = {
-    val na = cells.iterator.map(_._2).sum
-    val nb = cells.iterator.map(_._3).sum
-    require(na > 0, "ksFromCellCounts: no rows on side 'a'")
-    require(nb > 0, "ksFromCellCounts: no rows on side 'b'")
-    val binA = new Array[Long](gridSize)
-    val binB = new Array[Long](gridSize)
-    cells.foreach { case (cell, ca, cb) =>
-      cell.foreach { i => binA(i) += ca; binB(i) += cb }
-    }
-    var (cumA, cumB, ksStat) = (0L, 0L, 0.0)
-    (0 until gridSize).foreach { i =>
-      cumA += binA(i); cumB += binB(i)
-      ksStat = math.max(ksStat,
-        math.abs(cumA.toDouble / na - cumB.toDouble / nb))
-    }
-    ksStat
+    val (cumA, cumB, na, nb) = cumulativeCells(cells, gridSize, "ksFromCellCounts")
+    (0 until gridSize).map(i =>
+      math.abs(cumA(i).toDouble / na - cumB(i).toDouble / nb)).max
   }
 
   /** Binned 1-D Wasserstein-1 (earth-mover) distance between two slices
@@ -420,63 +391,12 @@ object Drift {
   /** Fold collected (cell, ca, cb) rows into the binned W1 statistic. */
   def emdFromCellCounts(spark: SparkSession, rows: Array[Row],
       lo: Double, hi: Double, gridSize: Int): DataFrame = {
-    val na = rows.map(_.getLong(1)).sum
-    val nb = rows.map(_.getLong(2)).sum
-    require(na > 0, "emdFromCellCounts: no rows on side 'a'")
-    require(nb > 0, "emdFromCellCounts: no rows on side 'b'")
-    val binA = new Array[Long](gridSize)
-    val binB = new Array[Long](gridSize)
-    rows.foreach { r =>
-      if (!r.isNullAt(0)) {
-        binA(r.getInt(0)) += r.getLong(1)
-        binB(r.getInt(0)) += r.getLong(2)
-      }
-    }
+    val (cumA, cumB, na, nb) = cumulativeCells(cellsOf(rows), gridSize, "emdFromCellCounts")
     val step = (hi - lo) / (gridSize - 1)
-    var (cumA, cumB) = (0L, 0L)
-    var s = BigInt(0)
     // the last grid point carries no interval to its right — exclude it
-    (0 until gridSize - 1).foreach { i =>
-      cumA += binA(i); cumB += binB(i)
-      s += (BigInt(cumA) * nb - BigInt(cumB) * na).abs
-    }
-    val emd = s.toDouble * step / (na.toDouble * nb.toDouble)
-    import spark.implicits._
-    Seq(emd).toDF("emd")
-  }
-
-  /** [[ksFixedGrid]] when both samples are SLICES OF THE SAME SOURCE
-    * (predA/predB over one table — the common drift shape "this week vs
-    * last week of the same fact table"): both CDFs come from ONE
-    * aggregation pass over one scan, instead of two scans of the shared
-    * parquet. Counts (and therefore the statistic) are identical to
-    * `ksFixedGrid(df.filter(predA), df.filter(predB), ...)` — the per-cell
-    * ratios divide the same longs in double arithmetic either way.
-    */
-  def ksFixedGridTwoSided(df: DataFrame, c: String, predA: Column, predB: Column,
-      lo: Double, hi: Double, gridSize: Int = 101): DataFrame = {
-    require(gridSize >= 2, s"ksFixedGridTwoSided: gridSize must be >= 2, got $gridSize")
-    val grid = (0 until gridSize).map(i => lo + i * (hi - lo) / (gridSize - 1))
-    val x = col(c).cast("double")
-    val nn = col(c).isNotNull
-    def sums(p: Column, tag: String): Seq[Column] = grid.zipWithIndex.map {
-      case (g, i) =>
-        sum(when(p && nn && x <= lit(g), 1L).otherwise(0L)).as(s"$tag$i")
-    }
-    val aggs = sums(predA, "a") ++ sums(predB, "b") ++ Seq(
-      count(when(predA && nn, 1)).as("_na"),
-      count(when(predB && nn, 1)).as("_nb"))
-    val r = df.agg(aggs.head, aggs.tail: _*).collect()(0)
-    val na = r.getLong(2 * gridSize)
-    val nb = r.getLong(2 * gridSize + 1)
-    require(na > 0, s"ksFixedGridTwoSided: no non-null rows in '$c' on side 'a'")
-    require(nb > 0, s"ksFixedGridTwoSided: no non-null rows in '$c' on side 'b'")
-    val ksStat = (0 until gridSize).map { i =>
-      math.abs(r.getLong(i).toDouble / na - r.getLong(gridSize + i).toDouble / nb)
-    }.max
-    val spark = df.sparkSession
-    import spark.implicits._
-    Seq(ksStat).toDF("ks")
+    val s = (0 until gridSize - 1)
+      .map(i => (BigInt(cumA(i)) * nb - BigInt(cumB(i)) * na).abs).sum
+    statDf(spark, "emd", s.toDouble * step / (na.toDouble * nb.toDouble))
   }
 
   /** KS via mergeable KLL sketches (custom TypedImperativeAggregate,
@@ -526,8 +446,7 @@ object Drift {
         .agg(count(lit(1)).as(cnt))
         .orderBy(col(cnt).desc, col("key")).limit(k)
       byCount.withColumn(s"rank_$side", row_number().over(
-        org.apache.spark.sql.expressions.Window
-          .orderBy(col(cnt).desc, col("key"))))
+        Window.orderBy(col(cnt).desc, col("key"))))
     }
     top(a, "a").join(top(b, "b"), Seq("key"), "full_outer")
       .select(col("key"), col("rank_a"), col("rank_b"),
@@ -565,7 +484,7 @@ object Drift {
     val cb = b.groupBy(col(keyCol).as("_value2"))
       .agg(count(lit(1)).as("n_v2"))
     val joined = ca.join(cb, col("value") <=> col("_value2"), "full_outer")
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(lit(1))
+    val w = Window.partitionBy(lit(1))
     // totals window over the domain-sized join result — no second scan of
     // either input; guards keep an empty side share-null, never a
     // divide-by-zero (ANSI mode throws)

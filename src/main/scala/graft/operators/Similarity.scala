@@ -68,18 +68,6 @@ object Similarity {
       .orderBy(col("cosine").desc, col("id"))
       .limit(k)
 
-  /** Sign-bit LSH signature of a vector for one hash table: a `nPlanes`-bit
-    * bucket id (long).
-    *
-    * The hyperplane components are DATA-INDEPENDENT pseudo-random constants
-    * (xxhash64 of (table, plane, dim) — see [[planeComponentScala]]), so
-    * they're computed once on the driver and folded into the plan as a
-    * literal nPlanes×dims matrix. The executor does pure multiply-adds —
-    * the previous formulation re-derived every component with a per-element
-    * xxhash64 call inside the HOF lambda (nTables×nPlanes×dims hashes per
-    * ROW; BENCH r2 flagged the 2× regression). Same accumulation order, so
-    * buckets stay bit-identical to [[lshBucketScala]].
-    */
   /** All `nTables` bucket ids in ONE native kernel pass
     * ([[graft.plans.LshBucketsOps.buckets]] — element t = [[lshBucket]] for table t,
     * bit-identical; PipelineOpsSpec cross-checks). The HOF per-table form
@@ -95,6 +83,18 @@ object Similarity {
       GraftShims.expression(vec), dims, nPlanes, nTables)))
   }
 
+  /** Sign-bit LSH signature of a vector for one hash table: a `nPlanes`-bit
+    * bucket id (long).
+    *
+    * The hyperplane components are DATA-INDEPENDENT pseudo-random constants
+    * (xxhash64 of (table, plane, dim) — see [[planeComponentScala]]), so
+    * they're computed once on the driver and folded into the plan as a
+    * literal nPlanes×dims matrix. The executor does pure multiply-adds —
+    * the previous formulation re-derived every component with a per-element
+    * xxhash64 call inside the HOF lambda (nTables×nPlanes×dims hashes per
+    * ROW; BENCH r2 flagged the 2× regression). Same accumulation order, so
+    * buckets stay bit-identical to [[lshBucketScala]].
+    */
   def lshBucket(vec: Column, dims: Int, nPlanes: Int, table: Int): Column = {
     val m: Seq[Seq[Double]] = (0 until nPlanes).map(p =>
       (0 until dims).map(d => planeComponentScala(table, p, d)))

@@ -90,12 +90,14 @@ object Kll {
   }
 
   /** Two-sample KS statistic from two sketches: max CDF gap over the merged
-    * quantile grid (rank queries on both sketches).
+    * quantile grid (rank queries on both sketches). An empty sketch (zero
+    * non-null rows) has no CDF, so it raises rather than read as "no drift".
     */
   def ks(a: Array[Byte], b: Array[Byte], gridSize: Int = 201): Double = {
     val sa = deserialize(a)
     val sb = deserialize(b)
-    if (sa.isEmpty || sb.isEmpty) return 0.0
+    require(!sa.isEmpty, "Kll.ks: no non-null rows on side 'a' (empty sketch)")
+    require(!sb.isEmpty, "Kll.ks: no non-null rows on side 'b' (empty sketch)")
     val probs = (0 until gridSize).map(i => i.toDouble / (gridSize - 1))
     val grid = (probs.map(sa.getQuantile) ++ probs.map(sb.getQuantile)).distinct.sorted
     grid.map(x => math.abs(sa.getRank(x) - sb.getRank(x))).max

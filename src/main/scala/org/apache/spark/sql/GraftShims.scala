@@ -11,4 +11,11 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 object GraftShims {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
+
+  /** Blocks until the async listener bus has delivered every queued event
+    * (`SparkContext.listenerBus` is `private[spark]`), so a listener's
+    * counters are complete when read.
+    */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }

@@ -36,4 +36,13 @@ abstract class SparkSpec extends AnyFunSuite {
       case (k, None) => spark.conf.unset(k)
     }
   }
+
+  /** The message `body` fails with, including its causes' messages: a
+    * task-side error reaches the driver wrapped in a job-abort exception.
+    */
+  def failureOf(body: => Any): String = {
+    val e = intercept[Exception](body)
+    Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(_.getMessage).mkString("\n")
+  }
 }

@@ -686,6 +686,12 @@ class PipelineOpsSpec extends SparkSpec {
     val ksSame = Drift.ks(a, a, "x").collect()(0).getDouble(0)
     val ksDiff = Drift.ks(a, b, "x").collect()(0).getDouble(0)
     assert(ksSame < 0.01 && ksDiff > 0.4, s"ksSame=$ksSame ksDiff=$ksDiff")
+    // an all-null side raises, naming the operator and the side
+    val nulls = b.select(lit(null).cast("double").as("x"))
+    val psiErr = failureOf(Drift.psi(a, nulls, "x", 0, 200, 20).collect())
+    assert(psiErr.contains("psi: no non-null rows in column 'x' on side 'b'"), psiErr)
+    val ksErr = failureOf(Drift.ks(a, nulls, "x").collect())
+    assert(ksErr.contains("ks: no non-null rows in column 'x' on side 'b'"), ksErr)
   }
 
   test("ref integrity: anti-join finds exactly the dangling refs") {
@@ -1164,23 +1170,19 @@ class PipelineOpsSpec extends SparkSpec {
       (col("id") % 2 === 0).as("isA"),
       (pmod(xxhash64(col("id")), lit(1000L)).cast("double") +
         when(col("id") % 2 === 0, 0.0).otherwise(200.0)).as("v"))
-    val two = Drift.ksFixedGridTwoSided(df, "v", col("isA"), !col("isA"),
-      0.0, 1200.0, 51).collect()(0).getDouble(0)
-    val sep = Drift.ksFixedGrid(df.filter(col("isA")), df.filter(!col("isA")),
-      "v", 0.0, 1200.0, 51).collect()(0).getDouble(0)
-    assert(two == sep, s"two-sided=$two separate=$sep")
-    assert(two > 0.1) // the +200 shift is a real drift signal
-    // the binned (O(1)-per-row) form computes the SAME statistic — incl.
-    // values exactly ON grid points (v is integral, step 24.0 / 22.0) and,
-    // at hi=1100, values ABOVE hi (count in n, land in no cell)
-    val binned = Drift.ksFixedGridBinned(df, "v", col("isA"), !col("isA"),
-      0.0, 1200.0, 51).collect()(0).getDouble(0)
-    assert(binned == two, s"binned=$binned two-sided=$two")
-    val two1100 = Drift.ksFixedGridTwoSided(df, "v", col("isA"), !col("isA"),
-      0.0, 1100.0, 51).collect()(0).getDouble(0)
-    val bin1100 = Drift.ksFixedGridBinned(df, "v", col("isA"), !col("isA"),
-      0.0, 1100.0, 51).collect()(0).getDouble(0)
-    assert(bin1100 == two1100, s"binned=$bin1100 two-sided=$two1100")
+    def sep(hi: Double) = Drift.ksFixedGrid(df.filter(col("isA")),
+      df.filter(!col("isA")), "v", 0.0, hi, 51).collect()(0).getDouble(0)
+    def binned(hi: Double) = Drift.ksFixedGridBinned(df, "v", col("isA"),
+      !col("isA"), 0.0, hi, 51).collect()(0).getDouble(0)
+    // the one-scan two-sided (binned, O(1)-per-row) form computes the SAME
+    // statistic as the two-filter form — incl. values exactly ON grid
+    // points (v is integral, step 24.0 / 22.0) and, at hi=1100, values
+    // ABOVE hi (count in n, land in no cell)
+    val (bin1200, two1200) = (binned(1200.0), sep(1200.0))
+    assert(bin1200 == two1200, s"binned=$bin1200 two-filter=$two1200")
+    assert(bin1200 > 0.1) // the +200 shift is a real drift signal
+    val (bin1100, two1100) = (binned(1100.0), sep(1100.0))
+    assert(bin1100 == two1100, s"binned=$bin1100 two-filter=$two1100")
   }
 
   test("binned EMD: exact hand value, zero for identical, scales with shift") {
@@ -1208,6 +1210,11 @@ class PipelineOpsSpec extends SparkSpec {
     val ksFar = Drift.ksFixedGridBinned(far, "v", col("isA"), !col("isA"),
       0.0, 10.0, 11).collect()(0).getDouble(0)
     assert(ksNear == 1.0 && ksFar == 1.0, "KS saturates on disjoint supports")
+    // an all-null side raises, naming the operator and the side
+    val nullB = df.select(when(col("isA"), col("v")).as("v"), col("isA"))
+    val err = failureOf(Drift.emdFixedGridBinned(nullB, "v", col("isA"),
+      !col("isA"), 0.0, 10.0, 11).collect())
+    assert(err.contains("emdFromCellCounts: no rows on side 'b'"), err)
   }
 
   test("JSD: zero on identical, ln 2 on disjoint support, no eps saturation") {
@@ -1225,6 +1232,10 @@ class PipelineOpsSpec extends SparkSpec {
     // symmetric
     val rev = Drift.jsd(b, a, "v", 0.0, 10.0, 10).collect()(0).getDouble(0)
     assert(rev == dis, s"asymmetric: $dis vs $rev")
+    // an all-null side raises, naming the operator and the side
+    val err = failureOf(Drift.jsd(a, b.select(lit(null).cast("double").as("v")),
+      "v", 0.0, 10.0, 10).collect())
+    assert(err.contains("jsd: no non-null rows in column 'v' on side 'b'"), err)
   }
 
   test("chi-square homogeneity: zero on identical, N on disjoint, symmetric") {
@@ -1241,6 +1252,10 @@ class PipelineOpsSpec extends SparkSpec {
     assert(dis == 6.0, s"expected N=6 for disjoint supports, got $dis")
     val rev = Drift.chiSquare(b, a, "v", 0.0, 10.0, 10).collect()(0).getDouble(0)
     assert(rev == dis, s"asymmetric: $dis vs $rev")
+    // an all-null side raises, naming the operator and the side
+    val err = failureOf(Drift.chiSquare(a,
+      b.select(lit(null).cast("double").as("v")), "v", 0.0, 10.0, 10).collect())
+    assert(err.contains("chiSquare: no non-null rows in column 'v' on side 'b'"), err)
   }
 
   test("native MinHashBands expression is bit-identical to the HOF formulation") { onBothEvalPaths {

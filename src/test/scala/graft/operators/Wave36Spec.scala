@@ -36,6 +36,11 @@ class Wave36Spec extends SparkSpec {
     val same = Drift.chiSquareByCategory(a, a, "c").collect()
     assert(same.forall(r => r.getDouble(5) == 0.0 && r.isNullAt(6)),
       same.mkString(","))
+    // an all-null side raises, naming the operator and the side
+    val err = failureOf(Drift.chiSquareByCategory(a,
+      b.select(lit(null).cast("string").as("c")), "c").collect())
+    assert(err.contains(
+      "chiSquareByCategory: no non-null rows in column 'c' on side 'b'"), err)
   }
 
   test("ruleStability: always-fires and silent rules pin spread = 0; a " +

@@ -40,5 +40,9 @@ class KllSketchAggSpec extends SparkSpec {
     val same = Drift.ksSketch(a, a, "x")
     val diff = Drift.ksSketch(a, b, "x")
     assert(same < 0.02 && diff > 0.4, s"same=$same diff=$diff")
+    // an all-null side is an empty sketch: it raises, naming the side,
+    // instead of reading as "no drift"
+    val err = failureOf(Drift.ksSketch(a, b.select(lit(null).cast("double").as("x")), "x"))
+    assert(err.contains("no non-null rows on side 'b'"), err)
   }
 }
