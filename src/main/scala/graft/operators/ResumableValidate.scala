@@ -2,7 +2,11 @@ package graft.operators
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.Project
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.{IntegerType, StringType, StructType}
 import graft.rules.Rule
 import graft.sources.CommitLog
 
@@ -59,6 +63,42 @@ object ResumableValidate {
   /** Commit-sketch key for a user-named drift column (`--drift-col`). */
   def kllColKey(c: String): String = s"kll_col_$c"
 
+  /** The violation rows [[run]] writes (partitioned by `part`, so `part` is
+    * a directory name, not a file column) and [[violations]] reads back.
+    */
+  val ViolationSchema: StructType = new StructType()
+    .add("doc_id", StringType).add("path", StringType)
+    .add("rule", StringType).add("message", StringType)
+    .add("part", IntegerType)
+
+  /** The parts of `docs` from its file listing, when `docs` is a plain file
+    * scan, optionally under a `Project`, whose output `part` IS the scan's
+    * integer partition attribute (same exprId: a column renamed to `part`
+    * does not qualify). The listing is the file index the scan already
+    * built, so this costs no Spark job and no extra file-system call.
+    * None for any other plan, or when a listed `part` value is null.
+    */
+  private def listedParts(docs: DataFrame): Option[Seq[Int]] = {
+    val plan = docs.queryExecution.optimizedPlan
+    val scan = plan match {
+      case Project(_, l: LogicalRelation) => Some(l)
+      case l: LogicalRelation => Some(l)
+      case _ => None
+    }
+    val resolver = SQLConf.get.resolver
+    for {
+      l <- scan
+      fsRel <- Some(l.relation).collect { case r: HadoopFsRelation => r }
+      i = fsRel.partitionSchema.fieldNames.indexWhere(resolver(_, "part"))
+      if i >= 0 && fsRel.partitionSchema(i).dataType == IntegerType
+      scanPart <- l.output.find(a => resolver(a.name, "part"))
+      outPart <- plan.output.find(a => resolver(a.name, "part"))
+      if outPart.exprId == scanPart.exprId
+      dirs = fsRel.location.listFiles(Nil, Nil)
+      if dirs.forall(!_.values.isNullAt(i))
+    } yield dirs.map(_.values.getInt(i)).distinct
+  }
+
   /** The ONE composition of user rule + built-in span invariant the engine
     * validates with — [[run]], the CLI scorecard and the streaming path
     * (`StreamValidate`) all lower through this, so a report can never
@@ -71,14 +111,24 @@ object ResumableValidate {
         concat(col("violations"), SpanInvariant.violationsCol(col("spans"))))
       .withColumn("pass", size(col("violations")) === 0)
 
-  /** Validate `docs` (must carry a `part` column) against `rule` + the span
-    * invariant, checkpointing per part. `failAfterParts` kills the run after
-    * N parts (test hook simulating a mid-run crash).
+  /** Validate `docs` (must carry an integer `part` column) against `rule` +
+    * the span invariant, checkpointing per part. `failAfterParts` kills the
+    * run after N parts (test hook simulating a mid-run crash).
+    *
+    * Parts are found without a Spark job when `docs` is a plain file scan
+    * (optionally projected) whose `part` column is the scan's own integer
+    * partition column: the part list is then the scan's partition listing
+    * (see [[listedParts]]). Every other plan (in-memory frames, joins, data
+    * filters, a column renamed to `part`) finds its parts with one
+    * `distinct` action. A listed part whose files hold no rows commits
+    * docs = 0, failed = 0, like an empty expected part below.
     *
     * Each batch of up to `partsPerBatch` parts is ONE Spark action: the
     * violation write. The per-part commit metrics (docs, failed docs,
     * violation count) are a `Dataset.observe` on that write, so the slice
-    * is neither cached nor scanned a second time.
+    * is neither cached nor scanned a second time. On a file scan that is
+    * the whole cost: one action per batch, none for discovery, and none at
+    * all when every part is already committed.
     *
     * `filesPerPart` sets the write's layout: a batch's rows are
     * hash-partitioned on (`part`, `pmod(xxhash64(doc_id), filesPerPart)`),
@@ -92,7 +142,8 @@ object ResumableValidate {
     * scale: the table manifest): expected parts with ZERO rows still get a
     * pass-verdict commit (docs=0, failed=0 — the reference emits a pass for
     * an empty document too, engine.rs:51-57) instead of silently vanishing
-    * from the commit log.
+    * from the commit log. A file scan already lists the parts that have
+    * files, empty ones included; the manifest adds those with no files.
     *
     * `withSketches = true` additionally observes, per part and on the same
     * write as the metrics, an HLL sketch of `doc_id` and a KLL sketch of
@@ -108,6 +159,10 @@ object ResumableValidate {
       expectedParts: Option[Seq[Int]] = None,
       withSketches: Boolean = false,
       driftCols: Seq[String] = Nil): RunReport = {
+    require(partsPerBatch > 0,
+      s"partsPerBatch (--parts-per-batch) must be positive, got $partsPerBatch")
+    require(filesPerPart > 0,
+      s"filesPerPart (--files-per-part) must be positive, got $filesPerPart")
     val conf = spark.sparkContext.hadoopConfiguration
     val rh = ruleHash(rule)
     val done = CommitLog.completed(outDir, conf)
@@ -117,8 +172,8 @@ object ResumableValidate {
     }
     val snapshotId = java.lang.Integer.toHexString(manifest.mkString(",").hashCode)
 
-    val observedParts = docs.select(col("part")).distinct()
-      .collect().map(_.getInt(0)).toSet
+    val observedParts = listedParts(docs).getOrElse(
+      docs.select(col("part")).distinct().collect().map(_.getInt(0)).toSeq).toSet
     val allParts = expectedParts
       .map(ep => (ep.toSet ++ observedParts).toSeq)
       .getOrElse(observedParts.toSeq).sorted
@@ -145,7 +200,7 @@ object ResumableValidate {
         }
     }
 
-    val withV = compositeViolations(docs, rule, defs)
+    lazy val withV = compositeViolations(docs, rule, defs)
     // commit sketch key -> the value it summarizes (HLL for the doc_id key,
     // KLL for the rest)
     val sketchIns: Seq[(String, Column)] =
@@ -181,9 +236,8 @@ object ResumableValidate {
             }
         }
         shuffled.observe(obs, aggs.head, aggs.tail: _*)
-          .select(col("part"), col("doc_id"), explode(col("violations")).as("v"))
-          .select(col("part"), col("doc_id"), col("v.path").as("path"),
-            col("v.rule").as("rule"), col("v.message").as("message"))
+          .select(col("part"), col("doc_id"), inline(col("violations")))
+          .select(ViolationSchema.map(f => col(f.name).cast(f.dataType)): _*)
           .sortWithinPartitions("part", "doc_id", "path", "rule", "message")
           .write.mode("overwrite").partitionBy("part")
           .parquet(s"$outDir/$batchName")
@@ -219,10 +273,16 @@ object ResumableValidate {
     * the commit log are consumed, so rows from a batch that crashed before
     * its commits (and whose parts were re-run into a later batch) are never
     * double-counted.
+    *
+    * Each batch dir is read with [[ViolationSchema]], so no schema is
+    * inferred and no Spark job runs before the caller's own action. A log
+    * whose committed parts have no violation rows (a clean run) reads back
+    * as an empty frame with that schema; only a log with no commits raises.
     */
   def violations(spark: SparkSession, outDir: String): DataFrame = {
     val conf = spark.sparkContext.hadoopConfiguration
     val allCommits = CommitLog.read(outDir, conf).map { case (p, c) => p -> c.batch }
+    require(allCommits.nonEmpty, s"no commits under $outDir")
     val byBatch = allCommits
       .filter(_._2.nonEmpty)
       .groupBy(_._2).view.mapValues(_.keys.toSeq).toMap
@@ -231,28 +291,21 @@ object ResumableValidate {
     // — pre-batch-field logs had no crash-orphan dirs to double-count)
     val legacyParts = allCommits.collect { case (p, b) if b.isEmpty => p }.toSeq
     val basePath = new Path(outDir)
-    val fs = basePath.getFileSystem(conf)
-    def batchDf(batchName: String, parts: Seq[Int]): Option[DataFrame] = {
-      val bp = new Path(basePath, batchName)
-      val hasParts = fs.exists(bp) && fs.listStatus(bp)
-        .exists(st => st.isDirectory && st.getPath.getName.startsWith("part="))
-      if (hasParts)
-        Some(spark.read.parquet(bp.toString)
-          .filter(col("part").isin(parts: _*)))
-      else None
-    }
+    def batchDf(batchName: String, parts: Seq[Int]): DataFrame =
+      spark.read.schema(ViolationSchema).parquet(new Path(basePath, batchName).toString)
+        .filter(col("part").isin(parts: _*))
     val legacyDfs = if (legacyParts.isEmpty) Seq.empty
       else {
+        val fs = basePath.getFileSystem(conf)
         val batchDirs = fs.listStatus(basePath).toSeq
           .filter(st => st.isDirectory &&
             st.getPath.getName.startsWith("violations_batch_"))
           .map(_.getPath.getName).sorted
-        batchDirs.flatMap(b => batchDf(b, legacyParts))
+        batchDirs.map(b => batchDf(b, legacyParts))
       }
-    val dfs = byBatch.toSeq.sortBy(_._1).flatMap { case (batchName, parts) =>
+    val dfs = byBatch.toSeq.sortBy(_._1).map { case (batchName, parts) =>
       batchDf(batchName, parts)
     } ++ legacyDfs
-    require(dfs.nonEmpty, s"no committed violations under $outDir")
     dfs.reduce(_ unionByName _)
   }
 

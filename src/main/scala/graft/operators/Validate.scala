@@ -481,9 +481,11 @@ object Validate {
     * (`under` / `over` / null when in range) — the arrived-but-thin
     * check [[graft.operators.ResumableValidate]]'s 0-row pass verdict
     * and byte-level partition health both miss. One map-side-combined
-    * groupBy; partitions that shipped ZERO rows are invisible to a scan
-    * by definition — diff against an expected-partition manifest for
-    * those (expectedParts in ResumableValidate).
+    * groupBy over rows, so a partition that shipped ZERO rows has no
+    * group here — not even one whose dir holds a zero-row file, which
+    * ResumableValidate's file listing does see (and commits docs = 0).
+    * Diff against an expected-partition manifest for those (expectedParts
+    * in ResumableValidate).
     */
   def volumeContract(df: DataFrame, partCol: String, minRows: Long,
       maxRows: Long): DataFrame = {

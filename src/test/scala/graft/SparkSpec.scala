@@ -1,6 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{GraftShims, SparkSession}
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session for all suites (one JVM-wide SparkSession). */
@@ -44,5 +48,45 @@ abstract class SparkSpec extends AnyFunSuite {
     val e = intercept[Exception](body)
     Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
       .map(_.getMessage).mkString("\n")
+  }
+
+  /** `body`'s result and the number of SQL executions (Spark actions) that
+    * succeeded while it ran.
+    */
+  def executionsDuring[A](body: => A): (A, Int) = countDuring { n =>
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        n.incrementAndGet(): Unit
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    () => spark.listenerManager.unregister(listener)
+  }(body)
+
+  /** `body`'s result and the number of Spark jobs it started: unlike
+    * [[executionsDuring]] this also sees jobs outside a SQL execution (a
+    * Parquet schema inference, say), and it can show that none ran.
+    */
+  def jobsDuring[A](body: => A): (A, Int) = countDuring { n =>
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet(): Unit
+    }
+    spark.sparkContext.addSparkListener(listener)
+    () => spark.sparkContext.removeSparkListener(listener)
+  }(body)
+
+  /** Runs `body` with a listener that `register` installs (it returns the
+    * uninstall), counting into the counter it is given. Listener events
+    * arrive asynchronously, so the bus is drained before and after.
+    */
+  private def countDuring[A](register: AtomicInteger => () => Unit)(body: => A): (A, Int) = {
+    val n = new AtomicInteger
+    GraftShims.drainListenerBus(spark.sparkContext)
+    val unregister = register(n)
+    try {
+      val a = body
+      GraftShims.drainListenerBus(spark.sparkContext)
+      (a, n.get)
+    } finally unregister()
   }
 }

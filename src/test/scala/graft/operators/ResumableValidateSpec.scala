@@ -4,6 +4,8 @@ import graft.SparkSpec
 import graft.rules.{Keywords, Rule}
 import graft.sources.{CommitLog, DocsGen}
 import java.nio.file.Files
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 
 /** Resume fixture (FIXTURES.md §4): run, kill after N partitions, restart —
   * expect identical violation output and a commit log showing the completed
@@ -26,37 +28,50 @@ class ResumableValidateSpec extends SparkSpec {
     nDocs = 3000, nParts = 6, badKindPerMille = 20, badOrderPerMille = 10,
     nullDocIdPerMille = 5))
 
+  /** `df` written partitioned by `part` and read back: a plain file scan,
+    * whose parts [[ResumableValidate.run]] takes from the listing.
+    */
+  private def scanOf(df: DataFrame): DataFrame = {
+    val dir = Files.createTempDirectory("graft_scan").toString
+    df.write.mode("overwrite").partitionBy("part").parquet(dir)
+    spark.read.parquet(dir)
+  }
+
   test("kill mid-run, restart: skips committed parts, identical output") {
     val cleanDir = Files.createTempDirectory("graft_clean").toString
-    val crashDir = Files.createTempDirectory("graft_crash").toString
 
     // reference: single uninterrupted run
     val r0 = ResumableValidate.run(spark, freshDocs, rule, cleanDir,
       manifest = Seq("gen:3000:6"), partsPerBatch = 2)
     assert(r0.partsDone.size == 6 && r0.partsSkipped.isEmpty)
-
-    // crashed run: dies after 2 parts
-    val crashed = intercept[RuntimeException] {
-      ResumableValidate.run(spark, freshDocs, rule, crashDir,
-        manifest = Seq("gen:3000:6"), failAfterParts = 2, partsPerBatch = 2)
-    }
-    assert(crashed.getMessage.contains("Injected failure"))
-    assert(CommitLog.completed(crashDir).size == 2)
-
-    // restart: completes the rest, skipping the 2 committed parts
-    val r2 = ResumableValidate.run(spark, freshDocs, rule, crashDir,
-      manifest = Seq("gen:3000:6"), partsPerBatch = 2)
-    assert(r2.partsSkipped.size == 2 && r2.partsDone.size == 4)
-    assert(CommitLog.completed(crashDir).size == 6)
-
-    // outputs identical row-for-row
     val a = ResumableValidate.violations(spark, cleanDir)
       .orderBy("part", "doc_id", "path", "rule", "message").collect()
-    val b = ResumableValidate.violations(spark, crashDir)
-      .orderBy("part", "doc_id", "path", "rule", "message").collect()
-    assert(a.length == b.length && a.sameElements(b),
-      s"clean=${a.length} rows, resumed=${b.length} rows")
     assert(a.length > 0)
+
+    // in-memory docs find their parts with a distinct, a file scan from
+    // its listing: both resume to the same rows
+    for ((source, docs) <- Seq("in-memory" -> freshDocs, "file scan" -> scanOf(freshDocs))) {
+      val crashDir = Files.createTempDirectory("graft_crash").toString
+      // crashed run: dies after 2 parts
+      val crashed = intercept[RuntimeException] {
+        ResumableValidate.run(spark, docs, rule, crashDir,
+          manifest = Seq("gen:3000:6"), failAfterParts = 2, partsPerBatch = 2)
+      }
+      assert(crashed.getMessage.contains("Injected failure"))
+      assert(CommitLog.completed(crashDir).size == 2)
+
+      // restart: completes the rest, skipping the 2 committed parts
+      val r2 = ResumableValidate.run(spark, docs, rule, crashDir,
+        manifest = Seq("gen:3000:6"), partsPerBatch = 2)
+      assert(r2.partsSkipped.size == 2 && r2.partsDone.size == 4)
+      assert(CommitLog.completed(crashDir).size == 6)
+
+      // outputs identical row-for-row
+      val b = ResumableValidate.violations(spark, crashDir)
+        .orderBy("part", "doc_id", "path", "rule", "message").collect()
+      assert(a.length == b.length && a.sameElements(b),
+        s"$source: clean=${a.length} rows, resumed=${b.length} rows")
+    }
   }
 
   test("filesPerPart > 1: same rows, more files per part, each internally sorted") {
@@ -86,44 +101,37 @@ class ResumableValidateSpec extends SparkSpec {
   }
 
   test("each batch is one Spark action: commit metrics ride the violation write") {
-    import org.apache.spark.sql.execution.QueryExecution
-    import org.apache.spark.sql.util.QueryExecutionListener
-    // listener events arrive asynchronously but in order: count the
-    // successful executions between two sentinel queries
-    val sentinel = "graft_listener_sentinel"
-    val seen = new java.util.concurrent.LinkedBlockingQueue[Boolean]()
-    val listener = new QueryExecutionListener {
-      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        seen.put(qe.analyzed.output.map(_.name) == Seq(sentinel))
-      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    val scan = scanOf(freshDocs.withColumn("alt", col("part") + 10))
+    // docs -> (executions of a fresh run, parts it commits). A file scan
+    // takes its parts from the listing; every other plan pays one distinct.
+    val cases = Seq(
+      "in-memory" -> (freshDocs, 1 + 3, 0 to 5),
+      "file scan" -> (scan, 3, 0 to 5),
+      // another column renamed to `part` is not the scan's partition column
+      "renamed part" -> (scan.drop("part").withColumnRenamed("alt", "part"), 1 + 3, 10 to 15),
+      // a data filter: parts with no surviving rows are not discovered
+      "data filter" -> (scan.filter(col("alt") < 13), 1 + 2, 0 to 2))
+    for ((source, (docs, expected, parts)) <- cases) {
+      val dir = Files.createTempDirectory("graft_one_pass").toString
+      val (r, executions) = executionsDuring(
+        ResumableValidate.run(spark, docs, rule, dir, partsPerBatch = 2,
+          withSketches = true))
+      assert(r.partsDone == parts, source)
+      assert(executions == expected,
+        s"$source: expected $expected executions, got $executions")
+      assert(CommitLog.completed(dir).keySet == parts.toSet, source)
+      assert(CommitLog.docCounts(dir).values.sum == docs.count(), source)
     }
-    def runSentinel(): Unit = spark.range(1).select(
-      org.apache.spark.sql.functions.lit(1).as(sentinel)).collect(): Unit
-    def awaitSentinel(): Int = {
-      var n = 0
-      var isSentinel = false
-      while (!isSentinel) {
-        isSentinel = Option(seen.poll(60, java.util.concurrent.TimeUnit.SECONDS))
-          .getOrElse(fail("listener event did not arrive"))
-        if (!isSentinel) n += 1
-      }
-      n
-    }
-    val docs = freshDocs
-    val dir = Files.createTempDirectory("graft_one_pass").toString
-    spark.listenerManager.register(listener)
-    try {
-      runSentinel()
-      awaitSentinel()
-      val r = ResumableValidate.run(spark, docs, rule, dir, partsPerBatch = 2,
-        withSketches = true)
-      runSentinel()
-      val executions = awaitSentinel()
-      assert(r.partsDone.size == 6)
-      // part discovery (one collect) + one write per batch of 2 parts
-      assert(executions == 1 + 3, s"expected 4 executions, got $executions")
-    } finally spark.listenerManager.unregister(listener)
-    assert(CommitLog.docCounts(dir).values.sum == docs.count())
+    // a re-run over a file scan whose parts are all committed: no job at all
+    val dir = Files.createTempDirectory("graft_noop").toString
+    ResumableValidate.run(spark, scan, rule, dir, partsPerBatch = 2)
+    val (noop, jobs) = jobsDuring(
+      ResumableValidate.run(spark, scan, rule, dir, partsPerBatch = 2))
+    assert(noop.partsDone.isEmpty && noop.partsSkipped == (0 to 5))
+    assert(jobs == 0, s"no-op resume ran $jobs Spark jobs")
+    // read-back knows its schema: building the frame infers nothing
+    val (_, readJobs) = jobsDuring(ResumableValidate.violations(spark, dir))
+    assert(readJobs == 0, s"violations() ran $readJobs Spark jobs")
   }
 
   test("expected part with zero rows still gets a pass-verdict commit") {
@@ -136,6 +144,18 @@ class ResumableValidateSpec extends SparkSpec {
     val txt = readCommit(dir, 7)
     assert(txt.contains("\"docs\":0") && txt.contains("\"failed_docs\":0"),
       s"empty part must commit a pass verdict: $txt")
+
+    // a listed part dir holding only a zero-row file: the same verdict,
+    // also when it is a batch of its own
+    val scanDir = Files.createTempDirectory("graft_zero_file").toString
+    freshDocs.write.mode("overwrite").partitionBy("part").parquet(scanDir)
+    freshDocs.limit(0).drop("part").write.parquet(s"$scanDir/part=9")
+    val out = Files.createTempDirectory("graft_zero_file_out").toString
+    ResumableValidate.run(spark, spark.read.parquet(scanDir), rule, out, partsPerBatch = 2)
+    assert(CommitLog.completed(out).keySet == Set(0, 1, 2, 3, 4, 5, 9))
+    val zero = readCommit(out, 9)
+    assert(zero.contains("\"docs\":0") && zero.contains("\"failed_docs\":0"),
+      s"zero-row part must commit a pass verdict: $zero")
   }
 
   test("rule hash is a full SHA-256 of the canonical form, stable across loads") {
@@ -176,6 +196,15 @@ class ResumableValidateSpec extends SparkSpec {
       ResumableValidate.run(spark, freshDocs, other, dir)
     }
     assert(e.getMessage.contains("rule hash"))
+    // sizing arguments are checked before the commit log is even read
+    for ((ppb, fpp, flag) <- Seq((0, 1, "--parts-per-batch"), (8, 0, "--files-per-part"),
+        (-1, 1, "--parts-per-batch"))) {
+      val bad = intercept[IllegalArgumentException] {
+        ResumableValidate.run(spark, freshDocs, other, dir, partsPerBatch = ppb,
+          filesPerPart = fpp)
+      }
+      assert(bad.getMessage.contains(flag), bad.getMessage)
+    }
   }
 
   test("commit rows carry lineage: snapshot id, manifest, metrics") {
@@ -348,6 +377,9 @@ class ResumableValidateSpec extends SparkSpec {
     val modern = ResumableValidate.violations(spark, dir)
       .orderBy("doc_id", "path", "rule").collect()
     assert(modern.nonEmpty)
+    // the known schema is the one a read of the batch dir infers
+    assert(ResumableValidate.ViolationSchema ==
+      spark.read.parquet(s"$dir/violations_batch_0").schema)
     // simulate a pre-upgrade log: rewrite every commit WITHOUT a batch name
     CommitLog.completed(dir, spark.sparkContext.hadoopConfiguration)
       .keys.foreach { p =>
@@ -358,5 +390,21 @@ class ResumableValidateSpec extends SparkSpec {
       .orderBy("doc_id", "path", "rule").collect()
     assert(legacy.sameElements(modern),
       s"legacy=${legacy.length} modern=${modern.length}")
+
+    // a clean run reads back empty, with the violation schema, in both
+    // forms; only a log with no commits raises
+    val cleanDir = Files.createTempDirectory("graft_clean_readback").toString
+    ResumableValidate.run(spark, DocsGen.docs(spark, DocsGen.Knobs(nDocs = 600, nParts = 3)),
+      rule, cleanDir, partsPerBatch = 2)
+    val clean = ResumableValidate.violations(spark, cleanDir)
+    assert(clean.schema == ResumableValidate.ViolationSchema)
+    assert(clean.count() == 0)
+    CommitLog.completed(cleanDir).keys.foreach { p =>
+      CommitLog.write(cleanDir, CommitLog.Commit(p, 0, 0, 0, "", "", Nil, 0))
+    }
+    assert(ResumableValidate.violations(spark, cleanDir).count() == 0)
+    val noCommits = Files.createTempDirectory("graft_no_commits").toString
+    val e = intercept[IllegalArgumentException](ResumableValidate.violations(spark, noCommits))
+    assert(e.getMessage.contains("no commits"), e.getMessage)
   }
 }
