@@ -21,6 +21,13 @@ object SparkEntry {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     s.read.parquet(s"$dir/$name.parquet")
 
+  /** A [[Validate.withViolations]] frame's flat violation rows: `id` as
+    * `doc_id`, then the named fields of each violation struct.
+    */
+  private def flatViols(withV: DataFrame, id: Column, fields: String*): DataFrame =
+    withV.select(id.as("doc_id"), explode(col("violations")).as("v"))
+      .select(col("doc_id") +: fields.map(f => col(s"v.$f").as(f)): _*)
+
   /** DuckDB replay of Integrity's 40-bit digest: the first 10 hex chars of
     * an md5 column as a BIGINT polynomial with literal 16^j weights
     * (DuckDB has no base-conversion function; integer literals keep the
@@ -241,10 +248,8 @@ object SparkEntry {
     "v_enum" -> ((s, dir) => {
       val rule = Rule.Check(Keywords(properties = Map(
         "lang" -> Rule.Check(Keywords(enum_ = Some(langEnum))))))
-      Validate.withViolations(t(s, dir, "documents"), rule)
-        .select(col("doc_id").cast("string").as("doc_id"), explode(col("violations")).as("v"))
-        .select(col("doc_id"), col("v.path").as("path"), col("v.rule").as("rule"),
-          col("v.message").as("message"))
+      flatViols(Validate.withViolations(t(s, dir, "documents"), rule),
+          col("doc_id").cast("string"), "path", "rule", "message")
         .orderBy("doc_id", "path", "rule")
     }),
     "v_type_integer" -> ((s, dir) => {
@@ -254,33 +259,28 @@ object SparkEntry {
             when(pmod(col("l_orderkey"), lit(7L)) === 0L, 0.5).otherwise(0.0)).as("qty"))
       val rule = Rule.Check(Keywords(properties = Map(
         "qty" -> Rule.Check(Keywords(types = Some(List("integer")))))))
-      Validate.withViolations(df, rule)
-        .select(col("doc_id"), explode(col("violations")).as("v"))
-        .select(col("doc_id"), col("v.rule").as("rule"), col("v.message").as("message"))
+      flatViols(Validate.withViolations(df, rule), col("doc_id"), "rule", "message")
         .orderBy("doc_id")
     }),
     "v_minmax" -> ((s, dir) => {
       val rule = Rule.Check(Keywords(properties = Map(
         "o_totalprice" -> Rule.Check(Keywords(minimum = Some(5000), maximum = Some(300000))))))
-      Validate.withViolations(t(s, dir, "orders"), rule)
-        .select(col("o_orderkey").cast("string").as("doc_id"), explode(col("violations")).as("v"))
-        .select(col("doc_id"), col("v.rule").as("rule"), col("v.message").as("message"))
+      flatViols(Validate.withViolations(t(s, dir, "orders"), rule),
+          col("o_orderkey").cast("string"), "rule", "message")
         .orderBy("doc_id", "rule")
     }),
     "v_length" -> ((s, dir) => {
       val rule = Rule.Check(Keywords(properties = Map(
         "c_name" -> Rule.Check(Keywords(minLength = Some(12), maxLength = Some(16))))))
-      Validate.withViolations(t(s, dir, "customer"), rule)
-        .select(col("c_custkey").cast("string").as("doc_id"), explode(col("violations")).as("v"))
-        .select(col("doc_id"), col("v.rule").as("rule"), col("v.message").as("message"))
+      flatViols(Validate.withViolations(t(s, dir, "customer"), rule),
+          col("c_custkey").cast("string"), "rule", "message")
         .orderBy("doc_id", "rule")
     }),
     "v_pattern" -> ((s, dir) => {
       val rule = Rule.Check(Keywords(properties = Map(
         "source" -> Rule.Check(Keywords(pattern = Some("^src[0-9]$"))))))
-      Validate.withViolations(t(s, dir, "documents"), rule)
-        .select(col("doc_id").cast("string").as("doc_id"), explode(col("violations")).as("v"))
-        .select(col("doc_id"), col("v.rule").as("rule"), col("v.message").as("message"))
+      flatViols(Validate.withViolations(t(s, dir, "documents"), rule),
+          col("doc_id").cast("string"), "rule", "message")
         .orderBy("doc_id")
     }),
     "v_required" -> ((s, dir) => {
@@ -288,9 +288,7 @@ object SparkEntry {
         .select(col("doc_id").cast("string").as("doc_id"),
           when(col("lang") === "zh", lit(null)).otherwise(col("lang")).as("lang2"))
       val rule = Rule.Check(Keywords(required = List("lang2")))
-      Validate.withViolations(df, rule)
-        .select(col("doc_id"), explode(col("violations")).as("v"))
-        .select(col("doc_id"), col("v.rule").as("rule"), col("v.message").as("message"))
+      flatViols(Validate.withViolations(df, rule), col("doc_id"), "rule", "message")
         .orderBy("doc_id")
     }),
     "v_format_date" -> ((s, dir) => {
@@ -301,9 +299,7 @@ object SparkEntry {
             .otherwise(date_format(col("o_orderdate"), "yyyy-MM-dd")).as("d"))
       val rule = Rule.Check(Keywords(properties = Map(
         "d" -> Rule.Check(Keywords(format = Some("date"))))))
-      Validate.withViolations(df, rule)
-        .select(col("doc_id"), explode(col("violations")).as("v"))
-        .select(col("doc_id"), col("v.message").as("message"))
+      flatViols(Validate.withViolations(df, rule), col("doc_id"), "message")
         .orderBy("doc_id")
     }),
     "v_one_of" -> ((s, dir) => {
@@ -312,9 +308,8 @@ object SparkEntry {
           "o_totalprice" -> Rule.Check(Keywords(maximum = Some(100000)))))),
         Rule.Check(Keywords(properties = Map(
           "o_orderpriority" -> Rule.Check(Keywords(const = Some(ConstVal.VStr("1-URGENT"))))))))))
-      Validate.withViolations(t(s, dir, "orders"), rule)
-        .select(col("o_orderkey").cast("string").as("doc_id"), explode(col("violations")).as("v"))
-        .select(col("doc_id"), col("v.message").as("message"))
+      flatViols(Validate.withViolations(t(s, dir, "orders"), rule),
+          col("o_orderkey").cast("string"), "message")
         .orderBy("doc_id")
     }),
     "v_any_of" -> ((s, dir) => {
@@ -326,26 +321,22 @@ object SparkEntry {
       val df = t(s, dir, "lineitem")
         .select((col("l_orderkey") * 10 + col("l_linenumber")).cast("string").as("doc_id"),
           col("l_discount"), col("l_tax"))
-      Validate.withViolations(df, rule)
-        .select(col("doc_id"), explode(col("violations")).as("v"))
-        .select(col("doc_id"), col("v.message").as("message"))
+      flatViols(Validate.withViolations(df, rule), col("doc_id"), "message")
         .orderBy("doc_id")
     }),
     "v_not" -> ((s, dir) => {
       val rule = Rule.Check(Keywords(not = Some(
         Rule.Check(Keywords(properties = Map(
           "o_orderstatus" -> Rule.Check(Keywords(const = Some(ConstVal.VStr("F"))))))))))
-      Validate.withViolations(t(s, dir, "orders"), rule)
-        .select(col("o_orderkey").cast("string").as("doc_id"), explode(col("violations")).as("v"))
-        .select(col("doc_id"), col("v.message").as("message"))
+      flatViols(Validate.withViolations(t(s, dir, "orders"), rule),
+          col("o_orderkey").cast("string"), "message")
         .orderBy("doc_id")
     }),
     "v_const" -> ((s, dir) => {
       val rule = Rule.Check(Keywords(properties = Map(
         "o_orderstatus" -> Rule.Check(Keywords(const = Some(ConstVal.VStr("O")))))))
-      Validate.withViolations(t(s, dir, "orders"), rule)
-        .select(col("o_orderkey").cast("string").as("doc_id"), explode(col("violations")).as("v"))
-        .select(col("doc_id"), col("v.message").as("message"))
+      flatViols(Validate.withViolations(t(s, dir, "orders"), rule),
+          col("o_orderkey").cast("string"), "message")
         .orderBy("doc_id")
     }),
     "v_multiple_of" -> ((s, dir) => {
@@ -354,9 +345,7 @@ object SparkEntry {
       val df = t(s, dir, "lineitem")
         .select((col("l_orderkey") * 10 + col("l_linenumber")).cast("string").as("doc_id"),
           col("l_linenumber"))
-      Validate.withViolations(df, rule)
-        .select(col("doc_id"), explode(col("violations")).as("v"))
-        .select(col("doc_id"), col("v.message").as("message"))
+      flatViols(Validate.withViolations(df, rule), col("doc_id"), "message")
         .orderBy("doc_id")
     }),
     "v_dependent_required" -> ((s, dir) => {
@@ -365,9 +354,7 @@ object SparkEntry {
           when(col("lang") === "zh", lit(null)).otherwise(col("lang")).as("lang2"),
           when(col("source") === "src3", lit(null)).otherwise(col("source")).as("source2"))
       val rule = Rule.Check(Keywords(dependentRequired = Map("lang2" -> List("source2"))))
-      Validate.withViolations(df, rule)
-        .select(col("doc_id"), explode(col("violations")).as("v"))
-        .select(col("doc_id"), col("v.rule").as("rule"), col("v.message").as("message"))
+      flatViols(Validate.withViolations(df, rule), col("doc_id"), "rule", "message")
         .orderBy("doc_id")
     }),
     "v_map_props" -> ((s, dir) => {
@@ -394,18 +381,15 @@ object SparkEntry {
             "^src[0-9]$" -> Rule.Check(Keywords(maxLength = Some(4)))),
           propertyNames = Some(Rule.Check(Keywords(pattern = Some("^[a-z0-9]+$")))),
           minProperties = Some(3), maxProperties = Some(3))))))
-      Validate.withViolations(df, rule)
-        .select(col("doc_id"), explode(col("violations")).as("v"))
-        .select(col("doc_id"), col("v.path").as("path"), col("v.rule").as("rule"),
-          col("v.message").as("message"))
+      flatViols(Validate.withViolations(df, rule),
+          col("doc_id"), "path", "rule", "message")
         .orderBy(col("doc_id").cast("long"), col("path"), col("rule"))
     }),
     "v_min_items" -> ((s, dir) => {
       val rule = Rule.Check(Keywords(properties = Map(
         "spans" -> Rule.Check(Keywords(minItems = Some(3), maxItems = Some(6))))))
-      Validate.withViolations(derivedDocs(s, dir), rule)
-        .select(col("doc_id"), explode(col("violations")).as("v"))
-        .select(col("doc_id"), col("v.rule").as("rule"), col("v.message").as("message"))
+      flatViols(Validate.withViolations(derivedDocs(s, dir), rule),
+          col("doc_id"), "rule", "message")
         .orderBy(col("doc_id").cast("long"), col("rule"))
     }),
     "v_unique_items" -> ((s, dir) => {
@@ -423,9 +407,8 @@ object SparkEntry {
           contains = Some(Rule.Check(Keywords(properties = Map(
             "kind" -> Rule.Check(Keywords(const = Some(ConstVal.VStr("media")))))))),
           minContains = Some(1), maxContains = Some(4))))))
-      Validate.withViolations(derivedDocs(s, dir), rule)
-        .select(col("doc_id"), explode(col("violations")).as("v"))
-        .select(col("doc_id"), col("v.rule").as("rule"), col("v.message").as("message"))
+      flatViols(Validate.withViolations(derivedDocs(s, dir), rule),
+          col("doc_id"), "rule", "message")
         .orderBy(col("doc_id").cast("long"), col("rule"))
     }),
     // ---------- north-rule span invariant over array<struct> HOFs ----------
@@ -1904,10 +1887,8 @@ object SparkEntry {
         "src_pattern" -> Rule.Check(Keywords(properties = Map(
           "source" -> Rule.Check(Keywords(pattern = Some("^src[0-3]$")))))))
       val flips = rules.map { case (name, r) =>
-        val p1 = coalesce(RuleCompiler.compile(r, col("_r1"), docs.schema,
-          Map.empty).pred, lit(false))
-        val p2 = coalesce(RuleCompiler.compile(r, col("_r2"), docs.schema,
-          Map.empty).pred, lit(false))
+        val p1 = Validate.passes(r, col("_r1"), docs.schema)
+        val p2 = Validate.passes(r, col("_r2"), docs.schema)
         struct(lit(name).as("rule"),
           when(p1 && !p2, "regressed").when(!p1 && p2, "fixed").as("change"))
       }
@@ -2507,10 +2488,8 @@ object SparkEntry {
           "source" -> Rule.Check(Keywords(pattern = Some("^src[0-3]$")))))))
       val aggs = count(lit(1)).as("_n") +:
         rules.zipWithIndex.flatMap { case ((_, r), i) =>
-          val p1 = coalesce(RuleCompiler.compile(r, col("_r1"), docs.schema,
-            Map.empty).pred, lit(false))
-          val p2 = coalesce(RuleCompiler.compile(r, col("_r2"), docs.schema,
-            Map.empty).pred, lit(false))
+          val p1 = Validate.passes(r, col("_r1"), docs.schema)
+          val p2 = Validate.passes(r, col("_r2"), docs.schema)
           Seq(sum(when(p1 && p2, 1L).otherwise(0L)).as(s"_a$i"),
             sum(when(p1 && !p2, 1L).otherwise(0L)).as(s"_b$i"),
             sum(when(!p1 && p2, 1L).otherwise(0L)).as(s"_c$i"),

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import graft.rules.{Rule, RuleCompiler}
+import graft.rules.Rule
 
 /** Rule-action enforcement: what to DO with a row that fails validation.
   *
@@ -15,8 +15,8 @@ import graft.rules.{Rule, RuleCompiler}
   * and an invariant rule FAIL (abort the whole run — the distributed
   * analogue of the reference's exit-1 contract).
   *
-  * Everything lowers through the SAME compiled predicates as [[Validate]]
-  * (`RuleCompiler.compile(...).pred`, null-is-fail via coalesce), so
+  * Everything lowers through [[Validate.passes]], the engine's one pass
+  * predicate (null-is-fail, the guard [[Validate.withViolations]] uses), so
   * enforcement can never disagree with reporting about what "fails".
   *
   * 100 TB shape: each expectation is one pure Column predicate, so
@@ -49,17 +49,6 @@ object Enforce {
   /** One named rule with its enforcement action. */
   final case class Expectation(name: String, rule: Rule, action: Action)
 
-  /** Pass predicate for one expectation — the exact contract of
-    * [[Validate.withViolations]]'s guard: a null COMPILED predicate is a
-    * fail, while rule semantics are untouched (e.g. `properties` subrules
-    * apply only when the property is present, so a null column value
-    * passes an enum/bound subrule — catching nulls takes `required`).
-    */
-  def passCol(df: DataFrame, e: Expectation,
-      defs: Map[String, Rule] = Map.empty): Column =
-    coalesce(RuleCompiler.compile(e.rule,
-      struct(df.columns.map(col): _*), df.schema, defs).pred, lit(false))
-
   /** Row-removal priority when a row fails several expectations: evidence
     * preservation wins — a row failing any QUARANTINE rule is quarantined
     * (even if it also fails a DROP rule); otherwise a row failing any
@@ -67,8 +56,10 @@ object Enforce {
     */
   private def verdictCol(df: DataFrame, es: Seq[Expectation],
       defs: Map[String, Rule]): Column = {
+    val row = struct(df.columns.map(col): _*)
     def anyFail(as: Set[Action]): Option[Column] =
-      es.filter(e => as(e.action)).map(e => !passCol(df, e, defs))
+      es.filter(e => as(e.action))
+        .map(e => !Validate.passes(e.rule, row, df.schema, defs))
         .reduceOption(_ || _)
     val q = anyFail(Set(Action.Quarantine)).getOrElse(lit(false))
     val d = anyFail(Set(Action.Drop, Action.Fail)).getOrElse(lit(false))
@@ -84,8 +75,9 @@ object Enforce {
     require(es.nonEmpty, "withActions: no expectations")
     require(es.map(_.name).distinct.size == es.size,
       s"duplicate expectation names: ${es.map(_.name).mkString(", ")}")
-    val failed = array_sort(filter(
-      array(es.map(e => when(!passCol(df, e, defs), e.name)): _*),
+    val row = struct(df.columns.map(col): _*)
+    val failed = array_sort(filter(array(es.map(e =>
+        when(!Validate.passes(e.rule, row, df.schema, defs), e.name)): _*),
       _.isNotNull))
     df.withColumn("_graft_verdict", verdictCol(df, es, defs))
       .withColumn("_graft_failed", failed)
@@ -120,24 +112,21 @@ object Enforce {
       .withColumn("expectation", explode(col("_graft_failed")))
       .drop("_graft_failed")
 
-  /** Per-expectation failure counts in ONE aggregation scan:
-    * (expectation, action, failed_docs, docs) — independent counts (a row
-    * failing two expectations counts in both), so each row reads as "this
-    * rule alone would have flagged N of `docs`".
+  /** Per-expectation failure counts in ONE aggregation scan
+    * ([[Validate.flagCounts]]): (expectation, action, failed_docs, docs) —
+    * independent counts (a row failing two expectations counts in both),
+    * so each row reads as "this rule alone would have flagged N of
+    * `docs`". An empty input counts 0, not null.
     */
   def metrics(df: DataFrame, es: Seq[Expectation],
       defs: Map[String, Rule] = Map.empty): DataFrame = {
     require(es.nonEmpty, "metrics: no expectations")
-    val sums = count(lit(1)).as("_docs") +:
-      es.zipWithIndex.map { case (e, i) =>
-        sum(when(!passCol(df, e, defs), 1L).otherwise(0L)).as(s"_f$i") }
-    val one = df.agg(sums.head, sums.tail: _*)
-    one.select(explode(array(es.zipWithIndex.map { case (e, i) => struct(
-        lit(e.name).as("expectation"), lit(e.action.name).as("action"),
-        col(s"_f$i").as("failed_docs"), col("_docs").as("docs")) }: _*))
-        .as("m"))
-      .select(col("m.expectation"), col("m.action"),
-        col("m.failed_docs"), col("m.docs"))
+    val row = struct(df.columns.map(col): _*)
+    Validate.flagCounts(df, Nil, es.map(e =>
+        (Seq(lit(e.name).as("expectation"), lit(e.action.name).as("action")),
+          !Validate.passes(e.rule, row, df.schema, defs))))
+      .select(col("expectation"), col("action"), col("n").as("failed_docs"),
+        col("docs"))
   }
 
   /** Enforce FAIL expectations: returns `df` untouched when every FAIL

@@ -11,7 +11,10 @@ import graft.rules.RuleCompiler
   * `src/lib.rs:145-188`); the cross-field and cross-element parts are not
   * expressible in the keyword vocabulary, so they compile here directly to
   * higher-order functions over `array<struct>` — `transform`/`filter`/
-  * `zip_with`/`forall`, all whole-stage-codegen'd, zero shuffles:
+  * `zip_with`/`forall`, zero shuffles. Those HOFs are `CodegenFallback`,
+  * so an operator holding [[violationsCol]] runs interpreted (its plan line
+  * has no `*(n)` prefix; ROADMAP direction F). Only [[predCol]], the native
+  * kernel, stays inside whole-stage codegen:
   *
   *   1. `kind ∈ {text, media}`                               (enum)
   *   2. `kind = "media"  ⇔  media_ref ≠ ""`                  (cross-field)

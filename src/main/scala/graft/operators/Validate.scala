@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import graft.rules.{Rule, RuleCompiler}
 import graft.model.{Verdict, Violation}
 
@@ -18,13 +19,50 @@ import graft.model.{Verdict, Violation}
   *   - per-partition verdicts: one `groupBy(part)` agg — the analogue of the
   *     CLI exit code (`/root/reference/src/bin/ys.rs:215-243`) per partition.
   *
-  * Everything stays inside whole-stage codegen (pure Column expressions, no
-  * UDFs on the hot path except rare procedural `format`s), so at 100 TB the
-  * per-row phase is a single scan with no shuffle; the only shuffle in the
-  * whole per-row pipeline is the final per-partition verdict aggregation,
-  * which is a map-side-combined `groupBy` on the partition column.
+  * Everything is pure Column expressions (no UDFs on the hot path except
+  * rare procedural `format`s), so at 100 TB the per-row phase is a single
+  * scan with no shuffle; the only shuffle in the whole per-row pipeline is
+  * the final per-partition verdict aggregation, which is a
+  * map-side-combined `groupBy` on the partition column. Not all of it is
+  * whole-stage codegen'd: the array and map keywords (`items`, `contains`,
+  * `uniqueItems`, `prefixItems`, map keys) lower to higher-order functions,
+  * which are `CodegenFallback`, and one of them makes its whole operator
+  * run interpreted (ROADMAP direction F).
+  *
+  * Every rule-set report asks "does this row fail this rule" through ONE
+  * predicate, [[passes]], and counts per-rule flags through ONE
+  * aggregation, [[flagCounts]].
   */
 object Validate {
+
+  /** The engine's ONE pass predicate: does `row` (a struct column of type
+    * `rowType`) pass `rule`? A null COMPILED predicate is a fail — exactly
+    * [[withViolations]]'s guard — while rule semantics are untouched (e.g.
+    * `properties` subrules apply only when the property is present, so a
+    * null column value passes an enum/bound subrule; catching nulls takes
+    * `required`).
+    */
+  def passes(rule: Rule, row: Column, rowType: StructType,
+      defs: Map[String, Rule] = Map.empty): Column =
+    coalesce(RuleCompiler.compile(rule, row, rowType, defs).pred, lit(false))
+
+  /** ONE aggregation over `df`, grouped by `keys` (none: a single row):
+    * `docs` and, for each labelled flag, `n = count_if(flag)` — 0 on an
+    * empty input, never null — unpivoted to one row per flag: the keys,
+    * the flag's label columns (aliased literals), `n`, `docs`.
+    */
+  private[operators] def flagCounts(df: DataFrame, keys: Seq[Column],
+      flags: Seq[(Seq[Column], Column)]): DataFrame = {
+    val aggs = count(lit(1)).as("docs") +:
+      flags.zipWithIndex.map { case ((_, f), i) => count_if(f).as(s"_n$i") }
+    val counted = df.groupBy(keys: _*).agg(aggs.head, aggs.tail: _*)
+    val keyCols = counted.columns.take(keys.size).map(col).toSeq
+    counted.select(keyCols :+ explode(array(flags.zipWithIndex.map {
+        case ((labels, _), i) =>
+          struct(labels :+ col(s"_n$i").as("n") :+ col("docs"): _*)
+      }: _*)).as("m"): _*)
+      .select(keyCols :+ col("m.*"): _*)
+  }
 
   /** docs + `violations: array<struct<path,rule,message>>` + `pass: boolean`.
     *
@@ -159,15 +197,12 @@ object Validate {
       defs: Map[String, Rule] = Map.empty): DataFrame = {
     require(rules.size >= 2, "ruleCooccurrence: need at least two rules")
     val row = struct(df.columns.map(col): _*)
-    val fails = rules.map { case (_, r) =>
-      when(!coalesce(RuleCompiler.compile(r, row, df.schema, defs).pred,
-        lit(false)), 1L).otherwise(0L)
-    }
+    val fails = rules.map { case (_, r) => !passes(r, row, df.schema, defs) }
     val idx = rules.indices
-    val singles = idx.map(i => sum(fails(i)).as(s"_f$i"))
+    val singles = idx.map(i => count_if(fails(i)).as(s"_f$i"))
     val pairsIdx = for { i <- idx; j <- idx if i < j } yield (i, j)
     val pairSums = pairsIdx.map { case (i, j) =>
-      sum(fails(i) * fails(j)).as(s"_b${i}_$j") }
+      count_if(fails(i) && fails(j)).as(s"_b${i}_$j") }
     val one = df.agg(singles.head, (singles.tail ++ pairSums): _*)
     one.select(explode(array(pairsIdx.map { case (i, j) =>
         struct(lit(rules(i)._1).as("rule_a"), lit(rules(j)._1).as("rule_b"),
@@ -220,20 +255,14 @@ object Validate {
       defs: Map[String, Rule] = Map.empty): DataFrame = {
     require(rules.nonEmpty, "ruleCoverage: no rules")
     val row = struct(df.columns.map(col): _*)
-    val sums = count(lit(1)).as("_docs") +:
-      rules.zipWithIndex.map { case ((_, r), i) =>
-        val pred = coalesce(
-          RuleCompiler.compile(r, row, df.schema, defs).pred, lit(false))
-        sum(when(!pred, 1L).otherwise(0L)).as(s"_f$i")
-      }
-    df.agg(sums.head, sums.tail: _*)
-      .select(explode(array(rules.zipWithIndex.map { case ((name, _), i) =>
-        struct(lit(name).as("rule"), col(s"_f$i").as("failed_docs"),
-          col("_docs").as("docs")) }: _*)).as("m"))
-      .select(col("m.rule"), col("m.failed_docs"), col("m.docs"),
-        round(col("m.failed_docs") / col("m.docs"), 6).as("fail_rate"),
-        when(col("m.failed_docs") === 0L, "silent")
-          .when(col("m.failed_docs") === col("m.docs"), "always")
+    flagCounts(df, Nil, rules.map { case (name, r) =>
+        (Seq(lit(name).as("rule")), !passes(r, row, df.schema, defs)) })
+      .select(col("rule"), col("n").as("failed_docs"), col("docs"),
+        // empty-corpus guard (ANSI division throws on 0)
+        when(col("docs") > 0L, round(col("n") / col("docs"), 6))
+          .as("fail_rate"),
+        when(col("n") === 0L, "silent")
+          .when(col("n") === col("docs"), "always")
           .otherwise("firing").as("status"))
   }
 
@@ -260,9 +289,7 @@ object Validate {
     require(k >= 1, s"topOffenders: need k >= 1, got $k")
     val row = struct(df.columns.map(col): _*)
     val entries = rules.map { case (name, r, valueCol) =>
-      val pred = coalesce(
-        RuleCompiler.compile(r, row, df.schema, defs).pred, lit(false))
-      when(!pred, struct(lit(name).as("rule"),
+      when(!passes(r, row, df.schema, defs), struct(lit(name).as("rule"),
         coalesce(col(valueCol).cast("string"), lit("<null>"))
           .as("value")))
     }
@@ -294,9 +321,9 @@ object Validate {
     *
     * Scale: exactly the [[ruleCoverage]] shape — ONE aggregation scan
     * regardless of rule count (the first-fail index is a nested
-    * conditional evaluated per row; per-rank counters are conditional
-    * sums, map-side combined to a single row), then explode + a window
-    * over the rule-count-sized result.
+    * conditional evaluated per row; per-rank counters are [[flagCounts]],
+    * map-side combined to a single row), then a window over the
+    * rule-count-sized result.
     */
   def failFastProfile(df: DataFrame, rules: Seq[(String, Rule)],
       defs: Map[String, Rule] = Map.empty): DataFrame = {
@@ -305,25 +332,14 @@ object Validate {
     // first failing rule's index, -1 when every rule passes
     val firstIdx = rules.zipWithIndex.foldRight(lit(-1)) {
       case (((_, r), i), acc) =>
-        val pred = coalesce(
-          RuleCompiler.compile(r, row, df.schema, defs).pred, lit(false))
-        when(!pred, lit(i)).otherwise(acc)
+        when(!passes(r, row, df.schema, defs), lit(i)).otherwise(acc)
     }
-    val aggs = count(lit(1)).as("_docs") +: rules.indices.map(i =>
-      sum(when(firstIdx === i, 1L).otherwise(0L)).as(s"_c$i"))
     val wCum = org.apache.spark.sql.expressions.Window
       .partitionBy(lit(1)).orderBy(col("rank"))
-    df.agg(aggs.head, aggs.tail: _*)
-      .select(explode(array(rules.zipWithIndex.map { case ((name, _), i) =>
-        struct(lit(name).as("rule"), lit(i + 1).as("rank"),
-          // sum over an EMPTY corpus is null, not 0
-          coalesce(col(s"_c$i"), lit(0L)).as("first_caught"),
-          col("_docs").as("docs"))
-      }: _*)).as("m"))
-      .select(col("m.rule").as("rule"), col("m.rank").as("rank"),
-        col("m.first_caught").as("first_caught"), col("m.docs").as("docs"))
-      .select(col("rule"), col("rank"), col("first_caught"),
-        sum(col("first_caught")).over(wCum).as("cum_caught"), col("docs"))
+    flagCounts(df, Nil, rules.zipWithIndex.map { case ((name, _), i) =>
+        (Seq(lit(name).as("rule"), lit(i + 1).as("rank")), firstIdx === i) })
+      .select(col("rule"), col("rank"), col("n").as("first_caught"),
+        sum(col("n")).over(wCum).as("cum_caught"), col("docs"))
       .select(col("rule"), col("rank"), col("first_caught"),
         col("cum_caught"), col("docs"),
         // empty-corpus guard (ANSI division throws on 0)
@@ -350,8 +366,7 @@ object Validate {
     require(rules.nonEmpty && dims.nonEmpty, "verdictRollup: rules and dims")
     val row = struct(df.columns.map(col): _*)
     val preds = rules.zipWithIndex.map { case ((_, r), i) =>
-      coalesce(RuleCompiler.compile(r, row, df.schema, defs).pred,
-        lit(false)).as(s"_p$i")
+      passes(r, row, df.schema, defs).as(s"_p$i")
     }
     val evald = df.select(dims.map(col) ++ preds: _*)
     val aggs = Seq(count(lit(1)).as("_docs")) ++
@@ -401,22 +416,11 @@ object Validate {
         prefix < Sampling.thresholdHex(i.toDouble / nBuckets), i - 1)
     }.otherwise(nBuckets - 1)
     val row = struct(df.columns.map(col): _*)
-    val aggs = count(lit(1)).as("_docs") +: rules.zipWithIndex.map {
-      case ((_, r), i) =>
-        val pred = coalesce(
-          RuleCompiler.compile(r, row, df.schema, defs).pred, lit(false))
-        sum(when(!pred, 1L).otherwise(0L)).as(s"_c$i")
-    }
-    df.groupBy(bucket.as("_b")).agg(aggs.head, aggs.tail: _*)
-      .select(explode(array(rules.zipWithIndex.map { case ((name, _), i) =>
-        struct(lit(name).as("rule"), col("_docs").as("docs"),
-          coalesce(col(s"_c$i"), lit(0L)).as("caught"))
-      }: _*)).as("m"))
-      .select(col("m.rule").as("rule"), col("m.docs").as("docs"),
-        col("m.caught").as("caught"),
+    flagCounts(df, Seq(bucket.as("_b")), rules.map { case (name, r) =>
+        (Seq(lit(name).as("rule")), !passes(r, row, df.schema, defs)) })
+      .select(col("rule"), col("docs"), col("n").as("caught"),
         // empty buckets never appear (groupBy emits only seen buckets)
-        round(col("m.caught").cast("double") / col("m.docs"), 6)
-          .as("_rate"))
+        round(col("n").cast("double") / col("docs"), 6).as("_rate"))
       .groupBy(col("rule"))
       .agg(sum(col("docs")).as("docs"), sum(col("caught")).as("caught"),
         min(col("_rate")).as("min_bucket_rate"),
@@ -455,10 +459,8 @@ object Validate {
     require(wc >= 0 && wv >= 0 && wu >= 0 && wc + wv + wu > 0,
       "dqScore: weights must be non-negative and not all zero")
     val row = struct(df.columns.map(col): _*)
-    val passAll = rules.map { case (_, r) =>
-      coalesce(RuleCompiler.compile(r, row, df.schema, defs).pred,
-        lit(false))
-    }.reduce(_ && _)
+    val passAll = rules.map { case (_, r) => passes(r, row, df.schema, defs) }
+      .reduce(_ && _)
     val complete = keyCols.map(col(_).isNotNull).reduce(_ && _)
     df.groupBy(groupCols.map(col): _*)
       .agg(count(lit(1)).as("n_docs"),
@@ -552,38 +554,27 @@ object Validate {
     * uses the ROUNDED efficiency with the rule name as tie-break so the
     * order is engine-independent and deterministic.
     *
-    * Scale: like [[ruleCoverage]] — one scan with per-rule conditional
-    * sums (map-side combined to a single row), then explode + a window
-    * over the rules-count-sized result. No shuffle proportional to docs.
+    * Scale: like [[ruleCoverage]] — one [[flagCounts]] scan (map-side
+    * combined to a single row), then a window over the rules-count-sized
+    * result. No shuffle proportional to docs.
     */
   def ruleSchedule(df: DataFrame, rules: Seq[(String, Rule, Double)],
       defs: Map[String, Rule] = Map.empty): DataFrame = {
     require(rules.nonEmpty, "ruleSchedule: no rules")
     require(rules.forall(_._3 > 0), "ruleSchedule: costs must be positive")
     val row = struct(df.columns.map(col): _*)
-    val aggs = count(lit(1)).as("_docs") +: rules.zipWithIndex.map {
-      case ((_, r, _), i) =>
-        val pred = coalesce(
-          RuleCompiler.compile(r, row, df.schema, defs).pred, lit(false))
-        sum(when(!pred, 1L).otherwise(0L)).as(s"_c$i")
-    }
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(lit(1)).orderBy(col("efficiency").desc, col("rule"))
-    df.agg(aggs.head, aggs.tail: _*)
-      .select(explode(array(rules.zipWithIndex.map { case ((name, _, cost), i) =>
-        struct(lit(name).as("rule"),
-          // sum over an EMPTY corpus is null, not 0
-          coalesce(col(s"_c$i"), lit(0L)).as("caught"),
-          col("_docs").as("docs"), lit(cost).as("cost"))
-      }: _*)).as("m"))
-      .select(col("m.rule").as("rule"), col("m.caught").as("caught"),
-        col("m.docs").as("docs"), col("m.cost").as("cost"),
+    flagCounts(df, Nil, rules.map { case (name, r, cost) =>
+        (Seq(lit(name).as("rule"), lit(cost).as("cost")),
+          !passes(r, row, df.schema, defs)) })
+      .select(col("rule"), col("n").as("caught"), col("docs"), col("cost"),
         // empty-corpus guard (ANSI division throws on 0)
-        when(col("m.docs") > 0L,
-          round(col("m.caught").cast("double") / col("m.docs"), 6))
+        when(col("docs") > 0L,
+          round(col("n").cast("double") / col("docs"), 6))
           .as("catch_rate"),
-        when(col("m.docs") > 0L,
-          round(col("m.caught").cast("double") / col("m.docs") / col("m.cost"), 6))
+        when(col("docs") > 0L,
+          round(col("n").cast("double") / col("docs") / col("cost"), 6))
           .as("efficiency"))
       .select(col("rule"), col("caught"), col("docs"), col("cost"),
         col("catch_rate"), col("efficiency"),

@@ -53,6 +53,13 @@ class EnforceSpec extends SparkSpec {
       .as[(String, String, Long, Long)].collect().sortBy(_._1)
     assert(m.toSeq == Seq(
       ("e_lang", "quarantine", 2L, 6L), ("e_n", "drop", 2L, 6L)))
+    // an empty input counts 0 failures, not null
+    val empty = Enforce.metrics(docs.limit(0), es)
+      .select("expectation", "action", "failed_docs", "docs").collect()
+      .map(r => (r.getString(0), r.getString(1), r.get(2), r.getLong(3)))
+      .sortBy(_._1)
+    assert(empty.toSeq == Seq(
+      ("e_lang", "quarantine", 0L, 0L), ("e_n", "drop", 0L, 0L)))
   }
 
   test("warn counts but never removes") {

@@ -480,15 +480,21 @@ class PlanSpec extends SparkSpec {
     val df = spark.range(0, 10000).select(col("id").as("doc_id"),
       (col("id") % 97).as("n_chars"),
       concat(lit("t"), col("id")).as("text"))
-    val sched = Validate.ruleSchedule(df, Seq(
-      ("a", Rule.Check(Keywords(properties = Map(
-        "n_chars" -> Rule.Check(Keywords(minimum = Some(0)))))), 1.0),
-      ("b", Rule.Check(Keywords(properties = Map(
-        "doc_id" -> Rule.Check(Keywords(maximum = Some(-1)))))), 2.0)))
+    val rules = Seq(
+      "a" -> Rule.Check(Keywords(properties = Map(
+        "n_chars" -> Rule.Check(Keywords(minimum = Some(0)))))),
+      "b" -> Rule.Check(Keywords(properties = Map(
+        "doc_id" -> Rule.Check(Keywords(maximum = Some(-1)))))))
+    val sched = Validate.ruleSchedule(df,
+      rules.zip(Seq(1.0, 2.0)).map { case ((n, r), c) => (n, r, c) })
     val audit = Validate.crossFieldAudit(df, Seq(
       ("len", col("n_chars") >= 0), ("pos", col("doc_id") >= 0)), "doc_id")
-    Seq(planOf(sched), planOf(audit)).foreach { p =>
-      assert("Range".r.findAllIn(p).length == 1,
+    val coverage = Validate.ruleCoverage(df, rules)
+    val failFast = Validate.failFastProfile(df, rules)
+    val metrics = Enforce.metrics(df, rules.map { case (n, r) =>
+      Enforce.Expectation(n, r, Enforce.Action.Warn) })
+    Seq(sched, audit, coverage, failFast, metrics).map(planOf).foreach { p =>
+      assert("""Range \(""".r.findAllIn(p).length == 1,
         s"corpus scanned more than once:\n$p")
       assert(!p.contains("Exchange hashpartitioning") ||
         "Exchange hashpartitioning\\(1[,)]".r.findFirstIn(p).isDefined,

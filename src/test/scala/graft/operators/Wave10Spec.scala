@@ -25,6 +25,10 @@ class Wave10Spec extends SparkSpec {
     assert((r.getString(0), r.getString(1)) == (("enum", "bound")))
     assert((r.getLong(2), r.getLong(3), r.getLong(4)) == ((2L, 3L, 2L)))
     assert(r.getDouble(5) == 0.666667) // round(2/3, 6)
+    // an empty corpus: every counter is 0 (not null), Jaccard undefined
+    val e = Validate.ruleCooccurrence(docs.limit(0), rules).collect()
+    assert(e.map(r => (r.get(2), r.get(3), r.get(4), r.isNullAt(5))).toSeq ==
+      Seq((0L, 0L, 0L, true)))
   }
 
   test("ruleCooccurrence: disjoint failure sets give Jaccard 0; " +

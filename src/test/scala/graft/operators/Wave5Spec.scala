@@ -80,6 +80,13 @@ class Wave5Spec extends SparkSpec {
       ("enum", 1L, "firing"),
       ("impossible", 3L, "always"),
       ("nonneg", 0L, "silent")))
+    // an empty corpus fails nothing: counts are 0 (not null), the rate is
+    // undefined, and every rule is silent
+    val empty = Validate.ruleCoverage(docs.limit(0), rules).orderBy("rule")
+      .collect().map(r => (r.getString(0), r.get(1), r.getLong(2),
+        r.isNullAt(3), r.getString(4)))
+    assert(empty.toSeq == rules.map(_._1).sorted.map(
+      (_, 0L, 0L, true, "silent")))
   }
 
   // ---------------- distributed rank / curriculum ----------------
