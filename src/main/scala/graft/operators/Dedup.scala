@@ -320,27 +320,6 @@ object Dedup {
     GraftShims.column(graft.plans.SimHashOps.simhashExpr(GraftShims.expression(toks)))
   }
 
-  /** The HOF formulation of [[simHash]] — kept as the bit-identical
-    * cross-check of the native expression (asserted in PipelineOpsSpec).
-    */
-  def simHashHof(text: Column): Column = {
-    val toks = split(lower(regexp_replace(trim(text), "\\s+", " ")), " ")
-    // votes: array of 64 counters; each token adds +1/-1 per bit of its hash
-    val votes = aggregate(
-      toks,
-      transform(sequence(lit(0), lit(63)), _ => lit(0)),
-      (acc, t) => {
-        val h = xxhash64(t)
-        zip_with(acc, sequence(lit(0), lit(63)), (a, bit) =>
-          a + when(call_function("shiftright", h, bit).bitwiseAND(lit(1L)) === 1L, 1).otherwise(-1))
-      })
-    // fold votes back into a long
-    aggregate(
-      zip_with(votes, sequence(lit(0), lit(63)), (v, bit) =>
-        when(v > 0, call_function("shiftleft", lit(1L), bit)).otherwise(lit(0L))),
-      lit(0L), (acc, x) => acc.bitwiseOR(x))
-  }
-
   /** PORTABLE 48-bit SimHash twin: same vote construction as [[simHash]]
     * but the per-token hash is a base-31 polynomial rolling hash mod a
     * 48-bit prime-ish constant — pure integer arithmetic any engine
@@ -736,25 +715,13 @@ object Dedup {
     import org.apache.spark.sql.GraftShims
     // native kernel (graft.plans.PortableMinHashOps.portableSig): one digest per
     // DISTINCT shingle slot, minima kept as raw digest bytes — bit-identical
-    // to [[minHashPortableSigHof]] (PipelineOpsSpec cross-checks), which
+    // to its HOF twin (PipelineOpsSpec cross-checks), which
     // allocated a 16-slot string array + 16 interpreted md5 trees per
     // shingle. NoInline fences it from filter-pushdown duplication (the
     // lshBands precedent).
     GraftShims.column(graft.plans.NoInline(graft.plans.PortableMinHashOps.portableSigExpr(
       GraftShims.expression(normTokens(text)), k, numHashes)))
   }
-
-  /** The HOF twin of [[minHashPortableSig]] — kept as the cross-check
-    * oracle for the native kernel (PipelineOpsSpec), not used in queries.
-    */
-  private[graft] def minHashPortableSigHof(text: Column, k: Int = 3,
-      numHashes: Int = 16): Column =
-    aggregate(
-      shingles(text, k),
-      array_repeat(lit("g"), numHashes),
-      (acc, s) => zip_with(acc, sequence(lit(0), lit(numHashes - 1)),
-        (m, seed) => least(m, md5(concat(seed.cast("string"), lit(" "), s)))),
-      acc => when(element_at(acc, 1) === lit("g"), lit(null)).otherwise(acc))
 
   /** Shingle document-frequency histogram — the one-page corpus-redundancy
     * profile: for each doc-frequency value, how many distinct k-shingles

@@ -40,15 +40,6 @@ object Similarity {
       GraftShims.expression(a), GraftShims.expression(b)))
   }
 
-  /** HOF formulation of [[cosine]] — kept as the bit-identical semantics
-    * cross-check of the native kernel (asserted in PipelineOpsSpec).
-    */
-  def cosineHof(a: Column, b: Column): Column = {
-    val d = dot(a, b)
-    val n = norm(a) * norm(b)
-    when(n === 0.0, 0.0).otherwise(d / n)
-  }
-
   /** Per-row cosine scores against one query vector (driver-side literal —
     * the query is small; it folds into codegen as constants). No sort: a
     * single scan projection.
@@ -327,7 +318,7 @@ object Similarity {
     import org.apache.spark.sql.GraftShims
     // native kernel (graft.plans.QuantizeInt8Ops.quantize): one pass computes the
     // max-abs scale and the rounded int8 values, IEEE-identical to
-    // [[quantizeInt8Hof]] (PipelineOpsSpec cross-checks), which ran an
+    // its HOF twin (PipelineOpsSpec cross-checks), which ran an
     // interpreted aggregate + a branchy transform per row. NoInline fences
     // it from projection duplication (the lshBands precedent). The kernel
     // reads float or double elements natively — no cast pass.
@@ -341,22 +332,6 @@ object Similarity {
     df.filter(col(vecCol).isNotNull)
       .select(col(idCol).as("id"), qz.as("_q"))
       .select(col("id"), col("_q.scale").as("scale"), col("_q.qvec").as("qvec"))
-  }
-
-  /** The HOF twin of [[quantizeInt8]] — kept as the cross-check oracle for
-    * the native kernel (PipelineOpsSpec), not used in queries.
-    */
-  private[operators] def quantizeInt8Hof(df: DataFrame, idCol: String,
-      vecCol: String): DataFrame = {
-    val v = transform(col(vecCol), x => x.cast("double"))
-    val scale = aggregate(v, lit(0.0d), (acc, x) => greatest(acc, abs(x)))
-    df.filter(col(vecCol).isNotNull)
-      .select(col(idCol).as("id"), scale.as("scale"), v.as("_v"))
-      .select(col("id"), col("scale"),
-        transform(col("_v"), x =>
-          when(col("scale") === 0.0, lit(0))
-            .otherwise(floor(x / col("scale") * 127.0 + 0.5).cast("int")))
-          .as("qvec"))
   }
 
   /** Per-label centroids in long form: one row per (label, dim) with the

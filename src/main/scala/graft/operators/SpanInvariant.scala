@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import graft.plans.ArrayLoop
 import graft.rules.RuleCompiler
 
 /** The north-rule per-row span invariant (BASELINE.json:14-15): the span
@@ -9,12 +10,10 @@ import graft.rules.RuleCompiler
   * The reference's closest analogue is `prefixItems`/`items` + `const`/`enum`
   * per field + ordered uniqueness (`/root/reference/src/schemas/array.rs:225-278`,
   * `src/lib.rs:145-188`); the cross-field and cross-element parts are not
-  * expressible in the keyword vocabulary, so they compile here directly to
-  * higher-order functions over `array<struct>` — `transform`/`filter`/
-  * `zip_with`/`forall`, zero shuffles. Those HOFs are `CodegenFallback`,
-  * so an operator holding [[violationsCol]] runs interpreted (its plan line
-  * has no `*(n)` prefix; ROADMAP direction F). Only [[predCol]], the native
-  * kernel, stays inside whole-stage codegen:
+  * expressible in the keyword vocabulary, so they compile here directly:
+  * [[predCol]] to a native kernel, [[violationsCol]] to two generated
+  * [[graft.plans.ArrayLoop]]s over `array<struct>` (one per span, one per
+  * adjacent pair), zero shuffles, no interpreted higher-order function:
   *
   *   1. `kind ∈ {text, media}`                               (enum)
   *   2. `kind = "media"  ⇔  media_ref ≠ ""`                  (cross-field)
@@ -65,56 +64,39 @@ object SpanInvariant {
       .otherwise(violationsColUnguarded(spans))
 
   /** Unguarded form (always constructs the arrays) — used by tests to check
-    * pred/violations agreement.
+    * pred/violations agreement. Per span, its failed checks in check order;
+    * then one `offset.order` row per adjacent pair whose offsets do not
+    * increase.
     */
   def violationsColUnguarded(spans: Column): Column = {
-    val perSpan = flatten(transform(spans, (s, i) => {
-      val checks = spanChecks(s).map { case (rule, pred, msg) =>
+    val none = array().cast(RuleCompiler.violArray)
+    val perSpan = ArrayLoop.flatMap(spans) { (s, i) =>
+      concat(spanChecks(s).map { case (rule, pred, msg) =>
         val field = rule.takeWhile(_ != '.')
         when(!coalesce(pred, lit(false)),
-          viol(concat(lit("spans."), i.cast("string"), lit("." + field)), rule, msg))
-          .otherwise(lit(null).cast(RuleCompiler.violStruct))
-      }
-      filter(array(checks: _*), c => c.isNotNull)
-    }))
-    // strictly increasing offsets: compare each adjacent pair via zip_with
-    // against the 1-shifted sequence (slice pads the tail comparison away)
-    val shifted = slice(spans, lit(2), greatest(size(spans) - 1, lit(0)))
-    val orderViols = filter(
-      zip_with(spans, shifted, (a, b) =>
-        when(b.isNotNull && b.getField("offset") <= a.getField("offset"),
-          a.getField("offset")).otherwise(lit(null).cast("int"))),
-      x => x.isNotNull)
-    val orderViolRows = transform(orderViols, o =>
-      viol(lit("spans"), "offset.order",
-        concat(lit("Span offsets are not strictly increasing (offset "),
-          o.cast("string"), lit(" followed by a smaller or equal offset)"))))
-    val spansNull = spans.isNull
-    when(spansNull,
+          array(viol(concat(lit("spans."), i.cast("string"), lit("." + field)), rule, msg)))
+          .otherwise(none)
+      }: _*)
+    }
+    val orderViols = ArrayLoop.flatMapPairs(spans) { (a, b) =>
+      when(b.isNotNull && b.getField("offset") <= a.getField("offset"),
+        array(viol(lit("spans"), "offset.order",
+          concat(lit("Span offsets are not strictly increasing (offset "),
+            a.getField("offset").cast("string"),
+            lit(" followed by a smaller or equal offset)"))))).otherwise(none)
+    }
+    when(spans.isNull,
       array(viol(lit("spans"), "required", lit("Required property 'spans' is missing!"))))
-      .otherwise(concat(perSpan, orderViolRows))
+      .otherwise(concat(perSpan, orderViols))
   }
 
   /** Boolean predicate form (no violation construction) — the cheap path
     * for verdict-only runs: the native kernel ([[graft.plans.SpanOps.holds]],
-    * one tight loop, zero intermediate arrays, inside whole-stage codegen).
-    * The HOF form below ([[predColHof]]) is semantically identical
-    * and kept for cross-checking.
+    * one tight loop, zero intermediate arrays, inside whole-stage codegen),
+    * cross-checked against a higher-order-function oracle in the specs.
     */
   def predCol(spans: Column): Column = {
     import org.apache.spark.sql.GraftShims
     GraftShims.column(graft.plans.SpanInvariantHolds(GraftShims.expression(spans)))
-  }
-
-  /** HOF formulation of the predicate (interpreted eval; reference
-    * semantics oracle for the native expression).
-    */
-  def predColHof(spans: Column): Column = {
-    val perSpan = forall(spans, s =>
-      spanChecks(s).map(_._2).map(p => coalesce(p, lit(false))).reduce(_ && _))
-    val shifted = slice(spans, lit(2), greatest(size(spans) - 1, lit(0)))
-    val ordered = forall(zip_with(spans, shifted, (a, b) =>
-      b.isNull || b.getField("offset") > a.getField("offset")), x => x)
-    spans.isNotNull && coalesce(perSpan, lit(false)) && coalesce(ordered, lit(true))
   }
 }

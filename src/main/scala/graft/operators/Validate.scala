@@ -23,11 +23,11 @@ import graft.model.{Verdict, Violation}
   * rare procedural `format`s), so at 100 TB the per-row phase is a single
   * scan with no shuffle; the only shuffle in the whole per-row pipeline is
   * the final per-partition verdict aggregation, which is a
-  * map-side-combined `groupBy` on the partition column. Not all of it is
-  * whole-stage codegen'd: the array and map keywords (`items`, `contains`,
-  * `uniqueItems`, `prefixItems`, map keys) lower to higher-order functions,
-  * which are `CodegenFallback`, and one of them makes its whole operator
-  * run interpreted (ROADMAP direction F).
+  * map-side-combined `groupBy` on the partition column. All of it is
+  * generated code: the array and map keywords (`items`, `contains`,
+  * `uniqueItems`, `unevaluatedItems`, map keys) and the span invariant's
+  * violations lower to [[graft.plans.ArrayLoop]]s, not to Spark's
+  * higher-order functions, which are interpreted `CodegenFallback`s.
   *
   * Every rule-set report asks "does this row fail this rule" through ONE
   * predicate, [[passes]], and counts per-rule flags through ONE

@@ -38,7 +38,7 @@ object PortableMinHashOps {
     * `zip_with` allocates a fresh 16-slot string array AND evaluates 16
     * interpreted md5/concat/least trees per shingle) dominated
     * d_minhash_quality's wall. Cross-checked against
-    * `Dedup.minHashPortableSigHof` in PipelineOpsSpec.
+    * its HOF twin (`graft.HofOracles` in the specs) in PipelineOpsSpec.
     */
   def portableSig(arr: ArrayData, k: Int, numHashes: Int): ArrayData = {
     val n = arr.numElements()

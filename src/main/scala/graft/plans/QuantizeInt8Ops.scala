@@ -10,7 +10,7 @@ import org.apache.spark.sql.types._
 object QuantizeInt8Ops {
 
   /** Symmetric int8 quantization of a double vector in one pass —
-    * IEEE-identical to the HOF pipeline `Similarity.quantizeInt8Hof`
+    * IEEE-identical to the HOF pipeline it replaced
     * (scale = left-to-right max of |x|; q = floor(x / scale * 127.0 + 0.5)
     * as int; all-zero vector quantizes to zeros with scale 0). Returns a
     * struct(scale double, qvec array<int>). `isFloat` reads float
@@ -19,7 +19,7 @@ object QuantizeInt8Ops {
     * Exists because the HOF formulation (an interpreted max-abs `aggregate`
     * plus a per-element `transform` with a branch per value) dominated the
     * quantized-serving queries. Cross-checked against
-    * `Similarity.quantizeInt8Hof` in PipelineOpsSpec.
+    * its HOF twin (`graft.HofOracles` in the specs) in PipelineOpsSpec.
     */
   def quantize(vec: ArrayData, isFloat: Boolean): InternalRow = {
     val n = vec.numElements()

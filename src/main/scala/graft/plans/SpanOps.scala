@@ -48,12 +48,15 @@ object SpanOps {
     * and null offsets fail. The field positions come from the resolved
     * span struct ([[SpanInvariantHolds]]).
     *
-    * Exists because the HOF formulation (`forall`/`zip_with`/`slice` in
-    * `SpanInvariant.predColHof`) is interpreted (higher-order functions
-    * don't participate in codegen) and allocates shifted copies of the span
-    * array per row — profiled at ~2× the wall time and visibly worse
-    * thread-scaling from the allocation pressure. Semantics are identical
-    * (cross-checked in tests against the HOF form).
+    * Exists because the predicate runs on every row, and here it is one
+    * pass that reads the four fields by position and compares each offset
+    * with the previous one. The higher-order-function formulation it
+    * replaced (`forall`/`zip_with`/`slice`, now the specs' oracle
+    * `graft.HofOracles.spanPredHof`) was interpreted and allocated shifted
+    * copies of the span array per row — profiled at ~2× the wall time.
+    * The violations side ([[graft.operators.SpanInvariant.violationsCol]])
+    * runs only on failing rows, as generated [[ArrayLoop]]s. Semantics are
+    * identical (cross-checked in tests against the HOF form).
     */
   def holds(arr: ArrayData, kindIdx: Int, textIdx: Int, refIdx: Int,
       offIdx: Int, nFields: Int): Boolean = {

@@ -3,6 +3,8 @@ package graft.rules
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.sql.GraftShims
+import graft.plans.{ArrayLoop, Outline}
 
 /** Result of compiling a rule against a value column:
   *   - `pred`: boolean Column — true iff the value satisfies the rule;
@@ -17,8 +19,10 @@ final case class Compiled(pred: Column, violations: Column)
 /** Compiles a [[Rule]] tree into Catalyst `Column` expressions, once, on the
   * driver — the analogue of `Subschema::try_from` + `validate` fused
   * (`/root/reference/src/schemas/yaml_schema.rs:439-660,705-898`), except the
-  * output is a declarative expression evaluated set-at-a-time by Tungsten
-  * whole-stage codegen instead of a recursive tree walk per document.
+  * output is a declarative expression evaluated set-at-a-time instead of a
+  * recursive tree walk per document. Array and map keywords lower to
+  * [[graft.plans.ArrayLoop]]s, so the whole tree is generated code: no
+  * higher-order function (an interpreted `CodegenFallback`) remains.
   *
   * The table schema is static, so type dispatch (`yaml_schema.rs:1005-1096`)
   * largely resolves at compile time: a `type: string` rule against an int
@@ -43,6 +47,11 @@ object RuleCompiler {
   val violArray: ArrayType = ArrayType(violStruct, containsNull = true)
 
   private def emptyViols: Column = array().cast(violArray)
+
+  /** Does `f` hold for no element of `arr`? (`size(filter(arr, f)) = 0` on
+    * a non-null array, stopping at the first hit.) */
+  private def none(arr: Column)(f: (Column, Column) => Column): Column =
+    !coalesce(ArrayLoop.exists(arr)(f), lit(false))
 
   /** Violation path, statically known wherever possible so paths fold to
     * string literals at plan time (dynamic only under array indices / map
@@ -84,10 +93,21 @@ object RuleCompiler {
         array(struct(path.col.as("path"), lit(c.rule).as("rule"), c.msg.as("message"))))
         .otherwise(emptyViols)
     } ++ nested.map(n => coalesce(n, emptyViols))
-    val pred = preds.foldLeft(lit(true))(_ && _)
-    val viols = if (violParts.isEmpty) emptyViols else concat(violParts: _*)
+    val pred = if (preds.isEmpty) lit(true) else chunked(preds)(_.reduce(_ && _))
+    val viols = if (violParts.isEmpty) emptyViols else chunked(violParts)(concat(_: _*))
     Compiled(pred, viols)
   }
+
+  /** Parts per generated method: see [[graft.plans.Outline]]. */
+  private val Chunk = 8
+
+  /** `f` over `parts`; over more than [[Chunk]] parts, `f` over groups of
+    * them, each an [[graft.plans.Outline]]d method (`f` must be
+    * associative, as `&&` and `concat` are). */
+  private def chunked(parts: Seq[Column])(f: Seq[Column] => Column): Column =
+    if (parts.size <= Chunk) f(parts)
+    else chunked(parts.grouped(Chunk).map(g =>
+      GraftShims.column(Outline(GraftShims.expression(f(g))))).toSeq)(f)
 
   // --- value rendering for messages ---
 
@@ -298,8 +318,27 @@ object RuleCompiler {
     * static type `dt`; `defs` are resolved `$defs` bindings.
     */
   def compile(rule: Rule, value: Column, dt: DataType,
-      defs: Map[String, Rule] = Map.empty): Compiled =
-    compileAt(rule, value, dt, StaticPath(""), defs, Set.empty, Inh.empty)
+      defs: Map[String, Rule] = Map.empty): Compiled = {
+    val c = compileAt(rule, value, dt, StaticPath(""), defs, Set.empty, Inh.empty)
+    val parts = Seq(c.pred, c.violations).map(GraftShims.expression)
+    if (parts.map(_.collect { case o: Outline => o }.size).sum <= MaxOutlined) c
+    else {
+      val Seq(pred, viols) = parts.map(e =>
+        GraftShims.column(e.transform { case Outline(child) => child }))
+      Compiled(pred, viols)
+    }
+  }
+
+  /** Outlined methods per compiled rule. Each adds to the generated class;
+    * past about a megabyte of method source Spark moves further methods
+    * into nested classes, and some of its own (an aggregate's loop over a
+    * range scan) then fail at run time reading the iterator's protected
+    * fields — seen at 140 properties (42 outlines), not at 100 (30). A
+    * larger rule stays inline: its one method is over 64 KB, and Spark
+    * falls back to its row-at-a-time projection, which splits methods
+    * itself.
+    */
+  private val MaxOutlined = 24
 
   /** `active` tracks $refs expanded at the CURRENT value position: a ref
     * that recurses without descending into a child value can never
@@ -546,14 +585,14 @@ object RuleCompiler {
         }
         // patternProperties (objects.rs:134-149)
         kw.patternProperties.foreach { case (re, r) =>
-          val viol = flatten(transform(map_entries(v), e => {
+          val viol = ArrayLoop.flatMap(map_entries(v)) { (e, _) =>
             val c = subChild(r, e.getField("value"), valDt, path.childDyn(e.getField("key")))
             when(e.getField("key").rlike(re), c.violations).otherwise(emptyViols)
-          }))
+          }
           nested += when(objAppl, viol).otherwise(emptyViols)
-          extraPreds += (!objAppl || coalesce(forall(map_entries(v), e =>
+          extraPreds += (!objAppl || coalesce(ArrayLoop.forall(map_entries(v)) { (e, _) =>
             !e.getField("key").rlike(re) ||
-              subChild(r, e.getField("value"), valDt, path).pred), lit(false)))
+              subChild(r, e.getField("value"), valDt, path).pred }, lit(false)))
         }
         // additionalProperties (objects.rs:64-90,153-167): applies to keys not
         // in `properties` and matching no patternProperties regex
@@ -569,39 +608,42 @@ object RuleCompiler {
           }
           apRule match {
             case Rule.Reject =>
-              val extra = filter(map_keys(v), k => !isKnown(k))
-              val viol = transform(extra, k => struct(
-                path.childDyn(k).col.as("path"),
-                lit("additionalProperties").as("rule"),
-                concat(lit("Additional property '"), k, lit("' is not allowed!")).as("message")))
+              val viol = ArrayLoop.flatMap(map_keys(v)) { (k, _) =>
+                when(!isKnown(k), array(struct(
+                  path.childDyn(k).col.as("path"),
+                  lit("additionalProperties").as("rule"),
+                  concat(lit("Additional property '"), k, lit("' is not allowed!"))
+                    .as("message")))).otherwise(emptyViols)
+              }
               nested += when(objAppl, viol).otherwise(emptyViols)
-              extraPreds += (!objAppl || size(filter(map_keys(v), k => !isKnown(k))) === lit(0))
+              extraPreds += (!objAppl || none(map_keys(v))((k, _) => !isKnown(k)))
             case r =>
-              val viol = flatten(transform(map_entries(v), e => {
+              val viol = ArrayLoop.flatMap(map_entries(v)) { (e, _) =>
                 val k = e.getField("key")
                 val c = subChild(r, e.getField("value"), valDt, path.childDyn(k))
                 when(!isKnown(k), c.violations).otherwise(emptyViols)
-              }))
+              }
               nested += when(objAppl, viol).otherwise(emptyViols)
-              extraPreds += (!objAppl || coalesce(forall(map_entries(v), e =>
+              extraPreds += (!objAppl || coalesce(ArrayLoop.forall(map_entries(v)) { (e, _) =>
                 isKnown(e.getField("key")) ||
-                  subChild(r, e.getField("value"), valDt, path).pred), lit(false)))
+                  subChild(r, e.getField("value"), valDt, path).pred }, lit(false)))
           }
         }
         // propertyNames (objects.rs:169-178)
         kw.propertyNames.foreach { r =>
-          val bad = filter(map_keys(v), k =>
-            k =!= lit("$schema") && !subChild(r, k, StringType, path).pred)
-          val viol = transform(bad, k => struct(
-            path.col.as("path"), lit("propertyNames").as("rule"),
-            concat(lit("Property name '"), k, lit("' is not valid!")).as("message")))
+          val bad = (k: Column, _: Column) =>
+            k =!= lit("$schema") && !subChild(r, k, StringType, path).pred
+          val viol = ArrayLoop.flatMap(map_keys(v)) { (k, i) =>
+            when(bad(k, i), array(struct(
+              path.col.as("path"), lit("propertyNames").as("rule"),
+              concat(lit("Property name '"), k, lit("' is not valid!")).as("message"))))
+              .otherwise(emptyViols)
+          }
           nested += when(objAppl, viol).otherwise(emptyViols)
           // `$schema` is skipped in BOTH channels (objects.rs:121-125) —
           // skipping it only in violations would let pred fail with an
           // empty violation list
-          extraPreds += (!objAppl || size(filter(map_keys(v),
-            k => k =!= lit("$schema") &&
-              !subChild(r, k, StringType, path).pred)) === lit(0))
+          extraPreds += (!objAppl || none(map_keys(v))(bad))
         }
         if (kw.minProperties.isDefined || kw.maxProperties.isDefined) {
           val cnt = size(map_keys(v))
@@ -636,24 +678,26 @@ object RuleCompiler {
               keyEvaluated(self, k, v, dt, defs, active)
           uRule match {
             case Rule.Reject =>
-              val bad = filter(map_keys(v), k => !isEval(k))
-              val viol = transform(bad, k => struct(
-                path.childDyn(k).col.as("path"),
-                lit("unevaluatedProperties").as("rule"),
-                concat(lit("Unevaluated property '"), k,
-                  lit("' is not allowed!")).as("message"))) // yaml_schema.rs:949-953
+              val viol = ArrayLoop.flatMap(map_keys(v)) { (k, _) =>
+                when(!isEval(k), array(struct(
+                  path.childDyn(k).col.as("path"),
+                  lit("unevaluatedProperties").as("rule"),
+                  concat(lit("Unevaluated property '"), k,
+                    lit("' is not allowed!")).as("message")))) // yaml_schema.rs:949-953
+                  .otherwise(emptyViols)
+              }
               nested += when(objAppl, viol).otherwise(emptyViols)
-              extraPreds += (!objAppl || size(filter(map_keys(v), k => !isEval(k))) === lit(0))
+              extraPreds += (!objAppl || none(map_keys(v))((k, _) => !isEval(k)))
             case r =>
-              val viol = flatten(transform(map_entries(v), e => {
+              val viol = ArrayLoop.flatMap(map_entries(v)) { (e, _) =>
                 val k = e.getField("key")
                 val c = subChild(r, e.getField("value"), valDt, path.childDyn(k))
                 when(!isEval(k), c.violations).otherwise(emptyViols)
-              }))
+              }
               nested += when(objAppl, viol).otherwise(emptyViols)
-              extraPreds += (!objAppl || coalesce(forall(map_entries(v), e =>
+              extraPreds += (!objAppl || coalesce(ArrayLoop.forall(map_entries(v)) { (e, _) =>
                 isEval(e.getField("key")) ||
-                  subChild(r, e.getField("value"), valDt, path).pred), lit(false)))
+                  subChild(r, e.getField("value"), valDt, path).pred }, lit(false)))
           }
         }
 
@@ -679,21 +723,20 @@ object RuleCompiler {
         // channels now derive from the SAME dups expression so they always
         // agree (the reference rejects duplicate nulls too: HashSet insert).
         if (kw.uniqueItems) {
-          val indexed = transform(v, (x, i) => struct(x.as("x"), i.as("i")))
-          val dups = filter(indexed, s =>
-            exists(indexed, t =>
-              t.getField("i") < s.getField("i") &&
-                (t.getField("x") eqNullSafe s.getField("x"))))
-          nested += when(arrAppl, transform(dups, s => struct(
-            path.childDyn(s.getField("i")).col.as("path"),
-            lit("uniqueItems").as("rule"),
-            concat(lit("Duplicate array element: "),
-              fmtValue(elemDt, s.getField("x"))).as("message")))).otherwise(emptyViols)
-          extraPreds += (!arrAppl || size(dups) === lit(0))
+          val isDup = (x: Column, i: Column) =>
+            ArrayLoop.exists(v)((y, j) => j < i && (y eqNullSafe x))
+          nested += when(arrAppl, ArrayLoop.flatMap(v) { (x, i) =>
+            when(isDup(x, i), array(struct(
+              path.childDyn(i).col.as("path"),
+              lit("uniqueItems").as("rule"),
+              concat(lit("Duplicate array element: "), fmtValue(elemDt, x)).as("message"))))
+              .otherwise(emptyViols)
+          }).otherwise(emptyViols)
+          extraPreds += (!arrAppl || none(v)(isDup))
         }
         // contains + min/maxContains (array.rs:190-222); default min=1
         kw.contains.foreach { r =>
-          val cnt = size(filter(v, x => subChild(r, x, elemDt, path).pred))
+          val cnt = ArrayLoop.count(v)((x, _) => subChild(r, x, elemDt, path).pred)
           val minC = kw.minContains.getOrElse(1)
           chks += Chk(arrAppl, cnt >= lit(minC), "minContains",
             concat(lit(s"Array must contain at least $minC item(s) matching the contains " +
@@ -720,14 +763,15 @@ object RuleCompiler {
               lit("Array items are not allowed!")) // array.rs:268
           case r =>
             val skip = kw.prefixItems.length
-            val tailViols = flatten(transform(v, (x, i) => {
+            val tailViols = ArrayLoop.flatMap(v) { (x, i) =>
               val c = subChild(r, x, elemDt, path.childDyn(i))
               if (skip == 0) c.violations
               else when(i >= lit(skip), c.violations).otherwise(emptyViols)
-            }))
-            val tailPred = forall(transform(v, (x, i) =>
-              (if (skip == 0) lit(false) else i < lit(skip)) ||
-                subChild(r, x, elemDt, path).pred), identity)
+            }
+            val tailPred = ArrayLoop.forall(v) { (x, i) =>
+              val c = subChild(r, x, elemDt, path).pred
+              if (skip == 0) c else i < lit(skip) || c
+            }
             nested += when(arrAppl, tailViols).otherwise(emptyViols)
             extraPreds += (!arrAppl || coalesce(tailPred, lit(false)))
         }
@@ -739,26 +783,25 @@ object RuleCompiler {
             inh.item(x, i) || itemCovered(self, x, i, elemDt, v, dt, defs, active)
           uRule match {
             case Rule.Reject =>
-              val badIdx = filter(transform(v, (x, i) =>
-                when(covered(x, i), lit(null).cast("int")).otherwise(i)),
-                x => x.isNotNull)
-              val viol = transform(badIdx, i => struct(
-                path.childDyn(i).col.as("path"),
-                lit("unevaluatedItems").as("rule"),
-                concat(lit("Unevaluated array item at index "), i.cast(StringType),
-                  lit(" is not allowed!")).as("message"))) // yaml_schema.rs:981
+              val viol = ArrayLoop.flatMap(v) { (x, i) =>
+                when(covered(x, i), emptyViols).otherwise(array(struct(
+                  path.childDyn(i).col.as("path"),
+                  lit("unevaluatedItems").as("rule"),
+                  concat(lit("Unevaluated array item at index "), i.cast(StringType),
+                    lit(" is not allowed!")).as("message")))) // yaml_schema.rs:981
+              }
               nested += when(arrAppl, viol).otherwise(emptyViols)
               extraPreds += (!arrAppl ||
-                coalesce(forall(transform(v, (x, i) => covered(x, i)), identity), lit(true)))
+                coalesce(ArrayLoop.forall(v)(covered), lit(true)))
             case r =>
-              val viol = flatten(transform(v, (x, i) => {
+              val viol = ArrayLoop.flatMap(v) { (x, i) =>
                 val c = subChild(r, x, elemDt, path.childDyn(i))
                 when(!covered(x, i), c.violations).otherwise(emptyViols)
-              }))
+              }
               nested += when(arrAppl, viol).otherwise(emptyViols)
               extraPreds += (!arrAppl ||
-                coalesce(forall(transform(v, (x, i) =>
-                  covered(x, i) || subChild(r, x, elemDt, path).pred), identity), lit(true)))
+                coalesce(ArrayLoop.forall(v)((x, i) =>
+                  covered(x, i) || subChild(r, x, elemDt, path).pred), lit(true)))
           }
         }
       case _ => // array keywords vacuous on non-array types

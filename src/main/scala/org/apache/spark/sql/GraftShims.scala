@@ -1,6 +1,7 @@
 package org.apache.spark.sql
 
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Expression, HigherOrderFunction}
+import org.apache.spark.sql.types.{AbstractDataType, AnyDataType, ArrayType}
 
 /** Minimal bridge to the `private[sql]` Column <-> Expression converters in
   * Spark 4 (`org.apache.spark.sql.classic.ExpressionUtils`) so the engine's
@@ -18,4 +19,14 @@ object GraftShims {
     */
   def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()
+}
+
+/** The argument types of a higher-order function over one array with one
+  * lambda of any result type (`AbstractDataType` and `AnyDataType` are
+  * `private[sql]`): `graft.plans.ArrayLoopFn`, which checks the lambda's
+  * type itself.
+  */
+trait ArrayLambdaTypes extends HigherOrderFunction {
+  override def argumentTypes: Seq[AbstractDataType] = ArrayType :: Nil
+  override def functionTypes: Seq[AbstractDataType] = AnyDataType :: Nil
 }

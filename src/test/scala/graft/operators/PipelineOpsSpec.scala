@@ -84,7 +84,7 @@ class PipelineOpsSpec extends SparkSpec {
       .toDF("doc_id", "text")
     val mismatches = texts
       .select(Dedup.simHash(col("text")).as("native"),
-        Dedup.simHashHof(col("text")).as("hof"))
+        graft.HofOracles.simHashHof(col("text")).as("hof"))
       .filter(col("native") =!= col("hof")).count()
     assert(mismatches == 0L)
   }}
@@ -1138,7 +1138,7 @@ class PipelineOpsSpec extends SparkSpec {
       .toDF("a", "b")
     val out = pairs.select(
       Similarity.cosine(col("a"), col("b")).as("native"),
-      Similarity.cosineHof(col("a"), col("b")).as("hof")).collect()
+      graft.HofOracles.cosineHof(col("a"), col("b")).as("hof")).collect()
     out.foreach { r =>
       assert(r.isNullAt(0) == r.isNullAt(1), s"$r")
       if (!r.isNullAt(0))
@@ -1324,7 +1324,7 @@ class PipelineOpsSpec extends SparkSpec {
     val native = Similarity.quantizeInt8(vecs, "id", "vec")
       .orderBy("id").collect()
       .map(r => (r.getDouble(1), r.getSeq[Int](2)))
-    val hof = Similarity.quantizeInt8Hof(vecs, "id", "vec")
+    val hof = graft.HofOracles.quantizeInt8Hof(vecs, "id", "vec")
       .orderBy("id").collect()
       .map(r => (r.getDouble(1), r.getSeq[Int](2)))
     assert(native.length == hof.length)
@@ -1361,7 +1361,7 @@ class PipelineOpsSpec extends SparkSpec {
         .orderBy("doc_id").collect()
         .map(r => if (r.isNullAt(1)) null else r.getSeq[String](1))
       val hof = corpus.select(col("doc_id"),
-        Dedup.minHashPortableSigHof(col("text"), k, n).as("s"))
+        graft.HofOracles.minHashPortableSigHof(col("text"), k, n).as("s"))
         .orderBy("doc_id").collect()
         .map(r => if (r.isNullAt(1)) null else r.getSeq[String](1))
       assert(native.length == hof.length)

@@ -518,7 +518,7 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("CartesianProduct"), s"cartesian advisory join:\n$p")
     assert(p.contains("TakeOrderedAndProject"),
       s"top-k should lower to TakeOrdered, not a global sort:\n$p")
-    assert("Range".r.findAllIn(p).length == 1,
+    assert("""Range \(""".r.findAllIn(p).length == 1,
       s"corpus scanned more than once:\n$p")
     assert("ReusedExchange".r.findAllIn(p).length >= 2,
       s"the count exchange should be computed once and reused:\n$p")
@@ -554,10 +554,10 @@ class PlanSpec extends SparkSpec {
       (col("id") % 5).cast("string").as("g"),
       timestamp_seconds(col("id") % 100000).as("ts"))
     val pLoad = planOf(Temporal.loadProfile(ev, "g", "ts"))
-    assert("Range".r.findAllIn(pLoad).length == 1,
+    assert("""Range \(""".r.findAllIn(pLoad).length == 1,
       s"loadProfile scanned the corpus twice:\n$pLoad")
     val pFresh = planOf(Temporal.freshness(ev, "g", "ts", 3600L))
-    assert("Range".r.findAllIn(pFresh).length == 1,
+    assert("""Range \(""".r.findAllIn(pFresh).length == 1,
       s"freshness re-scanned the corpus for the watermark:\n$pFresh")
     assert(!pFresh.contains("Join"),
       s"freshness should need no join at all:\n$pFresh")

@@ -59,14 +59,14 @@ class SpanInvariantSpec extends SparkSpec {
       negOffsetPerMille = 10, nullDocIdPerMille = 5))
     val mismatches = dirty.select(
       SpanInvariant.predCol($"spans").as("native"),
-      SpanInvariant.predColHof($"spans").as("hof"))
+      graft.HofOracles.spanPredHof($"spans").as("hof"))
       .filter($"native" =!= $"hof").count()
     assert(mismatches == 0)
     // plus the hand-built edge docs incl. null spans and empty arrays
     val edge = df.withColumn("spans",
       when($"doc_id" === "g1", $"spans").otherwise($"spans"))
     val m2 = edge.select(SpanInvariant.predCol($"spans").as("n"),
-      SpanInvariant.predColHof($"spans").as("h")).filter($"n" =!= $"h").count()
+      graft.HofOracles.spanPredHof($"spans").as("h")).filter($"n" =!= $"h").count()
     assert(m2 == 0)
   }}
 

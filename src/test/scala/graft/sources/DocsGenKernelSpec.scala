@@ -39,7 +39,7 @@ class DocsGenKernelSpec extends SparkSpec {
         skew = 19, badMediaRefPerMille = 5))
     knobSets.foreach { k =>
       val native = render(DocsGen.docs(spark, k))
-      val hof = render(DocsGen.docsHof(spark, k))
+      val hof = render(graft.HofOracles.docsHof(spark, k))
       assert(native.length == hof.length, s"$k: row counts differ")
       native.zip(hof).zipWithIndex.foreach { case ((n, h), i) =>
         assert(n == h, s"$k row $i: $n != $h")
