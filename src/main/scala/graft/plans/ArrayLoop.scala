@@ -6,7 +6,6 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen._
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.catalyst.trees.TreePattern._
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData, MapData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.{CalendarInterval, GeographyVal, GeometryVal, UTF8String, VariantVal}
@@ -22,13 +21,9 @@ object LoopForm {
   case object Exists extends LoopForm("exists")
   /** How many bodies are true (`size(filter(…))`). */
   case object Count extends LoopForm("count")
-  /** The bodies as an array (`transform`). */
-  case object Map extends LoopForm("map")
   /** The array bodies concatenated; null if one is null
     * (`flatten(transform(…))`). */
   case object FlatMap extends LoopForm("flatmap")
-  /** The elements whose body is true (`filter`). */
-  case object Filter extends LoopForm("filter")
 }
 
 /** A loop variable of an [[ArrayLoop]]: `x<d>` (the element), `i<d>` (its
@@ -41,10 +36,6 @@ object LoopForm {
   * evaluates its body with.
   */
 case class LoopVar(name: String, dataType: DataType, nullable: Boolean) extends LeafExpression {
-  // excludes every expression over a loop variable from subexpression
-  // elimination, which would hoist it out of its loop
-  final override val nodePatterns: Seq[TreePattern] = Seq(LAMBDA_VARIABLE)
-
   override def eval(input: InternalRow): Any = input match {
     case r: LoopRow => r.value(name)
     case _ => throw new IllegalStateException(s"loop variable $name evaluated outside its loop")
@@ -79,6 +70,20 @@ private object LoopScope {
     }
     throw new IllegalStateException(s"loop variable $name generated outside its loop")
   }
+}
+
+/** Whether methods of our own ([[ArrayLoop]] bodies, [[Outline]]s) may
+  * still be added to `ctx`'s generated class. Past
+  * `CodeGenerator.GENERATED_CLASS_SIZE_THRESHOLD` characters of method
+  * source Spark moves further methods into nested classes, and some of its
+  * own then fail at run time: an aggregate over a range scan reads the
+  * iterator's protected `partitionIndex` from one (`IllegalAccessError`).
+  * Ours stop at half that, leaving the rest to Spark's; past it, code is
+  * generated in place.
+  */
+private[plans] object MethodBudget {
+  def hasRoom(ctx: CodegenContext): Boolean =
+    ctx.declareAddedFunctions().length <= CodeGenerator.GENERATED_CLASS_SIZE_THRESHOLD / 2
 }
 
 /** The row an interpreted loop body is evaluated with: the outer row for
@@ -141,12 +146,18 @@ private final class LoopRow(outer: InternalRow, names: Array[String]) extends In
   * allocated per call). A body that reads no column — only loop variables
   * and literals — is generated into a method of its own, with the loop,
   * so the calling method stays small enough for the JIT; a body that reads
-  * columns is generated inline, where those columns are in scope. A body
-  * holding a `CodegenFallback` makes the whole loop run interpreted.
+  * columns is generated inline, where those columns are in scope. So is
+  * every loop once the generated class has no [[MethodBudget]] left. A
+  * body holding a `CodegenFallback` makes the whole loop run interpreted.
   *
   * Subexpression elimination never looks into the body (a
   * [[ConditionalExpression]] whose only always-evaluated input is the
-  * array): a body runs once per element, or not at all.
+  * array): a body runs once per element, or not at all, so nothing over a
+  * loop variable is hoisted out of its loop. The loop itself, and every
+  * expression around it, stays eligible, as with Spark's HOFs: [[LoopVar]]
+  * carries no `LAMBDA_VARIABLE` pattern, which would make Spark skip the
+  * whole projection item or aggregate input it sits in (`ruleCooccurrence`
+  * uses one rule's fail flag in several counters).
   */
 case class ArrayLoop(form: LoopForm, array: Expression, body: Expression, depth: Int,
     pairs: Boolean) extends Expression with ConditionalExpression {
@@ -171,9 +182,7 @@ case class ArrayLoop(form: LoopForm, array: Expression, body: Expression, depth:
   override def dataType: DataType = form match {
     case ForAll | Exists => BooleanType
     case Count => IntegerType
-    case Map => ArrayType(body.dataType, body.nullable)
     case FlatMap => body.dataType
-    case Filter => array.dataType
   }
 
   override def nullable: Boolean = array.nullable || (form match {
@@ -182,7 +191,6 @@ case class ArrayLoop(form: LoopForm, array: Expression, body: Expression, depth:
   })
 
   override def checkInputDataTypes(): TypeCheckResult = (array.dataType, form) match {
-    case (_: ArrayType, Map) => TypeCheckResult.TypeCheckSuccess
     case (_: ArrayType, FlatMap) if body.dataType.isInstanceOf[ArrayType] =>
       TypeCheckResult.TypeCheckSuccess
     case (_: ArrayType, _) if body.dataType == BooleanType => TypeCheckResult.TypeCheckSuccess
@@ -232,7 +240,6 @@ case class ArrayLoop(form: LoopForm, array: Expression, body: Expression, depth:
           k += 1
         }
         n
-      case Map => new GenericArrayData(Array.tabulate[Any](math.max(last, 0))(run))
       case FlatMap =>
         val bt = body.dataType.asInstanceOf[ArrayType].elementType
         val out = Array.newBuilder[Any]
@@ -250,8 +257,6 @@ case class ArrayLoop(form: LoopForm, array: Expression, body: Expression, depth:
           k += 1
         }
         new GenericArrayData(out.result())
-      case Filter =>
-        new GenericArrayData((0 until math.max(last, 0)).filter(run(_) == true).map(elem).toArray)
     }
   }
 
@@ -280,7 +285,7 @@ case class ArrayLoop(form: LoopForm, array: Expression, body: Expression, depth:
     val decls =
       s"""boolean $resNull = false;
          |$javaType $res = ${CodeGenerator.defaultValue(dataType)};""".stripMargin
-    val run = if (readsColumns) {
+    val run = if (readsColumns || !MethodBudget.hasRoom(ctx)) {
       s"""$decls
          |ArrayData $arr = ${a.value};
          |${loopCode(ctx, binds, arr, res, resNull)}
@@ -298,7 +303,7 @@ case class ArrayLoop(form: LoopForm, array: Expression, body: Expression, depth:
       ctx.INPUT_ROW = row
       ctx.currentVars = null
       val loop =
-        try ctx.withSubExprEliminationExprs(scala.collection.immutable.Map.empty)(
+        try ctx.withSubExprEliminationExprs(Map.empty)(
           Seq(ExprCode(code"${loopCode(ctx, binds, arr, res, resNull)}", FalseLiteral,
             FalseLiteral))).head.code
         finally {
@@ -361,10 +366,6 @@ case class ArrayLoop(form: LoopForm, array: Expression, body: Expression, depth:
           s"$resNull = $sawNull && !$flag;\n$res = ${if (stopOn) flag else s"!$flag"};")
       case Count =>
         (s"$res = 0;", "", s"if (!${b.isNull} && ${b.value}) { $res++; }", "")
-      case Map =>
-        (s"Object[] $out = new Object[$last];", "",
-          s"$out[$k] = ${b.isNull} ? null : ${boxed(body.dataType, b.value.toString)};",
-          s"$res = new $Gad($out);")
       case FlatMap =>
         val part = ctx.freshName("part")
         val j = ctx.freshName("j")
@@ -382,12 +383,6 @@ case class ArrayLoop(form: LoopForm, array: Expression, body: Expression, depth:
              |if (!$sawNull) {
              |  $res = new $Gad($out == null ? new Object[0] : $out.toArray());
              |}""".stripMargin)
-      case Filter =>
-        val m = ctx.freshName("m")
-        (s"Object[] $out = new Object[$last];\nint $m = 0;", "",
-          s"if (!${b.isNull} && ${b.value}) { $out[$m++] = " +
-            s"${x.isNull} ? null : ${boxed(et, x.value.toString)}; }",
-          s"$res = new $Gad($m == $last ? $out : java.util.Arrays.copyOf($out, $m));")
     }
     s"""int $last = ${if (pairs) s"Math.max($arr.numElements() - 1, 0)" else s"$arr.numElements()"};
        |$init
@@ -494,17 +489,9 @@ object ArrayLoop {
   def count(arr: Column)(f: (Column, Column) => Column): Column =
     loop(Count, arr, pairs = false)(v => f(v(0), v(1)))
 
-  /** `f(x, i)` for every element. */
-  def map(arr: Column)(f: (Column, Column) => Column): Column =
-    loop(Map, arr, pairs = false)(v => f(v(0), v(1)))
-
   /** The arrays `f(x, i)` concatenated; null if one is null. */
   def flatMap(arr: Column)(f: (Column, Column) => Column): Column =
     loop(FlatMap, arr, pairs = false)(v => f(v(0), v(1)))
-
-  /** The elements `f(x, i)` holds for. */
-  def filter(arr: Column)(f: (Column, Column) => Column): Column =
-    loop(Filter, arr, pairs = false)(v => f(v(0), v(1)))
 
   /** The arrays `f(a, b)` of every adjacent pair, concatenated. */
   def flatMapPairs(arr: Column)(f: (Column, Column) => Column): Column =

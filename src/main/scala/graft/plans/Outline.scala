@@ -10,13 +10,21 @@ import org.apache.spark.sql.types.DataType
 /** Identity wrapper whose child, inside whole-stage codegen, is generated
   * as a method of its own that takes the input variables it reads as
   * parameters — Spark's split of common subexpressions, applied to one
-  * subtree (which evaluates its own common subexpressions). Whole-stage codegen never splits an operator's expressions,
+  * subtree. Whole-stage codegen never splits an operator's expressions,
   * and HotSpot does not JIT-compile a method over 8,000 bytes of bytecode,
   * so a rule with a few dozen checks would otherwise run its projection in
-  * the bytecode interpreter. Outside whole-stage codegen Spark already
-  * moves large expressions into methods of their own, so there the child
-  * is generated in place. So is a child that would need more parameters
-  * than a Java method may have.
+  * the bytecode interpreter (a 20-property rule: one 8,479-byte method,
+  * twice the wall time of Spark's higher-order functions; see ROADMAP F).
+  *
+  * The child is generated without the caller's common subexpressions,
+  * which are locals of the calling method, so one the caller shares with
+  * the child is evaluated again inside the method. Subexpression
+  * elimination does not look into the child either, on both eval paths.
+  *
+  * Outside whole-stage codegen Spark already moves large expressions into
+  * methods of their own, so there the child is generated in place. So is a
+  * child that would need more parameters than a Java method may have, and
+  * every child once the generated class has no [[MethodBudget]] left.
   */
 case class Outline(child: Expression) extends UnaryExpression with ConditionalExpression {
   override def dataType: DataType = child.dataType
@@ -34,7 +42,7 @@ case class Outline(child: Expression) extends UnaryExpression with ConditionalEx
     // sorted: the parameter order is part of the generated source, which
     // must be the same in every task for the compiled class to be reused
     lazy val params = inputs.toSeq.sortBy(_.variableName)
-    if (ctx.currentVars == null ||
+    if (ctx.currentVars == null || !MethodBudget.hasRoom(ctx) ||
         !CodeGenerator.isValidParamLength(
           CodeGenerator.calculateParamLengthFromExprValues(params))) {
       val c = child.genCode(ctx)

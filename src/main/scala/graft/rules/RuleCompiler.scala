@@ -318,27 +318,8 @@ object RuleCompiler {
     * static type `dt`; `defs` are resolved `$defs` bindings.
     */
   def compile(rule: Rule, value: Column, dt: DataType,
-      defs: Map[String, Rule] = Map.empty): Compiled = {
-    val c = compileAt(rule, value, dt, StaticPath(""), defs, Set.empty, Inh.empty)
-    val parts = Seq(c.pred, c.violations).map(GraftShims.expression)
-    if (parts.map(_.collect { case o: Outline => o }.size).sum <= MaxOutlined) c
-    else {
-      val Seq(pred, viols) = parts.map(e =>
-        GraftShims.column(e.transform { case Outline(child) => child }))
-      Compiled(pred, viols)
-    }
-  }
-
-  /** Outlined methods per compiled rule. Each adds to the generated class;
-    * past about a megabyte of method source Spark moves further methods
-    * into nested classes, and some of its own (an aggregate's loop over a
-    * range scan) then fail at run time reading the iterator's protected
-    * fields — seen at 140 properties (42 outlines), not at 100 (30). A
-    * larger rule stays inline: its one method is over 64 KB, and Spark
-    * falls back to its row-at-a-time projection, which splits methods
-    * itself.
-    */
-  private val MaxOutlined = 24
+      defs: Map[String, Rule] = Map.empty): Compiled =
+    compileAt(rule, value, dt, StaticPath(""), defs, Set.empty, Inh.empty)
 
   /** `active` tracks $refs expanded at the CURRENT value position: a ref
     * that recurses without descending into a child value can never

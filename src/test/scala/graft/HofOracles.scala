@@ -16,9 +16,9 @@ import graft.sources.DocsGen
 object HofOracles {
 
   /** `c` with every [[graft.plans.ArrayLoop]] rewritten to Spark's HOFs:
-    * `forall`/`exists` over `transform`, `size(filter)`, `transform`,
-    * `flatten(transform)`, `filter`, and for pair loops a `zip_with` of the
-    * array with itself shifted by one, minus the padded last pair.
+    * `forall`/`exists` over `transform`, `size(filter)`,
+    * `flatten(transform)`, and for pair loops the `flatten` of a `zip_with`
+    * of the array with itself shifted by one, minus the padded last pair.
     */
   def loopsAsHofs(c: Column): Column = GraftShims.column(
     GraftShims.expression(c).transformUp {
@@ -28,7 +28,6 @@ object HofOracles {
           val rest = Greatest(Seq(Subtract(Size(arr), Literal(1)), Literal(0)))
           val zipped = Slice(ZipWith(arr, Slice(arr, Literal(2), rest), pairFn), Literal(1), rest)
           form match {
-            case LoopForm.ForAll => ArrayForAll(zipped, LambdaFunction.identity)
             case LoopForm.FlatMap => Flatten(zipped)
             case other => throw new IllegalArgumentException(s"pair $other")
           }
@@ -39,9 +38,7 @@ object HofOracles {
             case LoopForm.Exists =>
               ArrayExists(ArrayTransform(arr, f), LambdaFunction.identity, true)
             case LoopForm.Count => Size(ArrayFilter(arr, f))
-            case LoopForm.Map => ArrayTransform(arr, f)
             case LoopForm.FlatMap => Flatten(ArrayTransform(arr, f))
-            case LoopForm.Filter => ArrayFilter(arr, f)
           }
         }
     })

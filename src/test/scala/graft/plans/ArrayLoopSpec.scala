@@ -2,7 +2,7 @@ package graft.plans
 
 import graft.{HofOracles, SparkSpec}
 import graft.operators.{ResumableValidate, SpanInvariant}
-import graft.rules.{Keywords, Rule, RuleCompiler, RuleLoader}
+import graft.rules.{ConstVal, Keywords, Rule, RuleCompiler, RuleLoader}
 import graft.sources.DocsGen
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.expressions.{BindReferences, HigherOrderFunction}
@@ -117,16 +117,14 @@ class ArrayLoopSpec extends SparkSpec {
       // each loop form, with the index, on its own
       val xs = col("xs")
       Seq(ArrayLoop.forall(xs)((x, i) => x > i), ArrayLoop.exists(xs)((x, i) => x === i + 1),
-        ArrayLoop.count(xs)((x, i) => x > i), ArrayLoop.map(xs)((x, i) => x * i),
-        ArrayLoop.filter(xs)((x, i) => x.isNull || x > i),
-        ArrayLoop.flatMap(xs)((x, i) => array(x, i)),
+        ArrayLoop.count(xs)((x, i) => x > i), ArrayLoop.flatMap(xs)((x, i) => array(x, i)),
         ArrayLoop.flatMapPairs(xs)((a, b) => array(a - b))).foreach { c =>
         val (loops, hofs, lt, ht) = bothForms(arrays, c)
         assert(lt == ht && loops == hofs, s"$c:\n$loops\n!=\n$hofs")
       }
       // a body holding an interpreted Spark HOF runs the whole loop interpreted
-      val around = ArrayLoop.map(col("nested"))((xs, i) =>
-        when(forall(xs, y => y > i), i).otherwise(lit(-1)))
+      val around = ArrayLoop.flatMap(col("nested"))((xs, i) =>
+        array(when(forall(xs, y => y > i), i).otherwise(lit(-1))))
       assert(arrays.select(around).collect().map(_.get(0)).toSeq == Seq(
         Seq(0, 1), Seq(0, 1), Seq.empty, null, Seq(0), Seq(-1, 1, -1)))
     }
@@ -277,5 +275,48 @@ class ArrayLoopSpec extends SparkSpec {
     maxMethodSizes(graft.operators.Validate.withViolations(wide64, rule64)).foreach {
       case (what, bytes) => assert(bytes < 8000, s"64 properties, $what: a $bytes-byte method")
     }
+  }
+
+  /** Each rule's failing rows on `df`, from its HOF form. */
+  private def hofFails(df: DataFrame, rules: Seq[(String, Rule)]): Seq[Seq[Boolean]] = {
+    val row = struct(df.columns.map(col): _*)
+    df.select(rules.map { case (_, r) => !coalesce(HofOracles.loopsAsHofs(
+      RuleCompiler.compile(r, row, df.schema).pred), lit(false)) }: _*)
+      .collect().map(r => rules.indices.map(r.getBoolean)).toSeq
+  }
+
+  test("wide rules aggregated in one stage with a range scan run and match the HOF forms") {
+    // not checkpointed, and under Spark's 100-field whole-stage limit: the
+    // range scan, the rules and the aggregate share one generated class
+    val arr = (k: Int) => array((0 until 4).map(j => (col("id") * (k + 1) + j * 5) % 31): _*)
+    val elem = (max: Double) => Rule.Check(Keywords(minimum = Some(0.0), maximum = Some(max),
+      multipleOf = Some(1.0), enum_ = Some((0 until 30).map(v => ConstVal.VInt(v)).toList)))
+    val wide = spark.range(200).select(
+      (0 until 70).map(k => (col("id") * (k + 1) % 97).cast("int").as(s"p$k")) ++
+        (0 until 20).map(k => arr(k).as(s"a$k")): _*)
+    val rules = (0 until 4).map { r =>
+      s"r$r" -> Rule.Check(Keywords(properties =
+        ((0 until 60).map(k => s"p${(k + r * 3) % 70}" ->
+          Rule.Check(Keywords(maximum = Some(94.0 - r)))) ++
+          (0 until 20).map(k => s"a$k" -> Rule.Check(Keywords(
+            items = Some(elem(27.0 + r)))))).toMap))
+    }
+    val fails = hofFails(wide, rules)
+    val coverage = graft.operators.Validate.ruleCoverage(wide, rules)
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(coverage == rules.indices.map(i => rules(i)._1 -> fails.count(_(i)).toLong).toMap)
+    assert(coverage.values.exists(n => n > 0 && n < 200), coverage)
+    val pairs = graft.operators.Validate.ruleCooccurrence(wide, rules).collect()
+      .map(r => (r.getString(0), r.getString(1)) -> r.getLong(4)).toMap
+    assert(pairs == (for { i <- rules.indices; j <- rules.indices if i < j } yield
+      (rules(i)._1, rules(j)._1) -> fails.count(f => f(i) && f(j)).toLong).toMap)
+
+    // one rule of 150 array properties, each with an items subrule
+    val arrays = spark.range(200).select((0 until 150).map(k => arr(k).as(s"a$k")): _*)
+    val itemsRule = Seq("items" -> Rule.Check(Keywords(properties = (0 until 150).map(k =>
+      s"a$k" -> Rule.Check(Keywords(items = Some(elem(29.0))))).toMap)))
+    val failed = graft.operators.Validate.ruleCoverage(arrays, itemsRule).head().getLong(1)
+    assert(failed == hofFails(arrays, itemsRule).count(_.head).toLong)
+    assert(failed > 0 && failed < 200, failed)
   }
 }
