@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.ResumableValidate
 import graft.rules.RuleLoader
-import graft.sources.CommitLog
+import graft.sources.{CommitLog, LocalFs}
 
 /** spark-submit-able entry point — the distributed analogue of the
   * reference CLI `ys [-f schema.yaml]... instance.yaml [--fail-fast]
@@ -97,7 +97,7 @@ object Main {
     if (out.nonEmpty)
       spark.createDataFrame(
           java.util.Arrays.asList(rows: _*), audit.schema)
-        .coalesce(1).write.mode("overwrite")
+        .coalesce(1).write.options(LocalFs.writerOptions).mode("overwrite")
         .parquet(s"$out/forget_audit")
     val a = rows(0)
     System.err.println(s"[graft] forget: removed=${a.getLong(2)} " +
@@ -184,8 +184,8 @@ object Main {
     }
     val hconf = spark.sparkContext.hadoopConfiguration
     if (args.driftSave.nonEmpty) {
-      val p = new org.apache.hadoop.fs.Path(args.driftSave)
-      val out = p.getFileSystem(hconf).create(p, true)
+      val (fs, p) = LocalFs.fsFor(args.driftSave, hconf)
+      val out = fs.create(p, true)
       val json = merged.map { case (k, b) =>
         "\"" + jesc(k) + "\":\"" + java.util.Base64.getEncoder.encodeToString(b) + "\""
       }.mkString("{", ",", "}")
@@ -286,8 +286,8 @@ object Main {
         val yaml = operators.Inference.toYaml(operators.Inference.inferRule(docs))
         // Hadoop FS, not java.nio: --infer must honor the same URI schemes
         // (hdfs://, s3a://, file://, bare) as --docs/--out and the commit log
-        val outPath = new org.apache.hadoop.fs.Path(args.infer)
-        val fs = outPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        val (fs, outPath) =
+          LocalFs.fsFor(args.infer, spark.sparkContext.hadoopConfiguration)
         val os = fs.create(outPath, true)
         try os.write(yaml.getBytes(java.nio.charset.StandardCharsets.UTF_8))
         finally os.close()
@@ -353,14 +353,16 @@ object Main {
       if (args.catalog.nonEmpty) {
         val cat = spark.read.parquet(args.catalog)
         operators.RefIntegrity.violations(docs, cat)
-          .write.mode("overwrite").parquet(s"${args.out}/global_ref_integrity")
+          .write.options(LocalFs.writerOptions).mode("overwrite")
+          .parquet(s"${args.out}/global_ref_integrity")
         val n = spark.read.parquet(s"${args.out}/global_ref_integrity").count()
         System.err.println(s"[graft] global check ref_integrity: $n dangling refs")
         globalBad += n
       }
       args.unique.foreach { c =>
         operators.Uniqueness.violations(docs, c)
-          .write.mode("overwrite").parquet(s"${args.out}/global_unique_$c")
+          .write.options(LocalFs.writerOptions).mode("overwrite")
+          .parquet(s"${args.out}/global_unique_$c")
         val n = spark.read.parquet(s"${args.out}/global_unique_$c").count()
         System.err.println(s"[graft] global check unique($c): $n duplicated keys")
         globalBad += n
@@ -374,13 +376,15 @@ object Main {
         val withV = ResumableValidate.compositeViolations(docs, loaded.root, loaded.defs)
         if (args.quarantine.nonEmpty) {
           withV.filter(!col("pass")).drop("pass")
-            .write.mode("overwrite").parquet(args.quarantine)
+            .write.options(LocalFs.writerOptions).mode("overwrite")
+            .parquet(args.quarantine)
           val n = spark.read.parquet(args.quarantine).count()
           System.err.println(s"[graft] quarantined $n failing docs -> ${args.quarantine}")
         }
         if (args.clean.nonEmpty) {
           withV.filter(col("pass")).drop("violations", "pass")
-            .write.mode("overwrite").parquet(args.clean)
+            .write.options(LocalFs.writerOptions).mode("overwrite")
+            .parquet(args.clean)
           val n = spark.read.parquet(args.clean).count()
           System.err.println(s"[graft] clean ${n} passing docs -> ${args.clean}")
         }
@@ -423,7 +427,8 @@ object Main {
           .filter(col("is_outlier"))
           .select(col("part"), col("doc_id"), col("n_spans"),
             col("med"), col("mad"), col("z"))
-          .write.mode("overwrite").parquet(s"${args.out}/global_outlier_spans")
+          .write.options(LocalFs.writerOptions).mode("overwrite")
+          .parquet(s"${args.out}/global_outlier_spans")
         val n = spark.read.parquet(s"${args.out}/global_outlier_spans").count()
         System.err.println(s"[graft] outlier-spans: $n docs flagged")
       }

@@ -144,11 +144,11 @@ object RefIntegrity {
     * executor. Same output as [[danglingRefs]] (exact, deterministic), in
     * two tiers:
     *
-    *   1. a Bloom filter of the catalog keys (built with one aggregation
-    *      pass via `DataFrameStatFunctions.bloomFilter`, Murmur3-based and
-    *      fully deterministic) is broadcast and applied MAP-SIDE: a ref the
-    *      filter rejects is *definitely* absent from the catalog and needs
-    *      no catalog probe at all;
+    *   1. a Bloom filter of the catalog keys (built in one pass over the
+    *      catalog, over `xxhash64(media_ref)`, sized for `expectedItems` at
+    *      `fpp` with no cap, see [[catalogBloom]]) is broadcast and applied
+    *      MAP-SIDE: a ref the filter rejects is *definitely* absent from the
+    *      catalog and needs no catalog probe at all;
     *   2. refs the filter accepts are only *maybe* present (false-positive
     *      rate `fpp`); the exact anti-join verdict applies to them.
     *
@@ -177,36 +177,27 @@ object RefIntegrity {
     */
   def danglingRefsBloomFromRefs(refsIn: DataFrame, catalog: DataFrame,
       expectedItems: Long, fpp: Double = 0.001): DataFrame = {
-    require(expectedItems > 0, s"expectedItems must be > 0, got $expectedItems")
     import org.apache.spark.sql.GraftShims
-    import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal, XxHash64}
+    import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
     val refs = refsIn
       .select(col("media_ref"))
       .distinct()
-    // Build with Spark's native bloom_filter_agg over xxhash64(key) and
-    // probe with the native might_contain — the exact pair SPARK-32268's
-    // runtime filter injects, both whole-stage-codegen. The previous
-    // probe was a Scala UDF over the broadcast sketch-module filter:
-    // black-box to codegen, it broke the probe stage into interpreted
-    // row-at-a-time evaluation (r6 profile: 1.8 s of the 4.2 s wall for a
-    // 600k-row probe; the same scan+distinct without the UDF runs in
-    // 0.2 s). Same sizing math as the sketch builder; swapping the hash
-    // basis (xxhash64 vs murmur3-of-string) only moves WHICH keys are
-    // false positives — the exact anti-join behind it makes the output
-    // identical either way.
-    val nBits = org.apache.spark.util.sketch.BloomFilter
-      .optimalNumOfBits(expectedItems, fpp)
-    def h64(c: org.apache.spark.sql.Column) =
-      new XxHash64(Seq(GraftShims.expression(c)))
-    val bloomAgg = GraftShims.column(
-      new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-        h64(col("media_ref")), Literal(expectedItems), Literal(nBits))
-        .toAggregateExpression())
-    val bloomBytes = catalog.select(col("media_ref"))
-      .agg(bloomAgg.as("bf")).collect()(0).getAs[Array[Byte]](0)
+    // Probe with Spark's native might_contain over xxhash64(key), the probe
+    // SPARK-32268's runtime filter injects, whole-stage-codegen. The
+    // previous probe was a Scala UDF over the broadcast sketch-module
+    // filter: black-box to codegen, it broke the probe stage into
+    // interpreted row-at-a-time evaluation (r6 profile: 1.8 s of the 4.2 s
+    // wall for a 600k-row probe; the same scan+distinct without the UDF
+    // runs in 0.2 s). The hash basis only moves WHICH keys are false
+    // positives; the exact anti-join behind it makes the output identical.
+    val bloomBytes = {
+      val out = new java.io.ByteArrayOutputStream()
+      catalogBloom(catalog, expectedItems, fpp).writeTo(out)
+      out.toByteArray
+    }
     val maybePresent = GraftShims.column(BloomFilterMightContain(
       Literal(bloomBytes, org.apache.spark.sql.types.BinaryType),
-      h64(col("media_ref"))))
+      GraftShims.expression(xxhash64(col("media_ref")))))
     // ONE conditional anti-join, one corpus scan: a ref is kept (dangling)
     // when NO catalog row satisfies (maybePresent(ref) AND key equality).
     // Definite danglings (maybePresent = false) match nothing by
@@ -218,6 +209,30 @@ object RefIntegrity {
     refs.join(cat,
         maybePresent && col("media_ref") === col("_cat_ref"),
         "left_anti")
+  }
+
+  /** The Bloom filter of `catalog`'s `xxhash64(media_ref)` keys, sized for
+    * `expectedItems` at `fpp` (`BloomFilter.optimalNumOfBits`), in the
+    * serialized format `might_contain` reads. Each partition fills a
+    * sketch-module filter and the filters are merged in a tree. Spark's
+    * `bloom_filter_agg`, which `stat.bloomFilter` also calls, is not used:
+    * it clamps to `spark.sql.optimizer.runtime.bloomFilter.maxNumItems` and
+    * `maxNumBits` (4M items, 64 Mbit), so above ~4-5M items it silently
+    * gives a filter with a higher false-positive rate than `fpp`.
+    */
+  private[operators] def catalogBloom(catalog: DataFrame, expectedItems: Long,
+      fpp: Double): org.apache.spark.util.sketch.BloomFilter = {
+    require(expectedItems > 0, s"expectedItems must be > 0, got $expectedItems")
+    import org.apache.spark.util.sketch.BloomFilter
+    val nBits = BloomFilter.optimalNumOfBits(expectedItems, fpp)
+    val perPart = catalog.select(xxhash64(col("media_ref")))
+      .queryExecution.toRdd.mapPartitions { rows =>
+        val bf = BloomFilter.create(expectedItems, nBits)
+        rows.foreach(r => bf.putLong(r.getLong(0)))
+        Iterator.single(bf)
+      }
+    if (perPart.getNumPartitions == 0) BloomFilter.create(expectedItems, nBits)
+    else perPart.treeReduce(_ mergeInPlace _)
   }
 
   /** Foreign-key cardinality contract: every parent key must have between

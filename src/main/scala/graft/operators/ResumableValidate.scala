@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{IntegerType, StringType, StructType}
 import graft.rules.Rule
-import graft.sources.CommitLog
+import graft.sources.{CommitLog, LocalFs}
 
 /** Resumable validation runs (north rule: "a killed job restarts at the last
   * incomplete partition with identical output").
@@ -19,9 +19,11 @@ import graft.sources.CommitLog
   * + the batch dir name + optional per-partition sketch bytes) is written.
   * A restart reads the commit log, skips committed parts — the `part`
   * filter prunes at the source when the input is partitioned on `part` —
-  * and reproduces byte-identical output for the remainder:
-  * violations are sorted within each part and written as a single file per
-  * part, so file bytes are a pure function of (input partition, rule set).
+  * and reproduces identical output for the remainder: violations are
+  * sorted within each part and written as a single file per part, so each
+  * file's rows, in order, are a pure function of (input partition, rule
+  * set). The file bytes are not: parquet-mr writes a column chunk's
+  * encoding list in hash-set order, which differs from JVM to JVM.
   *
   * All filesystem access (commit log, crash-hygiene sweep, violation
   * read-back) goes through `org.apache.hadoop.fs.FileSystem`, so the whole
@@ -134,9 +136,9 @@ object ResumableValidate {
     * hash-partitioned on (`part`, `pmod(xxhash64(doc_id), filesPerPart)`),
     * so each part is written as `filesPerPart` files, each sorted. With
     * the default 1 a part's rows all land in one task and one file, so
-    * golden output is byte-identical; at 100 TB raise it for write
-    * parallelism: output stays row-identical and file-set-deterministic,
-    * just not single-file.
+    * golden output is row-identical, in order; at 100 TB raise it for
+    * write parallelism: output stays row-identical and
+    * file-set-deterministic, just not single-file.
     *
     * `expectedParts`, when given, is the authoritative partition list (at
     * scale: the table manifest): expected parts with ZERO rows still get a
@@ -151,6 +153,14 @@ object ResumableValidate {
     * the bytes in the commit JSON — so cardinality and drift state resume
     * incrementally with validation (merge with [[mergedDocIdEstimate]] /
     * [[mergedNSpansSketch]], no re-scan of committed parts).
+    *
+    * On a `file:` `outDir` the violation write and the commit JSONs create
+    * their files through [[graft.sources.LocalFs]] (the write takes its
+    * `writerOptions`, so the committer and every write task use it): the
+    * same files, `.crc` files and permissions as Hadoop's local file
+    * system, without its `chmod` child process per file and directory,
+    * which cost about 1 ms each, one after another on the driver for the
+    * job commit and the commit JSONs. Other schemes write as before.
     */
   def run(spark: SparkSession, docs: DataFrame, rule: Rule, outDir: String,
       manifest: Seq[String] = Nil, failAfterParts: Int = Int.MaxValue,
@@ -239,8 +249,8 @@ object ResumableValidate {
           .select(col("part"), col("doc_id"), inline(col("violations")))
           .select(ViolationSchema.map(f => col(f.name).cast(f.dataType)): _*)
           .sortWithinPartitions("part", "doc_id", "path", "rule", "message")
-          .write.mode("overwrite").partitionBy("part")
-          .parquet(s"$outDir/$batchName")
+          .write.options(LocalFs.writerOptions).mode("overwrite")
+          .partitionBy("part").parquet(s"$outDir/$batchName")
         val m = obs.get
         val wallMs = (System.nanoTime() - t0) / 1000000
         // an expected part with no rows commits docs = 0 and no sketches
@@ -350,10 +360,10 @@ object ResumableValidate {
       .collect()(0).getLong(0)
   }
 
-  /** Merged KLL sketch of size(spans) over all committed parts. Merge runs
-    * in part order — KLL compaction is sensitive to merge order, so a fixed
-    * order keeps the merged sketch reproducible for a given set of
-    * per-part sketches.
+  /** Merged KLL sketch of size(spans) over all committed parts, merged in
+    * part order. The merged bytes are not reproducible: KLL compaction
+    * keeps a random half of each compacted level, so two merges of the same
+    * per-part sketches may differ, each within KLL's rank-error bound.
     */
   def mergedNSpansSketch(spark: SparkSession, outDir: String): Array[Byte] =
     mergedKllSketch(spark, outDir, KllNSpansKey)

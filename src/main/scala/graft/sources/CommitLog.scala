@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import java.nio.charset.StandardCharsets
 
 /** Per-partition commit log — the resumability substrate required by the
@@ -14,7 +14,11 @@ import java.nio.charset.StandardCharsets
   * scheme of the supplied dir picks the filesystem. Layout (mirrors the
   * shape of a table-format commit log, one atomic file per committed unit —
   * atomic rename on HDFS/local; on object stores the rename is a copy+delete
-  * but the marker-file protocol still gives at-most-once visibility):
+  * but the marker-file protocol still gives at-most-once visibility). A
+  * `file:` dir (or a bare one under a local `fs.defaultFS`) is written
+  * through [[LocalFs]], Hadoop's checksummed local file system without
+  * its per-file `chmod` process; the files, their `.crc` files and their
+  * permissions are the same. Layout:
   *
   * {{{
   * <dir>/_commits/part=<p>.json   -- one JSON per completed partition
@@ -46,19 +50,7 @@ object CommitLog {
       batch: String = "",
       sketches: Map[String, Array[Byte]] = Map.empty)
 
-  /** Resolve the filesystem for a dir string (bare paths = local FS). */
-  private def fsFor(dir: String, conf: Configuration): (FileSystem, Path) = {
-    val p = new Path(dir)
-    (p.getFileSystem(conf), p)
-  }
-
   private def commitsDir(base: Path): Path = new Path(base, "_commits")
-
-  def commitPath(dir: String, part: Int,
-      conf: Configuration = new Configuration()): Path = {
-    val (_, base) = fsFor(dir, conf)
-    new Path(commitsDir(base), s"part=$part.json")
-  }
 
   private def esc(s: String): String =
     s.flatMap {
@@ -80,7 +72,7 @@ object CommitLog {
     */
   def write(dir: String, c: Commit,
       conf: Configuration = new Configuration()): Unit = {
-    val (fs, base) = fsFor(dir, conf)
+    val (fs, base) = LocalFs.fsFor(dir, conf)
     val cd = commitsDir(base)
     fs.mkdirs(cd)
     val sketchJson =
@@ -107,7 +99,7 @@ object CommitLog {
   }
 
   private def readCommitFiles(dir: String, conf: Configuration): Seq[(Int, String)] = {
-    val (fs, base) = fsFor(dir, conf)
+    val (fs, base) = LocalFs.fsFor(dir, conf)
     val cd = commitsDir(base)
     if (!fs.exists(cd)) return Nil
     fs.listStatus(cd).toSeq
@@ -179,7 +171,7 @@ object CommitLog {
     read(dir, conf).values.map(_.failedDocs).sum
 
   def clear(dir: String, conf: Configuration = new Configuration()): Unit = {
-    val (fs, base) = fsFor(dir, conf)
+    val (fs, base) = LocalFs.fsFor(dir, conf)
     val cd = commitsDir(base)
     if (fs.exists(cd)) fs.delete(cd, true): Unit
   }

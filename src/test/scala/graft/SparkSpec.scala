@@ -25,15 +25,25 @@ object SparkSpec {
 abstract class SparkSpec extends AnyFunSuite {
   lazy implicit val spark: SparkSession = SparkSpec.spark
 
-  /** Runs `body` as configured, then again on the interpreted path (no
-    * whole-stage codegen, no expression codegen), restoring both confs.
+  /** Runs `body` on generated code, then again on the interpreted path (no
+    * whole-stage codegen, no expression codegen), restoring every conf it
+    * set. The first pass keeps the optimizer from folding a projection
+    * over an in-memory `Seq(…).toDF` into a local relation, which it
+    * evaluates on the driver, interpreted (as Spark's own
+    * `SharedSparkSession` does).
     */
   def onBothEvalPaths(body: => Unit): Unit = {
-    body
-    val interpreted = Seq("spark.sql.codegen.wholeStage" -> "false",
-      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")
-    val saved = interpreted.map { case (k, _) => k -> spark.conf.getOption(k) }
-    interpreted.foreach { case (k, v) => spark.conf.set(k, v) }
+    val excluded = "spark.sql.optimizer.excludedRules"
+    val convert = "org.apache.spark.sql.catalyst.optimizer.ConvertToLocalRelation"
+    withConfs(excluded ->
+      (spark.conf.getOption(excluded).filter(_.nonEmpty).toSeq :+ convert).mkString(","))(body)
+    withConfs("spark.sql.codegen.wholeStage" -> "false",
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")(body)
+  }
+
+  private def withConfs(confs: (String, String)*)(body: => Unit): Unit = {
+    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
     try body
     finally saved.foreach {
       case (k, Some(v)) => spark.conf.set(k, v)

@@ -727,6 +727,24 @@ class PipelineOpsSpec extends SparkSpec {
     assert(exact.length == 28)
   }
 
+  test("bloom-tier filter is sized as asked past bloom_filter_agg's 4M-item cap") {
+    import org.apache.spark.util.sketch.BloomFilter
+    val catalog = (1 to 200).map(i => f"m-${i}%08d").toDF("media_ref")
+    // below the cap: the same filter as Spark's aggregate builds
+    val small = RefIntegrity.catalogBloom(catalog, 172L, 0.001)
+    assert(small == catalog.stat.bloomFilter(xxhash64(col("media_ref")), 172L,
+      BloomFilter.optimalNumOfBits(172L, 0.001)))
+    assert((1 to 200).forall(i => small.mightContainLong(
+      catalog.filter(col("media_ref") === f"m-${i}%08d")
+        .select(xxhash64(col("media_ref"))).head().getLong(0))))
+    // above it: every requested bit (143.8 Mbit; the aggregate stops at 64)
+    val big = RefIntegrity.catalogBloom(catalog.limit(1), 10000000L, 0.001)
+    assert(big.bitSize() >= BloomFilter.optimalNumOfBits(10000000L, 0.001))
+    // an empty catalog (a plan of no partitions) gives an empty filter
+    assert(RefIntegrity.catalogBloom(catalog.limit(0), 172L, 0.001) ==
+      BloomFilter.create(172L, BloomFilter.optimalNumOfBits(172L, 0.001)))
+  }
+
   test("inference closure: inferred rule passes the corpus, catches the envelope-breaker") {
     import graft.rules.RuleLoader
     val df = Seq(

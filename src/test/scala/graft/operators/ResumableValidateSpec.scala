@@ -4,6 +4,7 @@ import graft.SparkSpec
 import graft.rules.{Keywords, Rule}
 import graft.sources.{CommitLog, DocsGen}
 import java.nio.file.Files
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
@@ -15,9 +16,13 @@ class ResumableValidateSpec extends SparkSpec {
 
   private val rule = Rule.Check(Keywords(required = List("doc_id", "spans")))
 
+  /** Where [[CommitLog.write]] puts `part`'s commit JSON. */
+  private def commitPath(dir: String, part: Int): Path =
+    new Path(s"$dir/_commits/part=$part.json")
+
   /** Read a commit JSON through the Hadoop FS API (the log's native I/O). */
   private def readCommit(dir: String, part: Int): String = {
-    val p = CommitLog.commitPath(dir, part)
+    val p = commitPath(dir, part)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val in = fs.open(p)
     try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
@@ -243,7 +248,7 @@ class ResumableValidateSpec extends SparkSpec {
     ResumableValidate.run(spark, freshDocs, rule, dir, partsPerBatch = 3)
     // simulate the crash window: batch parquet landed but part 4's commit
     // did not — delete the commit, leaving orphan rows in the old batch dir
-    val cp = CommitLog.commitPath(dir, 4)
+    val cp = commitPath(dir, 4)
     val fs = cp.getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(fs.delete(cp, false))
     // re-run: part 4 goes into a NEW batch; reader must not see it twice

@@ -155,7 +155,7 @@ class RuleCompilerSpec extends SparkSpec {
       v.message == "Duplicate array element: \"x\""))
   }
 
-  test("contains with min/maxContains and dynamic count (array.rs:190-222)") {
+  test("contains with min/maxContains and dynamic count (array.rs:190-222)") { onBothEvalPaths {
     val df = Seq(("d1", Seq(1, 1, 1)), ("d2", Seq(5, 6, 7))).toDF("doc_id", "a")
     val rule = kw(Keywords(properties = Map("a" -> kw(Keywords(
       contains = Some(kw(Keywords(minimum = Some(5)))),
@@ -165,7 +165,7 @@ class RuleCompilerSpec extends SparkSpec {
         "Array must contain at least 2 item(s) matching the contains schema, but only 0 matched"),
       Violation("d2", "a", "maxContains",
         "Array must contain at most 2 item(s) matching the contains schema, but 3 matched")))
-  }
+  }}
 
   test("items validates each element with indexed path (array.rs:261-278)") {
     val df = Seq(("d1", Seq(1, -2, 3, -4))).toDF("doc_id", "a")
