@@ -191,8 +191,10 @@ object RefIntegrity {
     // runs in 0.2 s). The hash basis only moves WHICH keys are false
     // positives; the exact anti-join behind it makes the output identical.
     val bloomBytes = {
-      val out = new java.io.ByteArrayOutputStream()
-      catalogBloom(catalog, expectedItems, fpp).writeTo(out)
+      val bf = catalogBloom(catalog, expectedItems, fpp)
+      val out = new java.io.ByteArrayOutputStream(
+        (bf.bitSize() / 8 + 16).toInt)
+      bf.writeTo(out)
       out.toByteArray
     }
     val maybePresent = GraftShims.column(BloomFilterMightContain(
@@ -213,26 +215,37 @@ object RefIntegrity {
 
   /** The Bloom filter of `catalog`'s `xxhash64(media_ref)` keys, sized for
     * `expectedItems` at `fpp` (`BloomFilter.optimalNumOfBits`), in the
-    * serialized format `might_contain` reads. Each partition fills a
-    * sketch-module filter and the filters are merged in a tree. Spark's
-    * `bloom_filter_agg`, which `stat.bloomFilter` also calls, is not used:
-    * it clamps to `spark.sql.optimizer.runtime.bloomFilter.maxNumItems` and
+    * serialized format `might_contain` reads. Spark's `bloom_filter_agg`,
+    * which `stat.bloomFilter` also calls, is not used: it clamps to
+    * `spark.sql.optimizer.runtime.bloomFilter.maxNumItems` and
     * `maxNumBits` (4M items, 64 Mbit), so above ~4-5M items it silently
     * gives a filter with a higher false-positive rate than `fpp`.
+    *
+    * Each non-empty partition fills a sketch-module filter, and the filters
+    * are merged in a tree whose last merge runs on an executor, so the
+    * driver receives one filter, not one per tree branch. A filter is
+    * `nBits / 8` bytes (18 MB at 10^7 items and fpp 0.001): a filling task
+    * holds one and a merging task two, and the shuffle between the tree's
+    * levels carries one per merged partition. The driver holds the result
+    * and, in the caller, its serialized copy in the probe's literal.
     */
   private[operators] def catalogBloom(catalog: DataFrame, expectedItems: Long,
       fpp: Double): org.apache.spark.util.sketch.BloomFilter = {
     require(expectedItems > 0, s"expectedItems must be > 0, got $expectedItems")
     import org.apache.spark.util.sketch.BloomFilter
     val nBits = BloomFilter.optimalNumOfBits(expectedItems, fpp)
-    val perPart = catalog.select(xxhash64(col("media_ref")))
-      .queryExecution.toRdd.mapPartitions { rows =>
-        val bf = BloomFilter.create(expectedItems, nBits)
-        rows.foreach(r => bf.putLong(r.getLong(0)))
-        Iterator.single(bf)
-      }
-    if (perPart.getNumPartitions == 0) BloomFilter.create(expectedItems, nBits)
-    else perPart.treeReduce(_ mergeInPlace _)
+    val add = (acc: Option[BloomFilter], key: Long) => {
+      val bf = acc.getOrElse(BloomFilter.create(expectedItems, nBits))
+      bf.putLong(key)
+      Some(bf)
+    }
+    val merge = (a: Option[BloomFilter], b: Option[BloomFilter]) =>
+      if (a.isEmpty) b else { b.foreach(a.get.mergeInPlace); a }
+    catalog.select(xxhash64(col("media_ref"))).queryExecution.toRdd
+      .map(_.getLong(0))
+      .treeAggregate(Option.empty[BloomFilter], add, merge, depth = 2,
+        finalAggregateOnExecutor = true)
+      .getOrElse(BloomFilter.create(expectedItems, nBits))
   }
 
   /** Foreign-key cardinality contract: every parent key must have between

@@ -1,8 +1,6 @@
 package graft.sources
 
-import java.net.URI
 import java.nio.file.{FileSystems, Files}
-import java.nio.file.attribute.PosixFilePermission
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
@@ -11,18 +9,18 @@ import org.apache.hadoop.fs.permission.FsPermission
   * starting a process.
   *
   * Without libhadoop (`NativeIO.isAvailable()` false, as in Spark's binary
-  * distribution), Hadoop's `RawLocalFileSystem.setPermission` runs `chmod`
-  * in a child process, and `create` and `mkdirs` call it for every file and
-  * directory they make: about 1 ms each, some 45 per validation batch (its
-  * parquet files, their `.crc` files, the committer's directories and the
-  * commit JSONs). Here the raw layer sets the same mode bits with
-  * `Files.setPosixFilePermissions`. It keeps Hadoop's own path where that
-  * call would not give the mode `chmod` gives: a permission with the sticky
-  * bit, a directory carrying the set-user-ID or set-group-ID bit (inherited
-  * from its parent; `chmod 0755` keeps it, NIO clears it), or a default
-  * file system without the `unix` attribute view. The checksum layer is
-  * Hadoop's `LocalFileSystem`, so `.crc` files are written and verified as
-  * before.
+  * distribution), Hadoop's `RawLocalFileSystem.setPermission` runs
+  * `chmod 0NNN` in a child process, and `create` and `mkdirs` call it for
+  * every file and directory they make: about 1 ms each, some 45 per
+  * validation batch (its parquet files, their `.crc` files, the committer's
+  * directories and the commit JSONs). Here the raw layer makes the same
+  * chmod(2) call in process, through NIO's `unix:mode` attribute, with the
+  * mode `chmod 0NNN` gives: the permission's bits (sticky bit included),
+  * and on a directory the set-user-ID and set-group-ID bits it already
+  * carries (GNU `chmod` keeps them; a directory inherits set-group-ID from
+  * its parent). A default file system without the `unix` attribute view
+  * keeps Hadoop's own path. The checksum layer is Hadoop's
+  * `LocalFileSystem`, so `.crc` files are written and verified as before.
   *
   * Graft creates its own files on `file:` paths through this class:
   * DataFrame writes take [[writerOptions]], and single files and the commit
@@ -36,27 +34,14 @@ object LocalFs {
     FileSystems.getDefault.supportedFileAttributeViews.contains("unix")
 
   private class Raw extends RawLocalFileSystem {
-    override def setPermission(p: Path, permission: FsPermission): Unit = {
-      val f = pathToFile(p).toPath
-      if (!unixView || permission.getStickyBit || keepsIdBits(f))
-        super.setPermission(p, permission)
-      else Files.setPosixFilePermissions(f, posix(permission.toShort))
-    }
-  }
-
-  private def keepsIdBits(f: java.nio.file.Path): Boolean = {
-    val mode = Files.getAttribute(f, "unix:mode").asInstanceOf[Int]
-    (mode & 0xf000) == 0x4000 && (mode & 0xc00) != 0 // S_IFDIR, S_ISUID|S_ISGID
-  }
-
-  // PosixFilePermission lists owner r/w/x, group r/w/x, others r/w/x: the
-  // i-th value is mode bit 8 - i
-  private def posix(mode: Int): java.util.Set[PosixFilePermission] = {
-    val s = java.util.EnumSet.noneOf(classOf[PosixFilePermission])
-    PosixFilePermission.values.zipWithIndex.foreach { case (p, i) =>
-      if ((mode & (0x100 >> i)) != 0) s.add(p)
-    }
-    s
+    override def setPermission(p: Path, permission: FsPermission): Unit =
+      if (!unixView) super.setPermission(p, permission)
+      else {
+        val f = pathToFile(p).toPath
+        val old = Files.getAttribute(f, "unix:mode").asInstanceOf[Int]
+        val idBits = if ((old & 0xf000) == 0x4000) old & 0xc00 else 0 // S_IFDIR: S_ISUID|S_ISGID
+        Files.setAttribute(f, "unix:mode", Integer.valueOf(permission.toShort | idBits))
+      }
   }
 
   /** `DataFrameWriter` options under which the write resolves `file:` to
@@ -70,24 +55,17 @@ object LocalFs {
     "fs.file.impl" -> classOf[LocalFs].getName,
     "fs.file.impl.disable.cache" -> "true")
 
-  /** The file system for `dir`, and `dir` as a Hadoop path: a new
-    * [[LocalFs]] built with `conf` when the qualified path's scheme is
-    * `file` (a bare path qualifies against `fs.defaultFS`), else the
-    * path's own file system. The scheme decides, not the class `file:`
-    * resolves to, which may be a subclass such as Hive's
-    * `ProxyLocalFileSystem`.
+  /** The file system for `dir`, and `dir` as a Hadoop path, resolved under
+    * a copy of `conf` that holds [[writerOptions]]: a new [[LocalFs]] when
+    * the qualified path's scheme is `file` (a bare path qualifies against
+    * `fs.defaultFS`), else the path's own file system. The keys are by
+    * scheme, so the scheme decides, not the class `file:` resolves to,
+    * which may be a subclass such as Hive's `ProxyLocalFileSystem`.
     */
   def fsFor(dir: String, conf: Configuration): (FileSystem, Path) = {
+    val c = new Configuration(conf)
+    writerOptions.foreach { case (k, v) => c.set(k, v) }
     val p = new Path(dir)
-    val scheme = Option(p.toUri.getScheme)
-      .getOrElse(FileSystem.getDefaultUri(conf).getScheme)
-    if (scheme == "file") {
-      // as `FileSystem.get` builds one: the conf first (the checksum layer
-      // reads its chunk size there), then the URI
-      val fs = new LocalFs
-      fs.setConf(conf)
-      fs.initialize(URI.create("file:///"), conf)
-      (fs, p)
-    } else (p.getFileSystem(conf), p)
+    (p.getFileSystem(c), p)
   }
 }

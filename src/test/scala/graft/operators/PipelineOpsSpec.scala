@@ -728,6 +728,9 @@ class PipelineOpsSpec extends SparkSpec {
   }
 
   test("bloom-tier filter is sized as asked past bloom_filter_agg's 4M-item cap") {
+    import java.util.concurrent.atomic.AtomicLong
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+    import org.apache.spark.sql.GraftShims
     import org.apache.spark.util.sketch.BloomFilter
     val catalog = (1 to 200).map(i => f"m-${i}%08d").toDF("media_ref")
     // below the cap: the same filter as Spark's aggregate builds
@@ -737,9 +740,30 @@ class PipelineOpsSpec extends SparkSpec {
     assert((1 to 200).forall(i => small.mightContainLong(
       catalog.filter(col("media_ref") === f"m-${i}%08d")
         .select(xxhash64(col("media_ref"))).head().getLong(0))))
-    // above it: every requested bit (143.8 Mbit; the aggregate stops at 64)
-    val big = RefIntegrity.catalogBloom(catalog.limit(1), 10000000L, 0.001)
-    assert(big.bitSize() >= BloomFilter.optimalNumOfBits(10000000L, 0.001))
+    // above it: every requested bit (143.8 Mbit, 18 MB; the aggregate stops
+    // at 64 Mbit), over 16 partitions that each fill one filter, of which
+    // the driver's task results carry one, not one per tree branch
+    val (n, fpp) = (10000000L, 0.001)
+    val filterBytes = BloomFilter.optimalNumOfBits(n, fpp) / 8
+    val spread = catalog.repartition(16)
+    val resultBytes = new AtomicLong
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m => resultBytes.addAndGet(m.resultSize))
+    }
+    val sc = spark.sparkContext
+    GraftShims.drainListenerBus(sc)
+    sc.addSparkListener(listener)
+    val big =
+      try {
+        val bf = RefIntegrity.catalogBloom(spread, n, fpp)
+        GraftShims.drainListenerBus(sc)
+        bf
+      } finally sc.removeSparkListener(listener)
+    assert(big.bitSize() >= BloomFilter.optimalNumOfBits(n, fpp))
+    assert(resultBytes.get > filterBytes && resultBytes.get < 2 * filterBytes,
+      s"${resultBytes.get} bytes of task results for a $filterBytes-byte filter")
+    assert(big == RefIntegrity.catalogBloom(spread.coalesce(1), n, fpp))
     // an empty catalog (a plan of no partitions) gives an empty filter
     assert(RefIntegrity.catalogBloom(catalog.limit(0), 172L, 0.001) ==
       BloomFilter.create(172L, BloomFilter.optimalNumOfBits(172L, 0.001)))

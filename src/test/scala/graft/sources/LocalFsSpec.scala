@@ -65,7 +65,7 @@ class LocalFsSpec extends SparkSpec {
       Seq("644", "600", "700", "755").map(oct))
   }
 
-  test("a sticky-bit permission and a set-group-ID parent keep Hadoop's own path") {
+  test("a sticky-bit permission and a set-group-ID parent give Hadoop's modes") {
     val root = Files.createTempDirectory("graft_perm_bits")
     Files.setAttribute(root, "unix:mode", Integer.valueOf(oct("2755")))
     // `mkdirs` and `create` drop the sticky bit with the umask, so only a
@@ -77,7 +77,7 @@ class LocalFsSpec extends SparkSpec {
       assert(fs.mkdirs(new Path(s"$root/$name/plain")))
     }
     for (name <- Seq("hadoop", "localfs")) {
-      // NIO cannot set the sticky bit, nor keep the inherited set-group-ID
+      // the sticky bit is set, and the inherited set-group-ID is kept
       assert(mode(s"$root/$name/sticky") == oct("3755"), name)
       assert(mode(s"$root/$name/plain") == oct("2755"), name)
     }
