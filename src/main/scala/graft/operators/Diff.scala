@@ -61,12 +61,6 @@ object Diff {
       .drop("_h_b")
   }
 
-  /** Per-status counts — the one-line verdict of a snapshot refresh. */
-  def rowDiffCounts(a: DataFrame, b: DataFrame, idCol: String,
-      contentCols: Seq[String]): DataFrame =
-    rowDiff(a, b, idCol, contentCols)
-      .groupBy(col("status")).agg(count(lit(1)).as("rows"))
-
   /** Schema-evolution diff: one (path, change) entry per difference between
     * two schemas — `added` / `removed` columns (at any nesting depth),
     * `type: X -> Y` changes, and `nullability: X -> Y` relaxations or

@@ -413,15 +413,6 @@ object Drift {
     Kll.ks(sketchOf(a), sketchOf(b))
   }
 
-  /** Per-`part` KLL sketch bytes — checkpointable next to the commit log. */
-  def partitionKllSketches(df: DataFrame, c: String, partCol: String = "part",
-      k: Int = 200): DataFrame = {
-    import graft.plans.Kll
-    df.groupBy(col(partCol))
-      .agg(Kll.sketchAgg(col(c).cast("double"), k).as("sketch"),
-        count(lit(1)).as("rows"))
-  }
-
   /** Top-k rank drift between two row sets over a categorical key — the
     * RANKED-LIST companion of the distribution drifts above: PSI/KS say
     * "the histogram moved", this says WHICH heavy hitters entered, left,

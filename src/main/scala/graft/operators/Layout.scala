@@ -129,27 +129,6 @@ object Layout {
       .agg(aggs.head, aggs.tail: _*)
   }
 
-  /** Average fraction of buckets a uniformly-placed point query on each
-    * dimension must touch, per the [[skippingStats]] manifest: for
-    * dimension d with global span S, hit fraction = sum over buckets of
-    * (bucket's d-range width + 1) / (S + 1) / nBuckets. Lower is better;
-    * 1.0 = no skipping. Driver-usable 1-row diagnostic.
-    */
-  def skipFractions(stats: DataFrame, nDims: Int): DataFrame = {
-    val aggs = (0 until nDims).map { i =>
-      val width = col(s"max_d$i") - col(s"min_d$i") + 1L
-      (sum(width), min(col(s"min_d$i")), max(col(s"max_d$i")), i)
-    }
-    val flat = aggs.flatMap { case (w, lo, hi, i) =>
-      Seq(w.as(s"_w$i"), lo.as(s"_lo$i"), hi.as(s"_hi$i"))
-    } :+ count(lit(1)).as("_nb")
-    stats.agg(flat.head, flat.tail: _*)
-      .select((0 until nDims).map { i =>
-        (col(s"_w$i") / (col(s"_hi$i") - col(s"_lo$i") + 1L) / col("_nb"))
-          .as(s"skip_frac_d$i")
-      }: _*)
-  }
-
   /** Small-file compaction plan over a file manifest (part, path, bytes) —
     * the other half of Iceberg/Delta-style table maintenance next to
     * z-ordering: streaming ingestion leaves thousands of KB-sized files per

@@ -33,17 +33,6 @@ import org.apache.spark.sql.functions._
   */
 object Packing {
 
-  /** Tokens = whitespace token count of the text (swap for a real
-    * tokenizer count column when one exists — pass a precomputed
-    * `tokensCol` via the overload below).
-    */
-  def packConcat(df: DataFrame, idCol: String, textCol: String,
-      capacity: Int, shards: Int): DataFrame =
-    packConcatCounted(
-      df.withColumn("_n_tokens",
-        TextAnalysis.tokenCountWs(col(textCol)).cast("long")),
-      idCol, "_n_tokens", capacity, shards)
-
   /** Packing over a precomputed token-count column. Zero-token documents
     * are dropped (they occupy no stream positions). `shardCol`, when given,
     * overrides the default xxhash64(id) shard assignment — e.g. a modulo of

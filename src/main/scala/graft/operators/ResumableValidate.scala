@@ -15,15 +15,20 @@ import graft.sources.{CommitLog, LocalFs}
   *
   * A run validates the docs table one `part` at a time; after each part's
   * violations land in `outDir/violations_batch_<b>/part=<p>/`, an atomic
-  * commit JSON (metrics + rule hash + snapshot-id surrogate + input manifest
-  * + the batch dir name + optional per-partition sketch bytes) is written.
-  * A restart reads the commit log, skips committed parts — the `part`
-  * filter prunes at the source when the input is partitioned on `part` —
-  * and reproduces identical output for the remainder: violations are
-  * sorted within each part and written as a single file per part, so each
-  * file's rows, in order, are a pure function of (input partition, rule
-  * set). The file bytes are not: parquet-mr writes a column chunk's
-  * encoding list in hash-set order, which differs from JVM to JVM.
+  * commit JSON (metrics + rule hash + the batch dir name + optional
+  * per-partition sketch bytes) is written. A restart reads the commit log,
+  * skips committed parts — the `part` filter prunes at the source when the
+  * input is partitioned on `part` — and reproduces identical output for
+  * the remainder: violations are sorted within each part and written as a
+  * single file per part, so over the same input each file's rows, in
+  * order, are the same. The file bytes are not: parquet-mr writes a column
+  * chunk's encoding list in hash-set order, which differs from JVM to JVM.
+  *
+  * A part is skipped when its commit carries the current rule hash; its
+  * input is not checked. The commit also records `snapshot_id` and the
+  * input `manifest`, but nothing reads them, so a resume over rewritten
+  * part files or under a new `--forget` list serves the committed rows of
+  * the old input.
   *
   * All filesystem access (commit log, crash-hygiene sweep, violation
   * read-back) goes through `org.apache.hadoop.fs.FileSystem`, so the whole
@@ -192,7 +197,7 @@ object ResumableValidate {
 
     // crash hygiene: a kill between a batch's parquet write and its commit
     // rows leaves orphaned part dirs — remove any part dir without a commit
-    // so the on-disk state stays a pure function of the commit log (readers
+    // so the on-disk state holds only what the commit log names (readers
     // already ignore uncommitted (part, batch) pairs; the sweep keeps dead
     // bytes from accumulating across repeated crashes)
     val basePath = new Path(outDir)

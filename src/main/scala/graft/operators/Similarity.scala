@@ -505,24 +505,6 @@ object Similarity {
       .limit(k)
   }
 
-  /** IVF probe without a persisted index (ad-hoc form): assigns and filters
-    * in one pass. Prefer `ivfWriteIndex` + `ivfTopKIndexed` for repeated
-    * queries — this form re-computes the assignment on every probe.
-    */
-  def ivfTopK(df: DataFrame, idCol: String, vecCol: String,
-      centroids: Seq[Seq[Double]], query: Seq[Float], k: Int,
-      nProbe: Int = 2): DataFrame = {
-    val lists = probeLists(centroids, query, nProbe)
-    val assigned = ivfAssign(df, idCol, vecCol, centroids)
-    assigned
-      .filter(col("centroid").isin(lists: _*))
-      .select(col("id"),
-        cosine(transform(col("vec"), x => x.cast("double")),
-          typedlit(query.map(_.toDouble))).as("cosine"))
-      .orderBy(col("cosine").desc, col("id"))
-      .limit(k)
-  }
-
   /** Deterministic spherical k-means (Lloyd) over the embedding column —
     * the IVF coarse-quantizer trainer. Untrained centroids (e.g. "first k
     * corpus vectors") make probe recall arbitrary and the inverted lists
@@ -612,14 +594,6 @@ object Similarity {
     }
     centroids
   }
-
-  /** Inverted-list sizes for a centroid set — the balance diagnostic
-    * (k rows: centroid -> member count).
-    */
-  def listSizes(df: DataFrame, idCol: String, vecCol: String,
-      centroids: Seq[Seq[Double]]): DataFrame =
-    ivfAssign(df, idCol, vecCol, centroids)
-      .groupBy(col("centroid")).agg(count(lit(1)).as("n"))
 
   /** IVF-style partition assignment: nearest of `centroids` per vector —
     * the write-time clustering step of an IVF index. Centroids broadcast as

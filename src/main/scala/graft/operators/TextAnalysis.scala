@@ -231,18 +231,6 @@ object TextAnalysis {
   def fingerprintMd5(text: Column): Column =
     md5(lower(regexp_replace(trim(text), "\\s+", " ")))
 
-  /** Polynomial rolling hash over characters (base 31, modulo a 48-bit
-    * prime-ish constant — ANSI mode forbids natural Long overflow) — the
-    * incremental-update-friendly fingerprint, as one `aggregate` over the
-    * codepoint sequence (codegen; no UDF).
-    */
-  private val RollingMod = 251799813685119L // < 2^48, so acc*31+c < 2^53
-  def fingerprintRolling(text: Column): Column =
-    aggregate(
-      transform(split(lower(regexp_replace(trim(text), "\\s+", " ")), ""),
-        ch => when(length(ch) > 0, ascii(ch)).otherwise(0)),
-      lit(0L), (acc, c) => pmod(acc * lit(31L) + c.cast("long"), lit(RollingMod)))
-
   // ------------------------------------------------------------------
   // Repetition signals (Gopher-style repetitiousness filters)
   // ------------------------------------------------------------------

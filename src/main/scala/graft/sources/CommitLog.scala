@@ -4,10 +4,9 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import java.nio.charset.StandardCharsets
 
-/** Per-partition commit log — the resumability substrate required by the
-  * north rule ("each partition's validation state, lineage (snapshot-id,
-  * file manifest) and metrics are checkpointed to a commit log so a killed
-  * job restarts at the last incomplete partition with identical output").
+/** Per-partition commit log — the resumability substrate: each completed
+  * partition's validation metrics are checkpointed, so a killed job
+  * restarts at the partitions that have no commit.
   *
   * All I/O goes through `org.apache.hadoop.fs.FileSystem`, so the log runs
   * unchanged against local paths (`file://` or bare), HDFS, or S3A — the
@@ -26,15 +25,15 @@ import java.nio.charset.StandardCharsets
   * }}}
   *
   * The JSON carries: partition id, row/verdict metrics, the rule-set hash
-  * (resume refuses to mix rule versions), a snapshot id surrogate (hash of
-  * the input manifest), the input file manifest itself, the batch dir the
-  * partition's violations were written to (so readers only consume
-  * committed (part, batch) pairs and a crash between a batch write and its
-  * commits can never surface duplicate rows), and optional per-partition
-  * sketch bytes (KLL / HLL) so drift and cardinality resume incrementally
-  * with validation. There is no Iceberg runtime in this sandbox
-  * (SURVEY.md §7); the log supplies the snapshot/manifest lineage an
-  * Iceberg snapshot would.
+  * (resume refuses to mix rule versions), the batch dir the partition's
+  * violations were written to (so readers only consume committed (part,
+  * batch) pairs and a crash between a batch write and its commits can
+  * never surface duplicate rows), and optional per-partition sketch bytes
+  * (KLL / HLL) so drift and cardinality resume incrementally with
+  * validation. It also records `snapshot_id` (a 32-bit hash of the run's
+  * input manifest) and the `manifest` itself, but nothing reads either
+  * back: a commit says which rules ran, not which input they ran over, so
+  * resume does not notice input that changed since the commit.
   */
 object CommitLog {
 
@@ -52,8 +51,14 @@ object CommitLog {
 
   private def commitsDir(base: Path): Path = new Path(base, "_commits")
 
-  private def esc(s: String): String =
-    s.flatMap {
+  /** `s` as the body of a JSON string literal (quote, backslash and
+    * control characters escaped); null renders as `null`, so an exception
+    * without a message still prints on the `{"error":…}` channel. Graft's
+    * one JSON string escaper: the commit JSONs and `graft.Main`'s stdout
+    * and drift baseline use it.
+    */
+  private[graft] def esc(s: String): String =
+    String.valueOf(s).flatMap {
       case '"' => "\\\""
       case '\\' => "\\\\"
       case '\n' => "\\n"
@@ -67,8 +72,8 @@ object CommitLog {
   /** Atomic write: temp file + rename, so a concurrent/killed writer never
     * leaves a half-visible commit. `FileSystem.rename` won't clobber an
     * existing destination on every FS, so an existing commit file (re-run
-    * of an already-committed part) is deleted first — commit content is a
-    * pure function of (part, input, rules), so the replace is idempotent.
+    * of an already-committed part) is deleted first: the newer commit
+    * replaces it.
     */
   def write(dir: String, c: Commit,
       conf: Configuration = new Configuration()): Unit = {
@@ -121,9 +126,9 @@ object CommitLog {
   /** READ side parses with Jackson (already on Spark's classpath), not
     * regexes: a `"([^"]*)"` field pattern truncates at the `\"` that [[esc]]
     * itself faithfully writes for a manifest path containing a quote — real
-    * object-store keys can contain quotes and newlines, and a corrupted
-    * manifest read would silently break snapshot-lineage checks. The write
-    * side stays hand-rolled (it controls its own output shape).
+    * object-store keys can contain quotes and newlines, and must read back
+    * as written. The write side stays hand-rolled (it controls its own
+    * output shape).
     */
   private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
 

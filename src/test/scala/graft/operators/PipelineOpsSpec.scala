@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.SparkSpec
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Golden tests for the training-data pipeline operators: known near-dups
@@ -8,6 +9,49 @@ import org.apache.spark.sql.functions._
   */
 class PipelineOpsSpec extends SparkSpec {
   import spark.implicits._
+
+  /** [[Packing.packConcatCounted]] over the whitespace token count of
+    * `textCol`.
+    */
+  private def packConcat(df: DataFrame, idCol: String, textCol: String,
+      capacity: Int, shards: Int): DataFrame =
+    Packing.packConcatCounted(
+      df.withColumn("_n_tokens",
+        TextAnalysis.tokenCountWs(col(textCol)).cast("long")),
+      idCol, "_n_tokens", capacity, shards)
+
+  /** Average fraction of buckets a uniformly-placed point query on each
+    * dimension must touch, per a [[Layout.skippingStats]] manifest: for
+    * dimension d with global span S, hit fraction = sum over buckets of
+    * (bucket's d-range width + 1) / (S + 1) / nBuckets. 1.0 = no skipping.
+    */
+  private def skipFractions(stats: DataFrame, nDims: Int): DataFrame = {
+    val flat = (0 until nDims).flatMap { i =>
+      Seq(sum(col(s"max_d$i") - col(s"min_d$i") + 1L).as(s"_w$i"),
+        min(col(s"min_d$i")).as(s"_lo$i"), max(col(s"max_d$i")).as(s"_hi$i"))
+    } :+ count(lit(1)).as("_nb")
+    stats.agg(flat.head, flat.tail: _*)
+      .select((0 until nDims).map { i =>
+        (col(s"_w$i") / (col(s"_hi$i") - col(s"_lo$i") + 1L) / col("_nb"))
+          .as(s"skip_frac_d$i")
+      }: _*)
+  }
+
+  /** Inverted-list sizes for a centroid set (centroid -> member count). */
+  private def listSizes(df: DataFrame, idCol: String, vecCol: String,
+      centroids: Seq[Seq[Double]]): DataFrame =
+    Similarity.ivfAssign(df, idCol, vecCol, centroids)
+      .groupBy(col("centroid")).agg(count(lit(1)).as("n"))
+
+  /** Polynomial rolling hash (base 31, modulo a prime below 2^48 so ANSI
+    * mode never overflows) over the codepoints of whitespace-normalized
+    * lowercase text.
+    */
+  private def fingerprintRolling(text: Column): Column =
+    aggregate(
+      transform(split(lower(regexp_replace(trim(text), "\\s+", " ")), ""),
+        ch => when(length(ch) > 0, ascii(ch)).otherwise(0)),
+      lit(0L), (acc, c) => pmod(acc * lit(31L) + c.cast("long"), lit(251799813685119L)))
 
   private val base = "the quick brown fox jumps over the lazy dog and runs far away " +
     "into the deep dark forest where nobody can find it anymore tonight"
@@ -194,8 +238,8 @@ class PipelineOpsSpec extends SparkSpec {
     assert(q > 0 && q <= 1.0)
     assert(p(1L).getString(5).matches("[0-9a-f]{32}"))
     // rolling hash deterministic + normalization-invariant
-    val fps = df.select(TextAnalysis.fingerprintRolling(col("text"))).as[Long].collect()
-    val fps2 = df.select(TextAnalysis.fingerprintRolling(
+    val fps = df.select(fingerprintRolling(col("text"))).as[Long].collect()
+    val fps2 = df.select(fingerprintRolling(
       upper(concat(col("text"), lit("  "))))).as[Long].collect()
     assert(fps.sameElements(fps2), "case/whitespace-normalized rolling hash")
   }
@@ -375,7 +419,8 @@ class PipelineOpsSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getString(1))).toSeq
     assert(d == Seq((2L, "changed"), (3L, "removed"),
       (4L, "changed"), (5L, "added")), d.mkString(","))
-    val counts = Diff.rowDiffCounts(va, vb, "id", Seq("text", "n"))
+    val counts = Diff.rowDiff(va, vb, "id", Seq("text", "n"))
+      .groupBy(col("status")).agg(count(lit(1)).as("rows"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(counts == Map("changed" -> 2L, "removed" -> 1L, "added" -> 1L))
   }
@@ -419,7 +464,7 @@ class PipelineOpsSpec extends SparkSpec {
       assert(r.getLong(4) - r.getLong(3) == 7L, s"d1 width in $r")
       assert(r.getLong(5) == 64L)
     }
-    val fr = Layout.skipFractions(stats, nDims = 2).head()
+    val fr = skipFractions(stats, nDims = 2).head()
     assert(math.abs(fr.getDouble(0) - 0.25) < 1e-12 &&
       math.abs(fr.getDouble(1) - 0.25) < 1e-12, fr.toString)
   }
@@ -540,12 +585,12 @@ class PipelineOpsSpec extends SparkSpec {
     // 0 and 1 (tokens 8..12); total 16 tokens -> bins 0 (10) and 1 (6)
     val docs = Seq((1L, "a b c d"), (2L, "e f g h"), (3L, "i j k l m"),
       (4L, "n o p"), (5L, "   ")).toDF("doc_id", "text")
-    val m = Packing.packConcat(docs, "doc_id", "text", capacity = 10, shards = 1)
+    val m = packConcat(docs, "doc_id", "text", capacity = 10, shards = 1)
       .orderBy("id").collect()
       .map(r => (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5)))
     assert(m.toSeq == Seq((1L, 4L, 0L, 0L, 1L), (2L, 4L, 4L, 0L, 1L),
       (3L, 5L, 8L, 0L, 2L), (4L, 3L, 13L, 1L, 1L)), m.mkString(","))
-    val manifest = Packing.packConcat(docs, "doc_id", "text", 10, 1)
+    val manifest = packConcat(docs, "doc_id", "text", 10, 1)
     val fills = Packing.binFill(manifest, 10).orderBy("bin").collect()
       .map(r => (r.getLong(1), r.getLong(2), r.getLong(3)))
     assert(fills.toSeq == Seq((0L, 10L, 3L), (1L, 6L, 2L)), fills.mkString(","))
@@ -554,7 +599,7 @@ class PipelineOpsSpec extends SparkSpec {
     val big = spark.range(500).select(col("id").as("doc_id"),
       concat_ws(" ", transform(sequence(lit(1), (pmod(col("id"), lit(7L)) + 1L).cast("int")),
         i => concat(lit("t"), i))).as("text"))
-    val bm = Packing.packConcat(big, "doc_id", "text", capacity = 16, shards = 4)
+    val bm = packConcat(big, "doc_id", "text", capacity = 16, shards = 4)
     val bf = Packing.binFill(bm, 16).collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
     val lastBin = bf.groupBy(_._1).view.mapValues(_.map(_._2).max).toMap
@@ -1519,7 +1564,7 @@ class PipelineOpsSpec extends SparkSpec {
     }.toDF("vec_id", "embedding")
     val trained = Similarity.trainCentroids(vecs, "embedding", k = 4, dims = 8,
       iters = 4)
-    val sizes = Similarity.listSizes(vecs, "vec_id", "embedding", trained)
+    val sizes = listSizes(vecs, "vec_id", "embedding", trained)
       .collect().map(_.getLong(1)).sorted
     assert(sizes.length == 4 && sizes.sum == 400, s"sizes=${sizes.mkString(",")}")
     assert(sizes.max <= 3 * sizes.min,
@@ -1529,7 +1574,7 @@ class PipelineOpsSpec extends SparkSpec {
     // is nearest — the imbalance the trainer exists to fix
     val firstK = vecs.orderBy("vec_id").limit(4).collect()
       .map(_.getSeq[Float](1).map(_.toDouble).toSeq).toSeq
-    val untrained = Similarity.listSizes(vecs, "vec_id", "embedding", firstK)
+    val untrained = listSizes(vecs, "vec_id", "embedding", firstK)
       .collect().map(_.getLong(1)).sorted
     assert(untrained.max > 3 * untrained.min,
       s"adversarial corpus unexpectedly balanced for first-k: ${untrained.mkString(",")}")
@@ -1544,7 +1589,7 @@ class PipelineOpsSpec extends SparkSpec {
     // centroid jitter, not in list structure
     val full = Similarity.trainCentroids(vecs, "embedding", k = 4, dims = 8,
       iters = 4, trainFraction = 1.0)
-    val fullSizes = Similarity.listSizes(vecs, "vec_id", "embedding", full)
+    val fullSizes = listSizes(vecs, "vec_id", "embedding", full)
       .collect().map(_.getLong(1)).sorted
     assert(fullSizes.max <= 3 * fullSizes.min,
       s"full-scan lists unbalanced: ${fullSizes.mkString(",")}")

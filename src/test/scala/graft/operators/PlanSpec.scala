@@ -13,6 +13,20 @@ import java.nio.file.Files
   */
 class PlanSpec extends SparkSpec {
 
+  /** The IVF probe without a persisted index: assigns every vector, keeps
+    * the `nProbe` nearest lists, exact top-k by cosine within them.
+    */
+  private def ivfTopK(df: org.apache.spark.sql.DataFrame, idCol: String,
+      vecCol: String, centroids: Seq[Seq[Double]], query: Seq[Float], k: Int,
+      nProbe: Int): org.apache.spark.sql.DataFrame =
+    Similarity.ivfAssign(df, idCol, vecCol, centroids)
+      .filter(col("centroid").isin(Similarity.probeLists(centroids, query, nProbe): _*))
+      .select(col("id"),
+        Similarity.cosine(transform(col("vec"), x => x.cast("double")),
+          typedlit(query.map(_.toDouble))).as("cosine"))
+      .orderBy(col("cosine").desc, col("id"))
+      .limit(k)
+
   private lazy val docsPath = {
     val dir = Files.createTempDirectory("graft_plan").toString
     DocsGen.docs(spark, DocsGen.Knobs(nDocs = 2000, nParts = 4))
@@ -174,7 +188,7 @@ class PlanSpec extends SparkSpec {
       roots.forall(r => lists.exists(l => r.contains(s"centroid=$l"))),
       s"probe mounted outside its lists: ${roots.mkString(",")} vs $lists")
     // and the indexed probe returns the same rows as the ad-hoc probe
-    val adhoc = Similarity.ivfTopK(vecs, "vec_id", "embedding", centroids, q,
+    val adhoc = ivfTopK(vecs, "vec_id", "embedding", centroids, q,
       k = 10, nProbe = 2).collect().map(r => (r.getLong(0), r.getDouble(1)))
     val indexed = probe.collect().map(r => (r.getLong(0), r.getDouble(1)))
     assert(indexed.sameElements(adhoc))

@@ -25,7 +25,7 @@ class KllSketchAggSpec extends SparkSpec {
   test("per-partition sketches union to the global sketch (mergeable)") {
     val global = uniform.agg(Kll.sketchAgg(col("x")).as("s"))
       .collect()(0).getAs[Array[Byte]](0)
-    val parts = Drift.partitionKllSketches(uniform, "x")
+    val parts = uniform.groupBy(col("part")).agg(Kll.sketchAgg(col("x")).as("sketch"))
       .collect().map(_.getAs[Array[Byte]]("sketch")).toSeq
     assert(parts.size == 8)
     val unioned = Kll.union(parts)

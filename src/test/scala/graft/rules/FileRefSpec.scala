@@ -11,7 +11,7 @@ import java.nio.file.Files
 class FileRefSpec extends SparkSpec {
   import spark.implicits._
 
-  test("whole-file and fragment refs across files resolve and validate") {
+  test("whole-file and fragment refs across files resolve and validate") { onBothEvalPaths {
     val dir = Files.createTempDirectory("graft_refs")
     Files.writeString(dir.resolve("common.yaml"),
       """$defs:
@@ -37,9 +37,9 @@ class FileRefSpec extends SparkSpec {
     // branch fails (y < 10) -> summary message only
     assert(vs.map(v => (v.doc_id, v.rule)) ==
       Seq(("d1", "minimum"), ("d2", "allOf")))
-  }
+  }}
 
-  test("multi-schema preload: $ref by $id across preloaded files (ys.rs:133-177)") {
+  test("multi-schema preload: $ref by $id across preloaded files (ys.rs:133-177)") { onBothEvalPaths {
     val dir = Files.createTempDirectory("graft_preload")
     Files.writeString(dir.resolve("types.yaml"),
       """$id: urn:graft:types
@@ -66,7 +66,7 @@ class FileRefSpec extends SparkSpec {
       .sortBy(v => (v.doc_id, v.rule))
     assert(vs.map(v => (v.doc_id, v.rule)) ==
       Seq(("d2", "allOf"), ("d3", "allOf")), vs.mkString("; "))
-  }
+  }}
 
   test("missing file ref errors with the reference's message shape") {
     val dir = Files.createTempDirectory("graft_refs2")
