@@ -738,7 +738,7 @@ object SparkEntry {
     "g_drift_ks" -> ((s, dir) => {
       // KS on a fixed 101-point grid over [0, 120000] — exactly reproducible
       // (the percentile_approx-grid variant Drift.ks and the KLL-sketch path
-      // Drift.ksSketch stay as the adaptive/streaming forms, spec-tested).
+      // Kll.ks stay as the adaptive/streaming forms, spec-tested).
       // BINNED form: O(1) cell assignment per row + one narrow groupBy,
       // instead of 2×101 conditional sums per row; statistic identical to
       // the two-filter form Drift.ksFixedGrid (spec-asserted)

@@ -558,8 +558,8 @@ object Dedup {
     * into one map-side-combined groupBy; the shuffle carries one row per
     * distinct shingle per partition, and the output is vocabulary-bounded
     * (≤ distinct-shingle count), never corpus-sized. For truly unbounded
-    * shingle vocabularies the CMS tier ([[Stats.heavyHittersSketch]]) is
-    * the fixed-state twin.
+    * shingle vocabularies a count-min sketch (Spark's `count_min_sketch`)
+    * is the fixed-state twin.
     */
   def boilerplateShingles(df: DataFrame, idCol: String, textCol: String,
       k: Int = 3, minDocs: Int = 100): DataFrame =

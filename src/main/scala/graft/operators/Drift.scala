@@ -18,7 +18,11 @@ import org.apache.spark.sql.functions._
   * grid obtained from `percentile_approx` (Greenwald-Khanna summaries —
   * mergeable across partitions, single pass per side). Grid evaluation of
   * the opposing CDF is one aggregation with #grid conditional-sum columns —
-  * no sort, no collect of data rows.
+  * no sort, no collect of data rows. The resumable form is KS over
+  * mergeable KLL sketches: Spark's `kll_sketch_agg_double` per side (or
+  * per committed part, unioned with `graft.plans.Kll.union`), then
+  * `graft.plans.Kll.ks` on the two sketches' bytes, as `graft.Main`'s
+  * `--drift-baseline` does.
   *
   * Each statistic is its own formula over shared cores: the two-sample
   * counts (`twoSampleCounts`), the grid CDF (`ksOnGrid`) and the cell
@@ -397,20 +401,6 @@ object Drift {
     val s = (0 until gridSize - 1)
       .map(i => (BigInt(cumA(i)) * nb - BigInt(cumB(i)) * na).abs).sum
     statDf(spark, "emd", s.toDouble * step / (na.toDouble * nb.toDouble))
-  }
-
-  /** KS via mergeable KLL sketches (custom TypedImperativeAggregate,
-    * `graft.plans.KllSketchAgg`): one aggregation pass per side, then the
-    * statistic from the two serialized sketches — the resumable/incremental
-    * form (persisted per-partition sketch bytes union with `Kll.union`).
-    */
-  def ksSketch(a: DataFrame, b: DataFrame, c: String, k: Int = 200): Double = {
-    import graft.plans.Kll
-    def sketchOf(df: DataFrame): Array[Byte] =
-      df.filter(col(c).isNotNull)
-        .agg(Kll.sketchAgg(col(c).cast("double"), k).as("s"))
-        .collect()(0).getAs[Array[Byte]](0)
-    Kll.ks(sketchOf(a), sketchOf(b))
   }
 
   /** Top-k rank drift between two row sets over a categorical key — the

@@ -157,7 +157,11 @@ object ResumableValidate {
     * `size(spans)` (and `driftCols` add one KLL sketch each), persisting
     * the bytes in the commit JSON — so cardinality and drift state resume
     * incrementally with validation (merge with [[mergedDocIdEstimate]] /
-    * [[mergedNSpansSketch]], no re-scan of committed parts).
+    * [[mergedKllSketch]], no re-scan of committed parts). Both sketches
+    * are Spark's own aggregates, `hll_sketch_agg` and
+    * `kll_sketch_agg_double` (k = 200), so the committed bytes are the
+    * DataSketches library's serialized form and logs written by earlier
+    * versions merge with new ones.
     *
     * On a `file:` `outDir` the violation write and the commit JSONs create
     * their files through [[graft.sources.LocalFs]] (the write takes its
@@ -247,7 +251,7 @@ object ResumableValidate {
             sketchIns.zipWithIndex.map { case ((key, _), i) =>
               val v = when(inPart, col(s"_sk$i"))
               (if (key == HllDocIdKey) hll_sketch_agg(v)
-              else graft.plans.Kll.sketchAgg(v)).as(s"sk${i}_$p")
+              else kll_sketch_agg_double(v)).as(s"sk${i}_$p")
             }
         }
         shuffled.observe(obs, aggs.head, aggs.tail: _*)
@@ -365,16 +369,12 @@ object ResumableValidate {
       .collect()(0).getLong(0)
   }
 
-  /** Merged KLL sketch of size(spans) over all committed parts, merged in
-    * part order. The merged bytes are not reproducible: KLL compaction
-    * keeps a random half of each compacted level, so two merges of the same
-    * per-part sketches may differ, each within KLL's rank-error bound.
-    */
-  def mergedNSpansSketch(spark: SparkSession, outDir: String): Array[Byte] =
-    mergedKllSketch(spark, outDir, KllNSpansKey)
-
-  /** Merged KLL sketch for any persisted sketch key (e.g. [[kllColKey]] for
-    * a `--drift-col` column). Pure commit-log read — NEVER rescans data.
+  /** Merged KLL sketch for a persisted sketch key ([[KllNSpansKey]], or
+    * [[kllColKey]] for a `--drift-col` column) over all committed parts,
+    * merged in part order. Pure commit-log read — NEVER rescans data. The
+    * merged bytes are not reproducible: KLL compaction keeps a random half
+    * of each compacted level, so two merges of the same per-part sketches
+    * may differ, each within KLL's rank-error bound.
     */
   def mergedKllSketch(spark: SparkSession, outDir: String, key: String): Array[Byte] =
     graft.plans.Kll.union(sketchBytesAllParts(spark, outDir, key))

@@ -14,7 +14,9 @@ import org.apache.spark.sql.types._
   * (no per-column passes); HLL sketches (`hll_sketch_agg`, Spark ≥ 3.5 /
   * 4.x, Apache DataSketches under the hood) are mergeable across partitions
   * — at cluster scale the per-partition sketches combine on the reducer
-  * without ever materializing distinct values.
+  * without ever materializing distinct values. The other sketch tiers are
+  * Spark's own aggregates too: quantiles by `kll_sketch_agg_double` (read
+  * with [[graft.plans.Kll]]), frequencies by `count_min_sketch`.
   */
 object Stats {
 
@@ -124,9 +126,9 @@ object Stats {
     *
     * Scale: one map-side-combined groupBy per requested column
     * (distinct-value-sized shuffles — cheap for the enum-ish columns this
-    * is for; for unbounded-cardinality columns use the HLL/CMS tier,
-    * [[partitionSketches]] / [[heavyHittersSketch]], instead). NULL is a
-    * value (a 99%-null column IS concentrated).
+    * is for; for unbounded-cardinality columns use the sketch tier,
+    * [[partitionSketches]] (HLL) or Spark's `count_min_sketch`, instead).
+    * NULL is a value (a 99%-null column IS concentrated).
     */
   def entropy(df: DataFrame, columns: Seq[String]): DataFrame = {
     require(columns.nonEmpty, "entropy: need at least one column")
@@ -155,8 +157,8 @@ object Stats {
     * per-group state is (distinct values), NOT (rows) — the right tier
     * for bounded-domain columns (lengths, counts, scores on a grid) at
     * any row count. For genuinely continuous columns switch to the
-    * mergeable-sketch tier (KLL, [[graft.plans.KllSketchAgg]]) and keep
-    * this as its oracle.
+    * mergeable-sketch tier (KLL: Spark's `kll_sketch_agg_double`, read with
+    * [[graft.plans.Kll]]) and keep this as its oracle.
     */
   def groupQuantiles(df: DataFrame, groupCols: Seq[String], valueCol: String,
       qs: Seq[Double]): DataFrame = {
@@ -335,8 +337,8 @@ object Stats {
     * (explode of a literal-built array), then ONE map-side-combined
     * groupBy — slice-count-sized shuffle; the global rate joins back as a
     * broadcast 1-row crossJoin. Dimensions here are enum-ish columns; for
-    * unbounded cardinality use [[heavyHittersSketch]] to pick candidate
-    * values first.
+    * unbounded cardinality pick candidate values first (Spark's
+    * `count_min_sketch`).
     */
   def sliceLift(df: DataFrame, dims: Seq[String], failCol: Column,
       minRows: Long = 1L, minLift: Double = 2.0): DataFrame = {
@@ -395,8 +397,8 @@ object Stats {
     * carrying one (key, count) row per distinct key per mapper), then a
     * TakeOrdered top-k — no Window, no global sort. `recommended_salt` =
     * ceil(count / targetRowsPerTask), floored at 1. This exact form
-    * shuffles one row per DISTINCT key; at unbounded cardinality use
-    * [[heavyHittersSketch]], whose state is fixed-size and mergeable.
+    * shuffles one row per DISTINCT key; at unbounded cardinality Spark's
+    * `count_min_sketch` keeps fixed-size, mergeable state instead.
     */
   def heavyHitters(df: DataFrame, keyCol: String, k: Int,
       targetRowsPerTask: Long): DataFrame = {
@@ -411,87 +413,6 @@ object Stats {
         greatest(lit(1L), ceil(col("cnt") / lit(targetRowsPerTask)))
           .cast(LongType).as("recommended_salt"))
       .orderBy(col("cnt").desc, col("key"))
-      .limit(k)
-  }
-
-  /** Executor-side cache of deserialized CountMinSketches keyed by the
-    * broadcast id, so the probe UDF pays deserialization once per executor,
-    * not once per row.
-    */
-  private object CmsCache {
-    private val cache = new java.util.concurrent.ConcurrentHashMap[Long,
-      org.apache.spark.util.sketch.CountMinSketch]()
-    def get(id: Long, bytes: Array[Byte]): org.apache.spark.util.sketch.CountMinSketch =
-      cache.computeIfAbsent(id, _ =>
-        org.apache.spark.util.sketch.CountMinSketch.readFrom(
-          new java.io.ByteArrayInputStream(bytes)))
-  }
-
-  /** Sketch-tier twin of [[heavyHitters]] for UNBOUNDED key cardinality:
-    * [[heavyHitters]]'s exact groupBy shuffles one row per DISTINCT key —
-    * proportionate while keys fit a shuffle, but at 10^10+ distinct
-    * `media_ref`s that is a distinct-key-sized shuffle for a top-20 answer.
-    * This form never shuffles per-key rows at all:
-    *
-    *   1. ONE `count_min_sketch` aggregation — fixed-size (depth × width)
-    *      mergeable state per partition, combined on a single reducer row;
-    *      estimates overcount by at most ε·N with probability `confidence`
-    *      (the Cormode–Muthukrishnan bound; ε = `eps`).
-    *   2. Candidate generation by per-partition Misra–Gries summaries
-    *      (`localCounters` counters each, emitted via `mapPartitions`) —
-    *      bounded output of partitions × `localCounters` rows regardless of
-    *      cardinality. Any key with global share > 1/`localCounters` is
-    *      GUARANTEED to survive in at least one partition's summary (its
-    *      local share meets the MG threshold wherever it is at least its
-    *      global share, which holds on ≥ 1 partition).
-    *   3. The bounded candidate set is probed against the broadcast sketch
-    *      (UDF over a candidate-sized relation — the [[RefIntegrity]] Bloom
-    *      precedent), TakeOrdered top-k.
-    *
-    * Output (key, est_count, est_share): `est_count` is the CMS estimate
-    * (≥ true count; ≤ true + ε·N w.p. `confidence`). The exact
-    * [[heavyHitters]] stays the oracle form at test scale.
-    */
-  def heavyHittersSketch(df: DataFrame, keyCol: String, k: Int,
-      eps: Double = 1e-4, confidence: Double = 0.99, seed: Int = 42,
-      localCounters: Int = 4096): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val keys = df.filter(col(keyCol).isNotNull)
-      .select(col(keyCol).cast(StringType).as("key"))
-    // pass 1: fixed-size mergeable sketch + exact total in one aggregation
-    val row = keys.agg(
-      count_min_sketch(col("key"), lit(eps), lit(confidence), lit(seed)).as("cms"),
-      count(lit(1)).as("n")).collect()(0)
-    val cmsBytes = row.getAs[Array[Byte]]("cms")
-    val total = row.getAs[Long]("n")
-    val bc = spark.sparkContext.broadcast(cmsBytes)
-    val bcId = bc.id
-    // pass 2: Misra-Gries candidates — ≤ localCounters rows per partition
-    val cands = keys.as[String].mapPartitions { it =>
-      val counters = scala.collection.mutable.HashMap.empty[String, Long]
-      it.foreach { key =>
-        counters.get(key) match {
-          case Some(c) => counters.update(key, c + 1L)
-          case None if counters.size < localCounters => counters.update(key, 1L)
-          case None =>
-            // decrement-all step: amortized O(1) per input (each sweep
-            // removes work paid for by the inserts that filled the table)
-            val dead = List.newBuilder[String]
-            counters.foreach { case (kk, c) =>
-              if (c == 1L) dead += kk else counters.update(kk, c - 1L)
-            }
-            dead.result().foreach(counters.remove)
-        }
-      }
-      counters.keysIterator
-    }.toDF("key").distinct()
-    val probe = udf { key: String => CmsCache.get(bcId, bc.value).estimateCount(key) }
-    cands
-      .select(col("key"), probe(col("key")).as("est_count"))
-      .withColumn("est_share",
-        round(col("est_count") / lit(total.toDouble), 6))
-      .orderBy(col("est_count").desc, col("key"))
       .limit(k)
   }
 

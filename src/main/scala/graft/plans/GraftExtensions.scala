@@ -2,7 +2,8 @@ package graft.plans
 
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.catalyst.expressions.aggregate.KllSketchAggDouble
 import org.apache.spark.sql.types.{ArrayType, DoubleType}
 
 /** `SparkSessionExtensions` injector exposing the engine's native kernels
@@ -15,14 +16,16 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType}
   *   - `simhash64(tokens)`                    — [[SimHashOps.simhash]]
   *   - `minhash_bands(tokens, k, n, bands)`   — [[MinHashOps.bandHashes]]
   *   - `cosine_sim(a, b)`                     — [[CosineOps.cosine]]
-  *   - `kll_sketch(value[, k])`               — [[KllSketchAgg]] (agg)
+  *   - `kll_sketch(value[, k])`               — Spark's
+  *     `kll_sketch_agg_double` over the value cast to double (agg)
   *
   * The analyzer wraps the returned `AggregateFunction` in an
   * `AggregateExpression` itself, so `kll_sketch` composes with GROUP BY
-  * like any built-in aggregate. Shape arguments (k, numHashes, bands)
-  * must be foldable integers — they parameterize codegen and cannot vary
-  * per row; a non-literal raises a clear error at ANALYSIS time, not at
-  * runtime.
+  * like any built-in aggregate; the cast keeps integer and decimal inputs
+  * working, which the built-in's double form does not take. Shape
+  * arguments (k, numHashes, bands) must be foldable integers — they
+  * parameterize codegen and cannot vary per row; a non-literal raises a
+  * clear error at ANALYSIS time, not at runtime.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit =
@@ -93,6 +96,6 @@ object GraftExtensions {
         "kll_sketch(value[, k]) - mergeable KLL quantile sketch bytes " +
           "(aggregate); k defaults to 200"),
       args => { arity("kll_sketch", args, 1, 2)
-        KllSketchAgg(args.head,
-          if (args.size == 2) intArg("kll_sketch", 1, args(1)) else 200) }))
+        KllSketchAggDouble(Cast(args.head, DoubleType),
+          args.lift(1).map(k => Literal(intArg("kll_sketch", 1, k)))) }))
 }

@@ -174,10 +174,4 @@ object CommitLog {
   def failedDocsTotal(dir: String,
       conf: Configuration = new Configuration()): Long =
     read(dir, conf).values.map(_.failedDocs).sum
-
-  def clear(dir: String, conf: Configuration = new Configuration()): Unit = {
-    val (fs, base) = LocalFs.fsFor(dir, conf)
-    val cd = commitsDir(base)
-    if (fs.exists(cd)) fs.delete(cd, true): Unit
-  }
 }

@@ -168,9 +168,9 @@ object StreamValidate {
     *
     * State is (distinct keys seen) — the right tier for enum-ish keys
     * (event types, sources, langs). For unbounded key domains swap the
-    * merge map for the CMS + Misra-Gries tier
-    * ([[graft.operators.Stats.heavyHittersSketch]] per batch, sketches
-    * merged instead of maps) — same foreachBatch shape, fixed-size state.
+    * merge map for a count-min sketch per batch (Spark's
+    * `count_min_sketch`, sketches merged instead of maps) — same
+    * foreachBatch shape, fixed-size state.
     */
   def topKIncremental(stream: DataFrame, keyCol: String, k: Int): DataFrame = {
     val spark = stream.sparkSession

@@ -283,10 +283,10 @@ class ResumableValidateSpec extends SparkSpec {
     // offsets, so bit-identity across independent aggregations isn't the
     // contract — bounded rank error is)
     import graft.plans.Kll
-    val qc = Kll.quantiles(ResumableValidate.mergedNSpansSketch(spark, cleanDir),
-      Seq(0.0, 0.1, 0.5, 0.9, 1.0))
-    val qx = Kll.quantiles(ResumableValidate.mergedNSpansSketch(spark, crashDir),
-      Seq(0.0, 0.1, 0.5, 0.9, 1.0))
+    val qc = Kll.quantiles(ResumableValidate.mergedKllSketch(spark, cleanDir,
+      ResumableValidate.KllNSpansKey), Seq(0.0, 0.1, 0.5, 0.9, 1.0))
+    val qx = Kll.quantiles(ResumableValidate.mergedKllSketch(spark, crashDir,
+      ResumableValidate.KllNSpansKey), Seq(0.0, 0.1, 0.5, 0.9, 1.0))
     assert(qc.head == qx.head && qc.last == qx.last,
       s"KLL min/max must match exactly: clean=$qc resumed=$qx")
     qc.zip(qx).foreach { case (c, x) =>
@@ -328,6 +328,70 @@ class ResumableValidateSpec extends SparkSpec {
       }
     assert(graft.plans.Kll.ks(oneSketch, resSketch) < 0.02,
       "resume-run sketch must match single-run within KLL rank error")
+  }
+
+  test("per-part KLL sketches count each part's committed docs exactly; " +
+      "the write observes Spark's kll_sketch_agg_double") {
+    import graft.plans.Kll
+    import org.apache.spark.sql.GraftShims
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val dir = Files.createTempDirectory("graft_kll_n").toString
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.add(qe.optimizedPlan.toString): Unit
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      ResumableValidate.run(spark, freshDocs, rule, dir, partsPerBatch = 4,
+        withSketches = true, driftCols = Seq("part"))
+      GraftShims.drainListenerBus(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    assert(plans.toArray.exists(_.toString.contains("kll_sketch_agg_double(")),
+      s"no kll_sketch_agg_double in the run's plans:\n${plans.toArray.mkString("\n")}")
+    // getN is exact, unlike the quantiles: every doc of a part is counted
+    val commits = CommitLog.read(dir).values.toSeq.sortBy(_.part)
+    assert(commits.map(_.part) == (0 to 5))
+    for (c <- commits; key <- Seq(ResumableValidate.KllNSpansKey,
+        ResumableValidate.kllColKey("part"))) {
+      assert(c.docs > 0L)
+      assert(Kll.deserialize(c.sketches(key)).getN == c.docs,
+        s"part ${c.part} $key: n != docs ${c.docs}")
+    }
+    val total = commits.map(_.docs).sum
+    assert(total == 3000L)
+    assert(Kll.deserialize(ResumableValidate.mergedKllSketch(spark, dir,
+      ResumableValidate.KllNSpansKey)).getN == total)
+  }
+
+  test("a commit log mixing library-serialized KLL sketch bytes with new " +
+      "commits still merges") {
+    import graft.plans.Kll
+    import org.apache.datasketches.kll.KllDoublesSketch
+    import org.apache.spark.sql.functions.size
+    val dir = Files.createTempDirectory("graft_kll_mixed").toString
+    ResumableValidate.run(spark, freshDocs, rule, dir, partsPerBatch = 2,
+      withSketches = true)
+    val nSpans = freshDocs.select(col("part"), size(col("spans")).cast("double"))
+      .collect().map(r => r.getInt(0) -> r.getDouble(1))
+    // part 2's commit rewritten with the bytes a heap KllDoublesSketch
+    // (k = 200) serializes to, as commit logs held before the built-in
+    // aggregate built them
+    val old = KllDoublesSketch.newHeapInstance(200)
+    nSpans.collect { case (2, v) => v }.foreach(v => old.update(v))
+    val c2 = CommitLog.read(dir)(2)
+    assert(old.getN == c2.docs)
+    CommitLog.write(dir, c2.copy(sketches =
+      c2.sketches.updated(ResumableValidate.KllNSpansKey, old.toByteArray)))
+    val merged = Kll.deserialize(ResumableValidate.mergedKllSketch(spark, dir,
+      ResumableValidate.KllNSpansKey))
+    assert(merged.getN == CommitLog.docCounts(dir).values.sum)
+    assert(merged.getN == nSpans.length.toLong)
+    // KLL keeps min and max exactly
+    assert(merged.getMinItem == nSpans.map(_._2).min)
+    assert(merged.getMaxItem == nSpans.map(_._2).max)
   }
 
   test("merged sketch report refuses partial coverage (some parts sketchless)") {

@@ -91,6 +91,10 @@ class GraftExtensionsSpec extends SparkSpec {
       assert(bytes.length == 2 && bytes.forall(_.nonEmpty))
       val med = Kll.deserialize(bytes(0)).getQuantile(0.5)
       assert(med >= 0.0 && med <= 999.0)
+      // an INT input is accepted (cast to double)
+      val ints = s.sql("SELECT kll_sketch(CAST(id AS INT), 100) FROM xs")
+        .collect()(0).getAs[Array[Byte]](0)
+      assert(Kll.deserialize(ints).getN == 1000L)
     }
   }
 
